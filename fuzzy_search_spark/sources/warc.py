@@ -44,6 +44,8 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Iterable, Iterator, List, Optional, Sequence
 
+from fuzzy_search_spark.spark.worker import drop_zip_importers
+
 _CRLF = b"\r\n"
 _WARC_MAGIC = b"WARC/1."
 _DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
@@ -272,6 +274,7 @@ def read_warc(files_df, path_col: str = "path", content_col: str = "content"):
     import pandas as pd
 
     def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        drop_zip_importers()
         for pdf in batches:
             rows: List[tuple] = []
             for path, blob in zip(pdf[path_col], pdf[content_col]):
@@ -391,6 +394,7 @@ def read_wet(files_df, path_col: str = "path", content_col: str = "content"):
     import pandas as pd
 
     def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        drop_zip_importers()
         for pdf in batches:
             rows: List[tuple] = []
             for path, blob in zip(pdf[path_col], pdf[content_col]):

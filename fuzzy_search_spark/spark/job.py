@@ -17,13 +17,23 @@ against the huge stream side (documents) inside the UDF.
 Resumability: the job processes the input in ``num_groups`` deterministic
 url-hash groups; each group commits its output directory plus a manifest
 line (group id, model fingerprint, row counts, wall time).  A restarted job
-re-reads the manifest and anti-joins the done groups.  A model/config change
-changes the fingerprint and invalidates old groups.
+re-reads the manifest and anti-joins the done groups.  A change of model,
+config, extractor or input column names changes the fingerprint and
+invalidates old groups.
 
 Lineage/metrics: a dict accumulator collects per-*partition* rows
 (docs, chars, matches, wall_ms) from inside the UDF; the driver persists
 them per group under ``_metrics/``.  (Accumulator caveat: Spark re-counts
 retried tasks; metrics are observability, not accounting.)
+
+Worker start-up: every function this module (or ``sources.warc``) ships to
+Python workers calls :func:`spark.worker.drop_zip_importers` first thing.
+PySpark's worker runs ``importlib.invalidate_caches()`` before each task,
+and on Python >= 3.10 that re-reads the zip directory of every cached
+``zipimporter`` (pyspark.zip's sub-packages, the spark-core jar, py4j):
+most of a task's fixed cost on a short task.  Dropping them once per task
+leaves a reused worker none to re-read.  A new worker-side function that
+skips the call brings that cost back for every task of its stage.
 """
 
 from __future__ import annotations
@@ -44,6 +54,7 @@ from pyspark.sql import types as T
 from fuzzy_search_spark.extract import extract_html
 from fuzzy_search_spark.matcher import find_matches
 from fuzzy_search_spark.model import CompiledModel
+from fuzzy_search_spark.spark.worker import drop_zip_importers
 
 def read_pages(spark: SparkSession, input_path: str,
                table_format: str = "parquet") -> DataFrame:
@@ -155,6 +166,7 @@ def attach_extracted_text(df: DataFrame, html_col: str = "html",
 
     @F.pandas_udf(T.StringType())
     def _extract(html: pd.Series) -> pd.Series:
+        drop_zip_importers()
         return html.map(extract_fn)
 
     return df.withColumn(out_col, _extract(F.col(html_col)))
@@ -195,6 +207,7 @@ def match_documents(df: DataFrame, model: CompiledModel,
     cols = [url_col, text_col] + ([html_col] if use_html else [])
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         compiled = bc_model.value
         t0 = time.monotonic()
         docs = chars = matched = 0
@@ -259,6 +272,7 @@ def match_documents_tokens(df: DataFrame, token_model,
     cols = [url_col, text_col] + ([html_col] if use_html else [])
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         compiled = bc.value
         for pdf in batches:
             out = {c: [] for c in _MATCH_COLUMNS}
@@ -291,6 +305,26 @@ def match_documents_tokens(df: DataFrame, token_model,
     return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
 
 
+def _read_manifest(path: str) -> List[dict]:
+    """The entries of the manifest at ``path`` (none if it is absent).
+
+    A crash in the middle of an append leaves a last line that does not
+    parse.  Its group never committed, so the line is cut off the file and
+    the group runs again; the next append then starts on a line of its
+    own.  A line that does not parse anywhere else raises."""
+    if not os.path.exists(path):
+        return []
+    with open(path, "rb") as fh:
+        lines = fh.readlines()
+    entries = [json.loads(line) for line in lines[:-1]]
+    try:
+        entries += [json.loads(line) for line in lines[-1:]]
+    except ValueError:
+        with open(path, "r+b") as fh:
+            fh.truncate(sum(map(len, lines[:-1])))
+    return entries
+
+
 def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
                        model: CompiledModel, *, num_groups: int = 4,
                        salt_partitions: Optional[int] = None,
@@ -312,17 +346,19 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
         # a different payload->text function changes every downstream row:
         # resume must not skip groups committed under another extractor
         fingerprint += f":{extractor.__module__}.{extractor.__qualname__}"
+    # so do the columns the rows are read from
+    fingerprint += f":url={url_col}:text={text_col}:html={html_col}"
     manifest_path = os.path.join(output_path, "_manifest.jsonl")
     metrics_dir = os.path.join(output_path, "_metrics")
     os.makedirs(metrics_dir, exist_ok=True)
 
+    # read even without resume: it cuts a torn last line before the
+    # appends below
+    entries = _read_manifest(manifest_path)
     done = set()
-    if resume and os.path.exists(manifest_path):
-        with open(manifest_path) as fh:
-            for line in fh:
-                entry = json.loads(line)
-                if entry.get("fingerprint") == fingerprint:
-                    done.add(entry["group"])
+    if resume:
+        done = {entry["group"] for entry in entries
+                if entry.get("fingerprint") == fingerprint}
 
     df = read_pages(spark, input_path, table_format)
     if salt_partitions is None:

@@ -142,7 +142,8 @@ class TokenModel:
     # per-process memo of raw (offset-free) probes for tokens OUTSIDE the
     # precomputed vocabulary — the runtime extension of the reference's
     # vocabulary cache (dictionary-encoding of repeated tokens); bounded
-    # so a pathological distinct-token stream cannot grow without limit
+    # so a pathological distinct-token stream cannot grow without limit,
+    # and never pickled (see __getstate__)
     runtime_probe_cache: Dict[str, List[Tuple[str, "MatchType"]]] = field(
         default_factory=dict, compare=False)
     # vectorized gram index (built at compile, ships with the broadcast):
@@ -157,6 +158,15 @@ class TokenModel:
     # per (token-match, phrase) visit, folded into one precomputed row
     # (the visit count is millions per long document at large models)
     chain_fanout: Optional[dict] = field(default=None, compare=False)
+
+    def __getstate__(self) -> dict:
+        """Pickle state with an empty runtime probe memo.  The memo holds
+        whatever this process matched since compile, so shipping it would
+        make a broadcast's size and the workers' speed depend on what the
+        Spark driver happened to match before."""
+        state = self.__dict__.copy()
+        state["runtime_probe_cache"] = {}
+        return state
 
 
 def _is_distractor(text_token: str, phrase_token: str,
@@ -343,6 +353,16 @@ def _build_chain_fanout(tm: TokenModel) -> dict:
                  nl + tm.max_length_variance))
         fanout[tok_n] = tuple(rows)
     return fanout
+
+
+_FANOUT_ROW_WIDTH = 9
+
+
+def _fanout_is_current(fanout: dict) -> bool:
+    """Whether ``fanout`` has the row layout ``_build_chain_fanout``
+    builds today (every row is built the same way, so one row tells)."""
+    rows = next(iter(fanout.values()), None)
+    return not rows or len(rows[0]) == _FANOUT_ROW_WIDTH
 
 
 def _within_offsets(tm: TokenModel, ptoken: str, char_index: int,
@@ -858,7 +878,8 @@ def _chain_partial_phrases(token_matches: List[TokenMatch],
     max_char_gap = tm.max_char_gap
     max_length_variance = tm.max_length_variance
     fanout = tm.chain_fanout
-    if fanout is None:                  # models from older pickles
+    if fanout is None or not _fanout_is_current(fanout):
+        # models from older pickles: no fanout, or rows of another layout
         fanout = tm.chain_fanout = _build_chain_fanout(tm)
     buckets: List[Optional[List[_PartialPhrase]]] = [None] * len(tm.phrases)
     candidates: Dict[str, List[_PartialPhrase]] = {}

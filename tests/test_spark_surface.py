@@ -228,6 +228,53 @@ def test_resume_fingerprint_drift(spark, pages_path, tmp_path):
     assert s3["ran"] == [] and s3["skipped"] == [0, 1]
 
 
+def test_resume_fingerprint_column_drift(spark, pages_path, tmp_path):
+    """Reading rows from another column must invalidate committed groups."""
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    out = str(tmp_path / "column_drift_out")
+    model = compile_model(README_MODEL, README_CONFIG)
+    s1 = run_extraction_job(spark, pages_path, out, model, num_groups=2)
+    assert s1["ran"] == [0, 1]
+    s2 = run_extraction_job(spark, pages_path, out, model, num_groups=2,
+                            html_col=None)
+    assert s2["ran"] == [0, 1] and s2["skipped"] == []
+
+
+def test_resume_torn_manifest_line(spark, pages_path, tmp_path):
+    """A crash in the middle of a manifest append leaves a partial last
+    line: resume re-runs that group and ends with the same output and a
+    clean manifest.  A bad line that is not the last still raises."""
+    import json
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    out = str(tmp_path / "torn_out")
+    model = compile_model(README_MODEL, README_CONFIG)
+    run_extraction_job(spark, pages_path, out, model, num_groups=2)
+
+    def rows():
+        return sorted(map(str, spark.read.parquet(
+            os.path.join(out, "matches")).collect()))
+
+    expect = rows()
+    manifest = os.path.join(out, "_manifest.jsonl")
+    with open(manifest) as fh:
+        first, second = fh.readlines()
+    with open(manifest, "w") as fh:
+        fh.write(first + second[:len(second) // 2])
+    s = run_extraction_job(spark, pages_path, out, model, num_groups=2)
+    assert s["skipped"] == [0] and s["ran"] == [1]
+    assert rows() == expect
+    with open(manifest) as fh:
+        assert [json.loads(line)["group"] for line in fh] == [0, 1]
+
+    with open(manifest, "w") as fh:
+        fh.write(first[:len(first) // 2] + "\n" + second)
+    with pytest.raises(ValueError):
+        run_extraction_job(spark, pages_path, out, model, num_groups=2)
+
+
 def test_template_matching_spark(spark, matches_df):
     """groupBy(url).applyInPandas template wrapper agrees with the local
     template engine on every document."""

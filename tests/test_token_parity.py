@@ -164,103 +164,3 @@ def test_user_vocabulary_parity():
     for text in texts:
         assert_tie_equivalent(eng_matches(tm, text),
                               ref_matches(searcher, text), text)
-
-
-def test_vectorized_probe_equals_python_fallback():
-    """The NumPy probe (searchsorted index + vectorized _match_type) and
-    the Python accumulation loop must be interchangeable bit-for-bit:
-    same matches, same distractor pairs, same vocab cache."""
-    import random
-
-    import fuzzy_search_spark.token_matcher as T
-
-    rng = random.Random(77)
-    words = ["confirmatie", "ordonnantie", "resolutie", "missive",
-             "hoogheid", "mogende", "heeren", "daarop", "besloten"]
-    phrases = [" ".join(rng.sample(words, rng.choice((1, 2, 3))))
-               for _ in range(40)]
-    vocab = words[:5]
-    texts = []
-    for _ in range(30):
-        toks = [rng.choice(words) for _ in range(rng.randrange(4, 14))]
-        # OCR-ish corruption
-        toks = ["".join(c if rng.random() > 0.08 else "x" for c in t)
-                for t in toks]
-        texts.append(" ".join(toks))
-
-    m_vec = T.compile_token_model(phrases, {}, vocabulary=vocab)
-    assert m_vec.probe_index is not None
-    orig = T._build_probe_index
-    T._build_probe_index = lambda tm: None
-    try:
-        m_py = T.compile_token_model(phrases, {}, vocabulary=vocab)
-    finally:
-        T._build_probe_index = orig
-    assert m_py.probe_index is None
-    assert m_vec.distractor_pairs == m_py.distractor_pairs
-    assert m_vec.vocab_cache == m_py.vocab_cache
-    for text in texts:
-        a = [(m.phrase, m.variant, m.string, m.offset, m.end,
-              m.levenshtein_similarity)
-             for m in T.find_token_matches(text, m_vec)]
-        b = [(m.phrase, m.variant, m.string, m.offset, m.end,
-              m.levenshtein_similarity)
-             for m in T.find_token_matches(text, m_py)]
-        assert a == b, text
-
-
-def test_chain_fused_paths_equal_generic():
-    """The chain loop's fused constructors (_PartialPhrase.fresh with a
-    precomputed shared missing list; copy_extend's O(1) incremental
-    update) must be attribute-identical to the generic
-    constructor + add_tokens forms they replaced, across random token
-    layouts including equal-start, overlapping, adjacent and gapped
-    follow-up matches and phrases with repeated tokens."""
-    from fuzzy_search_spark.token_matcher import (MatchType,
-                                                  Tok,
-                                                  TokenMatch,
-                                                  _PartialPhrase,
-                                                  compile_token_model)
-
-    rng = random.Random(7)
-    tm = compile_token_model(
-        ["alpha beta gamma", "beta beta delta", "gamma alpha"], {})
-
-    def mk_tok(word, start):
-        return Tok(n=word, index=0, char_index=start,
-                   char_end_index=100 - (start + len(word) + 1))
-
-    words = ["alpha", "beta", "gamma", "delta"]
-    for _ in range(300):
-        pn = rng.choice(list(tm.phrases))
-        phrase = tm.phrases[pn]
-        seed_word = rng.choice(words)
-        seed = TokenMatch((mk_tok(seed_word, 10),), seed_word,
-                          MatchType.FULL)
-        # generic vs fused fresh
-        generic = _PartialPhrase(phrase, [seed])
-        missing_after = list(phrase.missing_template)
-        if seed_word in missing_after:
-            missing_after.remove(seed_word)
-        fused = _PartialPhrase.fresh(phrase, seed, missing_after)
-        for attr in ("missing", "text_tokens", "text_start", "text_end",
-                     "text_length"):
-            assert getattr(generic, attr) == getattr(fused, attr), attr
-
-        # follow-up match at an equal-start / overlapping / adjacent /
-        # gapped position relative to the seed (end = 10 + len)
-        nxt_word = rng.choice(words)
-        nxt_start = rng.choice([10, 12, 10 + len(seed_word),
-                                10 + len(seed_word) + 3])
-        nxt = TokenMatch((mk_tok(nxt_word, nxt_start),), nxt_word,
-                         MatchType.FULL)
-        if nxt_word not in generic.missing:
-            continue  # copy_extend's caller-checked precondition
-        two_call = generic.copy()
-        two_call.add_tokens([nxt])
-        fused2 = fused.copy_extend(nxt)
-        for attr in ("missing", "text_tokens", "text_start", "text_end",
-                     "text_length"):
-            assert getattr(two_call, attr) == getattr(fused2, attr), attr
-        # the shared missing list must not have been mutated
-        assert fused.missing == missing_after

@@ -78,8 +78,8 @@ def run_extract_match(spark, corpus_path: str, out_dir: str,
 
     def pipeline():
         # byte-balanced input splits parallelize a linear-cost matcher
-        # without any shuffle; salt_by_url() is the tool for stores whose
-        # layout clusters giant documents (see spark/job.py)
+        # without any shuffle; a url-hash repartition is the tool for
+        # stores whose layout clusters giant documents
         df = spark.read.parquet(corpus_path).select("url", "html")
         # extraction fused into the match pass (text=NULL -> extract html)
         df = df.withColumn("text", F.lit(None).cast("string"))
@@ -395,7 +395,7 @@ Evidence notes (no real multi-node cluster exists in this sandbox):
   identical tasks, no shuffle (scan -> mapInPandas -> write is a narrow
   map), so the speedup is limited only by attainable core throughput;
 - giant documents are spread through the corpus, so byte-balanced input
-  splits are work-balanced; `salt_by_url()` (url-hash repartition) handles
+  splits are work-balanced; a url-hash repartition handles
   stores whose layout clusters giants (~2.6 s shuffle cost here), and
   `chunk_chars` bounds per-document memory exactly
   (matcher.find_matches_chunked);

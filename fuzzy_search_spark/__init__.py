@@ -13,7 +13,8 @@ Architecture (Spark-first, not a port):
                  across documents)
 - ``extract``    deterministic HTML -> main-text extraction (boilerplate strip)
 - ``spark/``     the distributed job: read table -> extract -> match via
-                 mapInPandas -> explode -> write, with salting, per-partition
+                 mapInPandas -> explode -> write over groups of input files
+                 (each file scanned once per job), with per-partition
                  lineage metrics and resumable manifests
 - ``analysis/``  corpus-level DataFrame-native analytics (ngram freq, LLR,
                  skipgram similarity band-join)

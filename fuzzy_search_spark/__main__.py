@@ -5,13 +5,16 @@
         fuzzy_search_spark/__main__.py \
         --input s3://pages/ --output s3://matches/ \
         --phrases phrases.json [--config config.json] \
-        [--num-groups 256] [--salt-partitions 4096] [--no-resume] \
+        [--num-groups 256] [--no-resume] \
         [--token-mode] [--chunk-chars 2000000]
 
 The phrases file is a JSON list of strings or phrase dicts (the
 reference's PhraseModel input shape); config is the flat reference config
-dict.  The job is resumable: committed groups are skipped on re-run
-unless the model+config fingerprint changed (spark/job.py manifest).
+dict.  The phrase job is resumable: it splits the sorted list of input
+files into ``--num-groups`` groups, each read and committed on its own,
+and a re-run skips committed groups unless the fingerprint (model,
+config, columns, group count, file listing) changed (spark/job.py
+manifest).
 """
 
 from __future__ import annotations
@@ -35,9 +38,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--config", default=None,
                    help="JSON file: reference-style config dict")
     p.add_argument("--num-groups", type=int, default=64,
-                   help="resumable commit units (url-hash groups)")
-    p.add_argument("--salt-partitions", type=int, default=None,
-                   help="url-hash repartition width (default 2x parallelism)")
+                   help="resumable commit units: group g of N reads "
+                        "input files g, g+N, g+2N, ... of the sorted "
+                        "listing; a group with fewer files than cores "
+                        "is spread over them by url hash")
     p.add_argument("--no-resume", action="store_true",
                    help="reprocess committed groups")
     p.add_argument("--url-col", default="url")
@@ -110,7 +114,6 @@ def main(argv=None, spark=None) -> dict:
         summary = run_extraction_job(
             spark, args.input, args.output, model,
             num_groups=args.num_groups,
-            salt_partitions=args.salt_partitions,
             resume=not args.no_resume,
             url_col=args.url_col, text_col=args.text_col,
             html_col=args.html_col or None,

@@ -1,30 +1,35 @@
 """The distributed extraction + fuzzy-match job.
 
-Plan shape (all narrow until the write — Catalyst keeps this a single
-pipelined stage per group):
+Plan shape per group (one narrow stage unless the group is spread):
 
-    scan parquet/Iceberg-style table
-      -> [optional] repartition on xxhash64(url) (salting: giant-document
-         skew is defused by spreading documents uniformly; within-document
-         work is never split, so results are partitioning-invariant)
+    scan the group's own input files (parquet, or WARC via binaryFile;
+         Iceberg: the table scan filtered on its ``_file`` column)
+      -> [only when the group owns fewer files than defaultParallelism]
+         repartition on xxhash64(url), so its rows fill every core
       -> mapInPandas(extract_html + find_matches)   [one Arrow-batched pass]
-      -> write matches, partitioned by bucket
+      -> write the group's matches
 
 The compiled phrase model is broadcast once per job (`sc.broadcast`) — the
 classic broadcast-hash-join shape: the tiny build side (phrases) probes
 against the huge stream side (documents) inside the UDF.
 
-Resumability: the job processes the input in ``num_groups`` deterministic
-url-hash groups; each group commits its output directory plus a manifest
-line (group id, model fingerprint, row counts, wall time).  A restarted job
-re-reads the manifest and anti-joins the done groups.  A change of model,
-config, extractor or input column names changes the fingerprint and
-invalidates old groups.
+Resumability: the job lists its input files once, sorts the listing and
+splits it into ``num_groups`` groups; group ``g`` owns ``files[g::num_groups]``
+and reads only those files, so the table is scanned once over the whole job.
+Each group commits its output directory plus a manifest line (group id,
+fingerprint, row counts, wall time).  A restarted job re-reads the manifest
+and skips each group whose newest line carries the current fingerprint.  A
+change of model, config, extractor, input column names, group count or file
+listing changes the fingerprint and invalidates old groups; groups beyond
+the current count are removed.  A document is
+never split across tasks, so a giant document still lands in one task
+(chunk_chars bounds its memory, not its time).
 
-Lineage/metrics: a dict accumulator collects per-*partition* rows
+Lineage/metrics: a dict accumulator collects one row per *partition*
 (docs, chars, matches, wall_ms) from inside the UDF; the driver persists
-them per group under ``_metrics/``.  (Accumulator caveat: Spark re-counts
-retried tasks; metrics are observability, not accounting.)
+them per group under ``_metrics/``.  A partition that Spark computes more
+than once (a re-executed stage, a speculative copy) keeps only its last
+row.
 
 Worker start-up: every function this module (or ``sources.warc``) ships to
 Python workers calls :func:`spark.worker.drop_zip_importers` first thing.
@@ -38,10 +43,12 @@ skips the call brings that cost back for every task of its stage.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import shutil
 import time
-from typing import Iterator, List, Optional
+from typing import Iterator, List, Optional, Sequence, Union
 
 import pandas as pd
 
@@ -56,11 +63,16 @@ from fuzzy_search_spark.matcher import find_matches
 from fuzzy_search_spark.model import CompiledModel
 from fuzzy_search_spark.spark.worker import drop_zip_importers
 
-def read_pages(spark: SparkSession, input_path: str,
-               table_format: str = "parquet") -> DataFrame:
-    """Read the web-pages table.  ``table_format``:
+def read_pages(spark: SparkSession, input_path: Union[str, Sequence[str]],
+               table_format: str = "parquet",
+               schema: Optional[T.StructType] = None) -> DataFrame:
+    """Read the web-pages table.  ``input_path`` is one path or, for
+    ``parquet`` and ``warc``, a list of paths (the files of one group of
+    :func:`run_extraction_job`).  ``schema`` (parquet) is the table's schema
+    when the caller already has it, so the read infers none.
+    ``table_format``:
 
-    - ``parquet`` (default): a parquet directory path.
+    - ``parquet`` (default): a parquet directory or file path(s).
     - ``iceberg``: an Iceberg table identifier (``catalog.db.table``) or
       path, read via the Iceberg Spark runtime.  The sandbox ships no
       Iceberg jars, so this branch is exercised only on clusters whose
@@ -75,19 +87,18 @@ def read_pages(spark: SparkSession, input_path: str,
       ``extractor=sources.warc.extract_sniffed`` for charset-sniffed
       decoding instead of plain UTF-8).
     """
+    paths = [input_path] if isinstance(input_path, str) else list(input_path)
     if table_format == "warc":
         from fuzzy_search_spark.sources.warc import read_warc
 
-        files = spark.read.format("binaryFile").load(input_path)
+        files = spark.read.format("binaryFile").load(paths)
         return read_warc(files).select(
             "url", "warc_ts", "html",
             F.lit(None).cast("string").alias("text"),
             F.lit(None).cast("string").alias("lang"))
     if table_format == "iceberg":
         try:
-            if "/" in input_path:
-                return spark.read.format("iceberg").load(input_path)
-            return spark.read.table(input_path)
+            return _read_iceberg(spark, input_path)
         except Exception as exc:  # pragma: no cover - needs iceberg jars
             raise RuntimeError(
                 "table_format='iceberg' needs the Iceberg Spark runtime on "
@@ -95,7 +106,20 @@ def read_pages(spark: SparkSession, input_path: str,
                 "a configured catalog") from exc
     if table_format != "parquet":
         raise ValueError(f"unknown table_format {table_format!r}")
-    return spark.read.parquet(input_path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _read_iceberg(spark: SparkSession, table: str,
+                  metadata: Optional[str] = None) -> DataFrame:
+    """An Iceberg table, or its ``metadata`` table (``files``, ...).  A
+    ``table`` with a ``/`` is a path, loaded through the iceberg source;
+    anything else is a catalog name."""
+    if "/" in table:
+        return spark.read.format("iceberg").load(
+            table if metadata is None else f"{table}#{metadata}")
+    return spark.read.table(table if metadata is None
+                            else f"{table}.{metadata}")
 
 
 def write_matches(matches: DataFrame, target: str,
@@ -134,17 +158,15 @@ _MATCH_COLUMNS = [f.name for f in MATCH_SCHEMA.fields]
 
 
 class _MetricsParam(AccumulatorParam):
-    """Accumulates {partition_id: [docs, chars, matches, wall_ms]}."""
+    """Accumulates {partition_id: [docs, chars, matches, wall_ms]}, one row
+    per partition: a partition computed again replaces its earlier row
+    instead of being counted twice."""
 
     def zero(self, value):
         return {}
 
     def addInPlace(self, a, b):
-        for key, vals in b.items():
-            if key in a:
-                a[key] = [x + y for x, y in zip(a[key], vals)]
-            else:
-                a[key] = list(vals)
+        a.update(b)
         return a
 
 
@@ -170,13 +192,6 @@ def attach_extracted_text(df: DataFrame, html_col: str = "html",
         return html.map(extract_fn)
 
     return df.withColumn(out_col, _extract(F.col(html_col)))
-
-
-def salt_by_url(df: DataFrame, num_partitions: int,
-                url_col: str = "url") -> DataFrame:
-    """Spread documents uniformly over partitions by url hash — defuses the
-    giant-document straggler tail without changing per-document results."""
-    return df.repartition(num_partitions, F.xxhash64(F.col(url_col)))
 
 
 def match_documents(df: DataFrame, model: CompiledModel,
@@ -325,9 +340,57 @@ def _read_manifest(path: str) -> List[dict]:
     return entries
 
 
+def _list_input_files(spark: SparkSession, df: DataFrame, input_path: str,
+                      table_format: str) -> List[str]:
+    """The sorted data files of the input table.  ``inputFiles()`` lists
+    parquet and WARC inputs; an Iceberg table lists none through it, so its
+    data files come from the table's ``files`` metadata table."""
+    if table_format == "iceberg":
+        meta = _read_iceberg(spark, input_path, "files")
+        return sorted(r.file_path for r in meta.filter("content = 0")
+                      .select("file_path").collect())
+    return sorted(df.inputFiles())
+
+
+def _drop_groups_from(spark: SparkSession, output_path: str, num_groups: int,
+                      entries: List[dict], manifest_path: str,
+                      table_format: str) -> List[dict]:
+    """Remove what a run with more groups left behind: the manifest lines,
+    matches and metrics of every group >= ``num_groups``.  Returns the
+    manifest entries kept.  The manifest is rewritten first, so a crash
+    part-way leaves output that the next run removes again, never a line
+    that vouches for removed output."""
+    kept = [e for e in entries if e["group"] < num_groups]
+    if len(kept) < len(entries):
+        tmp = manifest_path + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.writelines(json.dumps(e) + "\n" for e in kept)
+        os.replace(tmp, manifest_path)
+    dirs = [(os.path.join(output_path, "_metrics"), ".json")]
+    if table_format == "iceberg":
+        if spark.catalog.tableExists(output_path):
+            # an empty overwrite deletes the rows its condition selects
+            (spark.createDataFrame([], MATCH_SCHEMA)
+             .withColumn("group", F.lit(0))
+             .writeTo(output_path).overwrite(F.col("group") >= num_groups))
+    else:
+        dirs.append((os.path.join(output_path, "matches"), ""))
+    for base, suffix in dirs:
+        for name in os.listdir(base) if os.path.isdir(base) else []:
+            group = name[len("group="):len(name) - len(suffix)]
+            if not (name.startswith("group=") and name.endswith(suffix)
+                    and group.isdigit() and int(group) >= num_groups):
+                continue
+            path = os.path.join(base, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+    return kept
+
+
 def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
                        model: CompiledModel, *, num_groups: int = 4,
-                       salt_partitions: Optional[int] = None,
                        resume: bool = True,
                        url_col: str = "url", text_col: str = "text",
                        html_col: Optional[str] = "html",
@@ -336,51 +399,74 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
                        extractor=None) -> dict:
     """End-to-end resumable job: read -> (extract) -> match -> write.
 
+    Group ``g`` reads only ``files[g::num_groups]`` of the sorted input
+    listing, in one narrow stage; a group that owns no file commits an
+    empty output with ``docs`` = 0.  A task reads whole files (WARC does
+    not split, nor does a parquet file of one row group), so a group that
+    owns fewer files than ``defaultParallelism`` would leave cores idle:
+    its rows are spread over that many partitions by url hash first, at
+    the cost of one shuffle of the group's rows.  Groups >= ``num_groups``
+    that an earlier run left in ``output_path`` are removed first.
+
     Output layout:
         <output>/matches/group=G/*.parquet
-        <output>/_metrics/group=G.json     per-partition lineage rows
+        <output>/_metrics/group=G.json     the group's files and
+                                           per-partition lineage rows
         <output>/_manifest.jsonl           one line per committed group
     """
+    df = read_pages(spark, input_path, table_format)
+    files = _list_input_files(spark, df, input_path, table_format)
+
     fingerprint = model.fingerprint()
     if extractor is not None:
         # a different payload->text function changes every downstream row:
         # resume must not skip groups committed under another extractor
         fingerprint += f":{extractor.__module__}.{extractor.__qualname__}"
-    # so do the columns the rows are read from
-    fingerprint += f":url={url_col}:text={text_col}:html={html_col}"
+    # so do the columns the rows are read from, and which files a group owns
+    listing = hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]
+    fingerprint += (f":url={url_col}:text={text_col}:html={html_col}"
+                    f":groups={num_groups}:files={listing}")
     manifest_path = os.path.join(output_path, "_manifest.jsonl")
     metrics_dir = os.path.join(output_path, "_metrics")
     os.makedirs(metrics_dir, exist_ok=True)
 
     # read even without resume: it cuts a torn last line before the
-    # appends below
-    entries = _read_manifest(manifest_path)
+    # appends below.  A group's directory holds the rows of its newest
+    # line only, so an older line with this fingerprint proves nothing.
+    entries = _drop_groups_from(spark, output_path, num_groups,
+                                _read_manifest(manifest_path),
+                                manifest_path, table_format)
+    newest = {entry["group"]: entry for entry in entries}
     done = set()
     if resume:
-        done = {entry["group"] for entry in entries
+        done = {group for group, entry in newest.items()
                 if entry.get("fingerprint") == fingerprint}
-
-    df = read_pages(spark, input_path, table_format)
-    if salt_partitions is None:
-        salt_partitions = spark.sparkContext.defaultParallelism * 2
-    group_expr = F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_groups))
 
     summary = {"groups": num_groups, "skipped": sorted(done), "ran": [],
                "fingerprint": fingerprint, "docs": 0, "matches": 0}
+    cores = spark.sparkContext.defaultParallelism
     for group in range(num_groups):
         if group in done:
             continue
         t0 = time.monotonic()
         acc = spark.sparkContext.accumulator({}, _MetricsParam())
-        part = df.filter(group_expr == group)
-        part = salt_by_url(part, salt_partitions, url_col)
+        own = files[group::num_groups]
+        if table_format == "iceberg":
+            # assumes Iceberg prunes data files on a `_file` predicate;
+            # unchecked, since no Iceberg runtime is at hand
+            part = df.filter(F.col("_file").isin(own))
+        else:
+            part = read_pages(spark, own, table_format, schema=df.schema)
+        if 0 < len(own) < cores:
+            part = part.repartition(cores, F.xxhash64(F.col(url_col)))
         matches = match_documents(part, model, url_col=url_col,
                                   text_col=text_col, html_col=html_col,
                                   chunk_chars=chunk_chars,
                                   extractor=extractor, metrics_acc=acc)
         if table_format == "iceberg":
-            write_matches(matches.withColumn("group", F.lit(group)),
-                          output_path, table_format)
+            # replaces the group's earlier rows even when this run has none
+            (matches.withColumn("group", F.lit(group)).writeTo(output_path)
+             .overwrite(F.col("group") == group))
         else:
             group_dir = os.path.join(output_path, "matches",
                                      f"group={group}")
@@ -397,7 +483,8 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
         with open(os.path.join(metrics_dir, f"group={group}.json"), "w") as fh:
             json.dump({"group": group, "fingerprint": fingerprint,
                        "wall_s": wall, "docs": docs, "matches": nmatches,
-                       "partitions": partition_metrics}, fh, indent=1)
+                       "files": own, "partitions": partition_metrics},
+                      fh, indent=1)
         with open(manifest_path, "a") as fh:
             fh.write(json.dumps({
                 "group": group, "fingerprint": fingerprint, "docs": docs,

@@ -223,9 +223,10 @@ def test_resume_fingerprint_drift(spark, pages_path, tmp_path):
     m2 = compile_model(README_MODEL, changed)
     s2 = run_extraction_job(spark, pages_path, out, m2, num_groups=2)
     assert s2["ran"] == [0, 1] and s2["skipped"] == []
-    # and the original model still resumes cleanly
+    # the group directories now hold m2's rows: going back to m1 must run
+    # every group again, although the manifest still has m1's older lines
     s3 = run_extraction_job(spark, pages_path, out, m1, num_groups=2)
-    assert s3["ran"] == [] and s3["skipped"] == [0, 1]
+    assert s3["ran"] == [0, 1] and s3["skipped"] == []
 
 
 def test_resume_fingerprint_column_drift(spark, pages_path, tmp_path):
@@ -273,6 +274,152 @@ def test_resume_torn_manifest_line(spark, pages_path, tmp_path):
         fh.write(first[:len(first) // 2] + "\n" + second)
     with pytest.raises(ValueError):
         run_extraction_job(spark, pages_path, out, model, num_groups=2)
+
+
+@pytest.fixture(scope="module")
+def pages4_path(tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("pages4") / "web_pages")
+    write_web_pages_parquet(path, n_bulk=60, n_files=4, tail_docs_per_1k=0)
+    return path
+
+
+def _group_metrics(out, num_groups):
+    import json
+
+    metrics = []
+    for g in range(num_groups):
+        with open(os.path.join(out, "_metrics", f"group={g}.json")) as fh:
+            metrics.append(json.load(fh))
+    return metrics
+
+
+@pytest.mark.parametrize("n_files,spread", [(4, True), (8, False)])
+def test_groups_own_disjoint_input_files(spark, pages4_path, tmp_path,
+                                         n_files, spread):
+    """Each group reads only its own files of the sorted listing: the
+    groups' files are disjoint and cover the listing, and each group's docs
+    are the rows of its files.  A group that owns as many files as the
+    session has cores (8 files, 2 groups, local[4]) runs as one narrow
+    stage, with no Exchange; one that owns fewer (4 files) is spread by url
+    hash over the cores first, and that is its only Exchange."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    pages = pages4_path
+    if n_files != 4:
+        pages = str(tmp_path / "pages")
+        write_web_pages_parquet(pages, n_bulk=60, n_files=n_files,
+                                tail_docs_per_1k=0)
+    listing = sorted(spark.read.parquet(pages).inputFiles())
+    assert len(listing) == n_files
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsList().size()
+    model = compile_model(README_MODEL, README_CONFIG)
+    out = str(tmp_path / "groups_out")
+    s = run_extraction_job(spark, pages, out, model, num_groups=2)
+    assert s["ran"] == [0, 1]
+
+    metrics = _group_metrics(out, 2)
+    owned = [m["files"] for m in metrics]
+    assert all(owned) and not set(owned[0]) & set(owned[1])
+    assert sorted(owned[0] + owned[1]) == listing
+    for m in metrics:
+        rows = sum(
+            sum(1 for t in pq.read_table(f[len("file://"):], columns=["text"])
+                .column("text").to_pylist() if t)
+            for f in m["files"])
+        assert m["docs"] == rows > 0
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = store.executionsList()
+    plans = [executions.apply(i).physicalPlanDescription()
+             for i in range(seen, executions.size())]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p
+              and os.path.join(out, "matches") in p]
+    assert len(writes) == 2
+    spread_by_url = (f"hashpartitioning(xxhash64(url#",
+                     f", {spark.sparkContext.defaultParallelism}), "
+                     "REPARTITION_BY_NUM")
+    for plan in writes:
+        assert "MapInPandas" in plan, plan
+        exchanges = re.findall(r"\(\d+\) Exchange\n.*\nArguments: (.*)", plan)
+        if spread:
+            assert exchanges and all(
+                a.startswith(spread_by_url[0]) and spread_by_url[1] in a
+                for a in exchanges), plan
+        else:
+            assert "Exchange" not in plan, plan
+
+
+def test_more_groups_than_files(spark, pages4_path, tmp_path):
+    """Groups that own no file still commit, with docs = 0, and a second
+    run skips every group."""
+    import json
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    out = str(tmp_path / "sparse_out")
+    s1 = run_extraction_job(spark, pages4_path, out, model, num_groups=6)
+    assert s1["ran"] == list(range(6)) and s1["docs"] > 0
+    assert [m["docs"] for m in _group_metrics(out, 6)][4:] == [0, 0]
+    with open(os.path.join(out, "_manifest.jsonl")) as fh:
+        manifest = [json.loads(line) for line in fh]
+    assert [e["group"] for e in manifest] == list(range(6))
+    assert [e["docs"] for e in manifest][4:] == [0, 0]
+    assert spark.read.parquet(os.path.join(out, "matches")).count() > 0
+    s2 = run_extraction_job(spark, pages4_path, out, model, num_groups=6)
+    assert s2["ran"] == [] and s2["skipped"] == list(range(6))
+
+
+def test_fewer_groups_remove_stale_groups(spark, pages4_path, tmp_path):
+    """A run with fewer groups removes the groups an earlier run left
+    beyond its count, output, metrics and manifest lines alike: reading
+    ``matches/`` gives the second run's rows only, and a third run with the
+    first count runs the removed groups again instead of skipping them."""
+    import json
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    out = str(tmp_path / "shrink_out")
+    matches = os.path.join(out, "matches")
+    s4 = run_extraction_job(spark, pages4_path, out, model, num_groups=4)
+    assert s4["ran"] == [0, 1, 2, 3]
+    s2 = run_extraction_job(spark, pages4_path, out, model, num_groups=2)
+    assert s2["ran"] == [0, 1]
+    assert sorted(os.listdir(matches)) == ["group=0", "group=1"]
+    assert sorted(os.listdir(os.path.join(out, "_metrics"))) == [
+        "group=0.json", "group=1.json"]
+    with open(os.path.join(out, "_manifest.jsonl")) as fh:
+        assert {json.loads(line)["group"] for line in fh} == {0, 1}
+    assert spark.read.parquet(matches).count() == s2["matches"] > 0
+
+    again = run_extraction_job(spark, pages4_path, out, model, num_groups=4)
+    assert again["ran"] == [0, 1, 2, 3] and again["skipped"] == []
+    assert spark.read.parquet(matches).count() == again["matches"]
+
+
+def test_resume_file_listing_drift(spark, pages4_path, tmp_path):
+    """A file added to the input changes the fingerprint: every group runs
+    again (the added file moves which files each group owns)."""
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    pages = str(tmp_path / "pages")
+    shutil.copytree(pages4_path, pages)
+    model = compile_model(README_MODEL, README_CONFIG)
+    out = str(tmp_path / "listing_out")
+    s1 = run_extraction_job(spark, pages, out, model, num_groups=2)
+    assert s1["ran"] == [0, 1]
+    shutil.copy(os.path.join(pages, "part-00000.parquet"),
+                os.path.join(pages, "part-00004.parquet"))
+    s2 = run_extraction_job(spark, pages, out, model, num_groups=2)
+    assert s2["ran"] == [0, 1] and s2["skipped"] == []
+    assert s2["fingerprint"] != s1["fingerprint"]
+    assert s2["docs"] > s1["docs"]
 
 
 def test_template_matching_spark(spark, matches_df):
@@ -329,7 +476,9 @@ def test_partitioning_invariance(spark, pages_path):
     """t3 (SURVEY §5.2): per-url results are identical regardless of
     partition count, url-hash salting, or giant-doc chunking — Spark
     distribution must never change what a document matches."""
-    from fuzzy_search_spark.spark.job import match_documents, salt_by_url
+    from pyspark.sql import functions as F
+
+    from fuzzy_search_spark.spark.job import match_documents
 
     model = compile_model(README_MODEL, README_CONFIG)
     base = spark.read.parquet(pages_path)
@@ -344,18 +493,22 @@ def test_partitioning_invariance(spark, pages_path):
     expect = rows(base.coalesce(1))
     assert expect, "fixture produced no matches"
     assert rows(base.repartition(7)) == expect
-    assert rows(salt_by_url(base, 5)) == expect
+    assert rows(base.repartition(5, F.xxhash64("url"))) == expect
     assert rows(base.repartition(3), chunk_chars=512) == expect
 
 
-def test_lineage_metrics_values(spark, pages_path, tmp_path):
+def test_lineage_metrics_values(spark, tmp_path):
     """Per-partition lineage rows must ACCOUNT for the data: summed docs ==
     input rows with text, summed matches == written match rows, and every
-    partition row carries a non-negative wall."""
+    partition row carries a non-negative wall.  Two input files, so each of
+    the two groups has rows to account for."""
     import json
 
     from fuzzy_search_spark.spark.job import run_extraction_job
 
+    pages_path = str(tmp_path / "pages2")
+    write_web_pages_parquet(pages_path, n_bulk=60, n_files=2,
+                            tail_docs_per_1k=0)
     model = compile_model(README_MODEL, README_CONFIG)
     out = str(tmp_path / "lineage_out")
     run_extraction_job(spark, pages_path, out, model, num_groups=2)
@@ -812,17 +965,12 @@ def test_bucketed_join_is_colocated(spark, tmp_path):
 
 def test_match_job_plan_is_narrow(spark, pages_path):
     """The headline job (scan -> mapInPandas -> [write]) must stay a
-    single narrow stage: no Exchange anywhere unless salting is asked
-    for — the property that makes throughput scale linearly with
-    executors at 10^12 rows."""
-    from fuzzy_search_spark.spark.job import match_documents, salt_by_url
+    single narrow stage: no Exchange anywhere — the property that makes
+    throughput scale linearly with executors at 10^12 rows."""
+    from fuzzy_search_spark.spark.job import match_documents
 
     model = compile_model(README_MODEL, README_CONFIG)
     df = spark.read.parquet(pages_path)
     plan = match_documents(df, model)._jdf.queryExecution().executedPlan() \
         .toString()
     assert "Exchange" not in plan, plan
-    # salting is the one deliberate shuffle, and exactly one
-    salted = match_documents(salt_by_url(df, 8), model)
-    splan = salted._jdf.queryExecution().executedPlan().toString()
-    assert splan.count("Exchange") == 1, splan

@@ -9,7 +9,8 @@ Plan shape per group (one narrow stage unless the group is spread):
       -> mapInPandas(extract_html + find_matches)   [one Arrow-batched pass]
       -> write the group's matches
 
-The compiled phrase model is broadcast once per job (`sc.broadcast`) — the
+The compiled phrase model is broadcast once per job (`sc.broadcast`, before
+the first group that runs; every group's stage reads that one copy) — the
 classic broadcast-hash-join shape: the tiny build side (phrases) probes
 against the huge stream side (documents) inside the UDF.
 
@@ -212,11 +213,20 @@ def match_documents(df: DataFrame, model: CompiledModel,
     removal, ``extract.extract_payload`` for mixed HTML/PDF/plain tables —
     must be a deterministic top-level callable, it ships to executors).
     """
+    return _match_broadcast(df, df.sparkSession.sparkContext.broadcast(model),
+                            model.config.ignorecase, url_col, text_col,
+                            html_col, chunk_chars, extractor, metrics_acc)
+
+
+def _match_broadcast(df: DataFrame, bc_model, ignorecase: bool, url_col: str,
+                     text_col: str, html_col: Optional[str],
+                     chunk_chars: Optional[int], extractor,
+                     metrics_acc) -> DataFrame:
+    """:func:`match_documents` over a model already broadcast as
+    ``bc_model``, so :func:`run_extraction_job` ships it once per job, not
+    once per group."""
     from fuzzy_search_spark.matcher import find_matches_chunked
 
-    sc = df.sparkSession.sparkContext
-    bc_model = sc.broadcast(model)
-    ignorecase = model.config.ignorecase
     use_html = html_col is not None
     extract_fn = extractor if extractor is not None else extract_html
     cols = [url_col, text_col] + ([html_col] if use_html else [])
@@ -445,9 +455,12 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     summary = {"groups": num_groups, "skipped": sorted(done), "ran": [],
                "fingerprint": fingerprint, "docs": 0, "matches": 0}
     cores = spark.sparkContext.defaultParallelism
+    bc_model = None         # broadcast once, before the first group that runs
     for group in range(num_groups):
         if group in done:
             continue
+        if bc_model is None:
+            bc_model = spark.sparkContext.broadcast(model)
         t0 = time.monotonic()
         acc = spark.sparkContext.accumulator({}, _MetricsParam())
         own = files[group::num_groups]
@@ -459,10 +472,9 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
             part = read_pages(spark, own, table_format, schema=df.schema)
         if 0 < len(own) < cores:
             part = part.repartition(cores, F.xxhash64(F.col(url_col)))
-        matches = match_documents(part, model, url_col=url_col,
-                                  text_col=text_col, html_col=html_col,
-                                  chunk_chars=chunk_chars,
-                                  extractor=extractor, metrics_acc=acc)
+        matches = _match_broadcast(part, bc_model, model.config.ignorecase,
+                                   url_col, text_col, html_col, chunk_chars,
+                                   extractor, acc)
         if table_format == "iceberg":
             # replaces the group's earlier rows even when this run has none
             (matches.withColumn("group", F.lit(group)).writeTo(output_path)

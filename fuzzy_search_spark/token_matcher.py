@@ -28,10 +28,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
+from functools import lru_cache
+from itertools import compress
 from typing import Dict, List, Optional, Sequence, Set, Tuple, Union
+
+import numpy as np
 
 from fuzzy_search_spark.config import PUBLISHED_DEFAULT_CONFIG
 from fuzzy_search_spark.kernels import strings as S
+from fuzzy_search_spark.kernels.skipgrams import _CP_BITS, encode_gram
 from fuzzy_search_spark.kernels.tokenize import wordpunct_spans
 from fuzzy_search_spark.matcher import Match
 
@@ -146,11 +151,11 @@ class TokenModel:
     # and never pickled (see __getstate__)
     runtime_probe_cache: Dict[str, List[Tuple[str, "MatchType"]]] = field(
         default_factory=dict, compare=False)
-    # vectorized gram index (built at compile, ships with the broadcast):
-    # sorted int64 gram keys + CSR buckets of phrase-token ids, so one
-    # probe is a searchsorted + a NumPy gather instead of a Python loop
-    # over every candidate of every gram — the token-pipeline analog of
-    # the phrase matcher's GramScanner
+    # gram index (built at compile, ships with the broadcast): sorted
+    # int64 gram keys + CSR buckets of phrase-token ids, so all new tokens
+    # of a document are probed in one searchsorted + NumPy gather (see
+    # _probe_chunk) instead of a Python loop over every candidate of every
+    # gram — the token-pipeline analog of the phrase matcher's GramScanner
     probe_index: object = field(default=None, compare=False)
     # chaining fan-out table (built at compile): ptoken -> tuple of
     # (phrase_name, phrase, start_ok, len(phrase.name)) — the three dict
@@ -177,6 +182,78 @@ def _is_distractor(text_token: str, phrase_token: str,
     if dist - length_diff == 0 and len(text_token) <= 3:
         return text_token not in phrase_token
     return dist - length_diff > dist_threshold
+
+
+#: DP cells (pairs x columns) per chunk of _edit_distances
+_EDIT_CELLS = 1 << 18
+
+
+def _edit_distances(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
+    """``S.levenshtein_distance(a[i], b[i])`` for every pair, as one DP
+    row per char of ``b`` over all pairs at once.  A row needs no
+    per-column loop: with unit costs, ``cur[k] = min(t[k], cur[k-1] + 1)``
+    unrolls to ``k + min over m <= k of (t[m] - m)``, one running minimum
+    (``t`` being each cell's diagonal and upper candidates, and the row's
+    first cell).  Pairs are sorted by length and chunked, so padding and
+    working memory stay small; cell (i, j) reads only ``a[:i]`` and
+    ``b[:j]``, so the padding never reaches a pair's result."""
+    n = len(a)
+    len_a = np.fromiter(map(len, a), dtype=np.int64, count=n)
+    len_b = np.fromiter(map(len, b), dtype=np.int64, count=n)
+    out = len_a.copy()          # the distance to an empty b
+    longest = np.maximum(len_a, len_b)
+    by_len = np.argsort(longest, kind="stable")
+    lo = 0
+    while lo < n:
+        # lengths ascend, so a chunk's last pair bounds its width
+        hi = min(n, lo + max(1, _EDIT_CELLS
+                             // (int(longest[by_len[lo]]) + 1)))
+        hi = min(hi, lo + max(1, _EDIT_CELLS
+                              // (int(longest[by_len[hi - 1]]) + 1)))
+        sel = by_len[lo:hi]
+        lo = hi
+        la, lb = len_a[sel], len_b[sel]
+        wa, wb = int(la.max()), int(lb.max())
+        ca = _char_grid([a[i] for i in sel], la, wa)
+        cb = _char_grid([b[i] for i in sel], lb, wb)
+        cols = np.arange(wa + 1, dtype=np.int64)
+        prev = np.broadcast_to(cols, (len(sel), wa + 1))
+        t = np.empty((len(sel), wa + 1), dtype=np.int64)
+        for j in range(wb):
+            t[:, 0] = j + 1
+            np.minimum(prev[:, :-1] + (ca != cb[:, j:j + 1]),
+                       prev[:, 1:] + 1, out=t[:, 1:])
+            prev = np.minimum.accumulate(t - cols, axis=1) + cols
+            done = np.flatnonzero(lb == j + 1)
+            out[sel[done]] = prev[done, la[done]]
+    return out
+
+
+def _char_grid(strings: Sequence[str], lengths: np.ndarray,
+               width: int) -> np.ndarray:
+    """``strings`` as a (len(strings) x width) codepoint grid, -1 padded."""
+    grid = np.full((len(strings), width), -1, dtype=np.int64)
+    rows = np.repeat(np.arange(len(strings)), lengths)
+    cols = (np.arange(len(rows))
+            - np.repeat(np.cumsum(lengths) - lengths, lengths))
+    grid[rows, cols] = _codepoints(strings)
+    return grid
+
+
+def _distractor_mask(text_tokens: Sequence[str],
+                     phrase_tokens: Sequence[str],
+                     dist_threshold: int = 2) -> np.ndarray:
+    """``_is_distractor`` over every pair at once."""
+    len_t = np.fromiter(map(len, text_tokens), dtype=np.int64,
+                        count=len(text_tokens))
+    len_p = np.fromiter(map(len, phrase_tokens), dtype=np.int64,
+                        count=len(phrase_tokens))
+    excess = (_edit_distances(text_tokens, phrase_tokens)
+              - np.abs(len_t - len_p))
+    mask = excess > dist_threshold
+    for i in np.flatnonzero((excess == 0) & (len_t <= 3)).tolist():
+        mask[i] = text_tokens[i] not in phrase_tokens[i]
+    return mask
 
 
 def compile_token_model(phrases: Sequence[Union[str, dict]],
@@ -296,22 +373,28 @@ def compile_token_model(phrases: Sequence[Union[str, dict]],
     # distractor pairs, then precompute each term's typed match list
     tm.vocab_terms = set(vocabulary or [])
     tm.vocab_terms.update(tm.token_in_phrase)
-    # NB: the reference builds the probe token with char_index=0 and
-    # char_end_index=len(term), so the within-offset check applies at
-    # compile time too (token_searcher.py:466-495,563-577)
+    terms = sorted(tm.vocab_terms)
     # distractor classification iterates ALL gram-sharing candidates —
     # including ones whose match type is NONE (the reference's
     # match_start_offsets carry no threshold filter)
-    for term in sorted(tm.vocab_terms):
-        for ptoken in _probe_candidate_ptokens(term, tm):
-            if _is_distractor(term, ptoken):
-                tm.distractor_pairs.add((term, ptoken))
-    for term in sorted(tm.vocab_terms):
-        probe = _probe_token(term, 0, len(term), tm)
+    if tm.probe_index is None:
+        probes = []
+        for term in terms:
+            num_skips, matched = _accumulate_python(term, tm)
+            tm.distractor_pairs.update(
+                (term, pt) for pt in matched if _is_distractor(term, pt))
+            probes.append(_type_python(term, num_skips, matched, tm))
+    else:
+        probes = _probe_batch(terms, tm, tm.distractor_pairs)
+    # NB: the reference builds the probe token with char_index=0 and
+    # char_end_index=len(term), so the within-offset check applies at
+    # compile time too (token_searcher.py:466-495,563-577)
+    offsets = tm.ptoken_max_start or tm.ptoken_max_end
+    for term, probe in zip(terms, probes):
         tm.vocab_cache[term] = [
             (pt, mt) for pt, mt in probe
             if (term, pt) not in tm.distractor_pairs
-            and mt is not MatchType.NONE
+            and (not offsets or _within_offsets(tm, pt, 0, len(term)))
         ]
     tm.chain_fanout = _build_chain_fanout(tm)
     return tm
@@ -377,9 +460,31 @@ def _within_offsets(tm: TokenModel, ptoken: str, char_index: int,
 
 _PROBE_CACHE_MAX = 262144
 
+#: distinct tokens per batched probe call: bounds the key stage's working
+#: memory (every skipgram of every token of the call)
+_PROBE_BATCH = 4096
+
+#: gram hits (a token's gram occurrence x one phrase token of that gram's
+#: bucket) per counting pass: bounds the count stage's working memory,
+#: about eight int64 arrays of this length, however many phrase tokens
+#: share a gram
+_PROBE_HITS = 1 << 17
+
+#: per-length skipgram templates up to this token length are cached;
+#: longer tokens (rare) build theirs uncached
+_TEMPLATE_MAX_LEN = 256
+
+#: codepoint of a template token's first char; '#' (the pad char) is far
+#: below it, so a template gram's chars tell pad from token position
+_TEMPLATE_BASE = 0x100
+
+#: a template token's char at position i is _TEMPLATE_BASE + i modulo
+#: this cycle, far wider than any skipgram window
+_TEMPLATE_CYCLE = 1 << 16
+
 
 class _ProbeIndex:
-    """CSR gram -> phrase-token-id index for the vectorized probe.
+    """CSR gram -> phrase-token-id index for the batched probe.
 
     Bucket order per gram preserves ``gram_to_ptokens`` list order, and
     candidate emission order is by first matched occurrence — both
@@ -400,12 +505,8 @@ class _ProbeIndex:
 
 
 def _build_probe_index(tm: TokenModel):
-    """Build the vectorized probe index (None when gram keys cannot fold
+    """Build the batched probe index (None when gram keys cannot fold
     into int64: ngram_size > 3)."""
-    import numpy as np
-
-    from fuzzy_search_spark.kernels.skipgrams import encode_gram
-
     if tm.ngram_size > 3 or not tm.gram_to_ptokens:
         return None
     ptokens = list(tm.token_in_phrase)
@@ -430,175 +531,264 @@ def _build_probe_index(tm: TokenModel):
                        len_arr)
 
 
-def _probe_candidate_ptokens(token_n: str, tm: TokenModel) -> List[str]:
-    """EVERY phrase token sharing at least one skipgram with ``token_n``,
-    in first-matched-occurrence order and with NO threshold filtering —
-    the candidate set the reference's vocabulary distractor classification
-    iterates (get_token_skipgram_matches match_start_offsets,
-    token_searcher.py:466-495): distractor pairs are classified even for
-    candidates whose match type would be NONE."""
+def _codepoints(strings: Sequence[str]) -> np.ndarray:
+    """The codepoints of ``strings``, concatenated."""
+    return np.frombuffer("".join(strings).encode("utf-32-le",
+                                                 "surrogatepass"),
+                         dtype=np.uint32).astype(np.int64)
+
+
+@lru_cache(maxsize=512)
+def _skipgram_template(length: int, ngram_size: int, skip_size: int,
+                       pad_token: bool):
+    """The skipgrams of every token of ``length`` chars as index arrays:
+    ``pos`` (grams x ngram_size) picks each gram char from the token's
+    padded codepoint row (pads, token, pads, then one 0 column for the
+    missing chars of a short gram), ``shift`` folds them as
+    ``encode_gram`` does, and ``starts``/``ends`` are each gram's span.
+    Read off ``token_skipgrams`` itself, so order and spans are the
+    spec's: over a template token whose chars encode their positions
+    modulo ``_TEMPLATE_CYCLE``.  A gram's chars lie within a few
+    skipgram windows of the previous gram's first char, so each char
+    sits at the position of its residue nearest to that anchor.  Lengths
+    over ``_TEMPLATE_MAX_LEN`` call this uncached (``__wrapped__``)."""
+    pad = ngram_size - 1 if pad_token else 0
+    token = "".join(chr(_TEMPLATE_BASE + i % _TEMPLATE_CYCLE)
+                    for i in range(length))
+    grams = token_skipgrams(token, ngram_size, skip_size, pad_token)
+    pos = np.full((len(grams), max(ngram_size, 1)), length + 2 * pad,
+                  dtype=np.int64)
+    shift = np.zeros(pos.shape, dtype=np.int64)
+    half = _TEMPLATE_CYCLE // 2
+    anchor = 0
+    for g, (gram, _s, _l) in enumerate(grams):
+        first = None
+        for k, ch in enumerate(gram):
+            if ch == "#":
+                pos[g, k] = 0
+            else:
+                at = anchor + ((ord(ch) - _TEMPLATE_BASE - anchor + half)
+                               % _TEMPLATE_CYCLE) - half
+                pos[g, k] = pad + at
+                if first is None:
+                    first = at
+            shift[g, k] = _CP_BITS * (len(gram) - 1 - k)
+        if first is not None:
+            anchor = first
+    starts = np.array([s for _g, s, _l in grams], dtype=np.int64)
+    ends = np.array([s + ln for _g, s, ln in grams], dtype=np.int64)
+    for arr in (pos, shift, starts, ends):
+        arr.setflags(write=False)       # shared by every caller
+    return pos, shift, starts, ends
+
+
+def _batch_skipgrams(terms: Sequence[str], tm: TokenModel):
+    """Every skipgram of every term: (keys, starts, ends, term id) per
+    gram occurrence, plus each term's gram count.  A term's occurrences
+    are contiguous and in ``token_skipgrams`` order; terms of one length
+    are keyed together, in one NumPy pass over a (terms x grams) grid."""
+    pad = tm.ngram_size - 1 if tm.pad_token else 0
+    by_len: Dict[int, List[int]] = {}
+    for i, term in enumerate(terms):
+        by_len.setdefault(len(term), []).append(i)
+    num_skips = np.zeros(len(terms), dtype=np.int64)
+    parts = []
+    for length, ids in by_len.items():
+        template = (_skipgram_template if length <= _TEMPLATE_MAX_LEN
+                    else _skipgram_template.__wrapped__)
+        pos, shift, starts, ends = template(
+            length, tm.ngram_size, tm.skip_size, tm.pad_token)
+        rows = np.full((len(ids), length + 2 * pad + 1), ord("#"),
+                       dtype=np.int64)
+        rows[:, pad:pad + length] = _codepoints(
+            [terms[i] for i in ids]).reshape(len(ids), length)
+        rows[:, -1] = 0
+        keys = (rows[:, pos] << shift).sum(axis=2)
+        ids_arr = np.array(ids, dtype=np.int64)
+        num_skips[ids_arr] = len(starts)
+        parts.append((keys.ravel(), np.tile(starts, len(ids)),
+                      np.tile(ends, len(ids)),
+                      np.repeat(ids_arr, len(starts))))
+    if not parts:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, empty, empty, num_skips
+    keys, starts, ends, term_of = (np.concatenate(col)
+                                   for col in zip(*parts))
+    return keys, starts, ends, term_of, num_skips
+
+
+_MATCH_TYPES = (MatchType.FULL, MatchType.PARTIAL_OF_PHRASE_TOKEN,
+                MatchType.PARTIAL_OF_TEXT_TOKEN)
+
+
+def _probe_chunk(terms: Sequence[str], tm: TokenModel):
+    """One batched probe of distinct ``terms`` against the phrase tokens.
+
+    1. Gather: all gram keys in one ``searchsorted``; each hit expands to
+       its bucket of phrase-token ids.  A (term, ptoken) pair's hits stay
+       in the term's gram order.
+    2. Slice: consecutive terms are grouped so that a slice holds about
+       ``_PROBE_HITS`` hits (at most that plus one term's), and the rest
+       runs per slice: working memory follows that bound, not the number
+       of terms or the size of the gram buckets.
+    3. Count: one stable sort of the pair codes (term * ptokens + ptoken)
+       gives each gram-sharing pair its distinct shared-gram count and
+       its first and last hit.
+    4. Type: only the pairs whose count clears ``skipgram_threshold``
+       get overlap positions and a match type (``_match_type``'s
+       arithmetic, vectorized).
+
+    Yields per slice the typed pairs that are not NONE as (term, ptoken
+    id, match type code) ordered by term, then first matched occurrence,
+    and every gram-sharing pair of the slice as (term, ptoken id),
+    unordered.  No term spans two slices."""
+    idx: _ProbeIndex = tm.probe_index
+    keys, starts, ends, term_of, num_skips = _batch_skipgrams(terms, tm)
+    pos = np.searchsorted(idx.keys, keys)
+    np.minimum(pos, len(idx.keys) - 1, out=pos)
+    occ = np.flatnonzero(idx.keys[pos] == keys)
+    if not occ.size:
+        return
+    gram = pos[occ]
+    occ_term = term_of[occ]
+    # a gram that repeats in a term counts once: mark its first hit
+    first_hit = np.unique(occ_term * len(idx.keys) + gram,
+                          return_index=True)[1]
+    distinct = np.zeros(occ.size, dtype=np.int64)
+    distinct[first_hit] = 1
+    lo = idx.offsets[gram]
+    counts = idx.offsets[gram + 1] - lo
+    # a term's occurrences are contiguous: cut before each term whose
+    # preceding hits cross a multiple of _PROBE_HITS
+    term_at = np.flatnonzero(np.r_[True, occ_term[1:] != occ_term[:-1]])
+    band = (np.cumsum(counts) - counts)[term_at] // _PROBE_HITS
+    cuts = term_at[1:][band[1:] != band[:-1]].tolist()
+    len_t = np.fromiter(map(len, terms), dtype=np.int64, count=len(terms))
+    n_pt = len(idx.ptokens)
+    thr = tm.skipgram_threshold
+    mtlv = tm.max_token_length_variance
+    for a, b in zip([0] + cuts, cuts + [occ.size]):
+        cnt = counts[a:b]
+        total = int(cnt.sum())
+        flat = (np.repeat(lo[a:b] - (np.cumsum(cnt) - cnt), cnt)
+                + np.arange(total, dtype=np.int64))
+        code = np.repeat(occ_term[a:b], cnt) * n_pt + idx.bucket_pids[flat]
+        order = np.argsort(code, kind="stable")
+        code = code[order]
+        seg = np.flatnonzero(np.r_[True, code[1:] != code[:-1]])
+        pair_term, pair_pid = np.divmod(code[seg], n_pt)
+        shared = np.add.reduceat(np.repeat(distinct[a:b], cnt)[order], seg)
+        to = shared / num_skips[pair_term]
+        po = shared / idx.num_skips_arr[pair_pid]
+        ok = np.flatnonzero((to >= thr) | (po >= thr))
+        hit_occ = np.repeat(occ[a:b], cnt)
+        first = order[seg[ok]]
+        last = order[np.r_[seg[1:], total][ok] - 1]
+        span = ends[hit_occ[last]] - starts[hit_occ[first]]
+        t, p = pair_term[ok], pair_pid[ok]
+        lt, lp = len_t[t], idx.len_arr[p]
+        keep = np.where(to[ok] > po[ok], lt - span, lp - span) <= mtlv
+        t, p, first, lt, lp = (v[keep] for v in (t, p, first, lt, lp))
+        mtype = np.where(np.abs(lt - lp) <= mtlv, 0,
+                         np.where(lt < lp, 1, 2))
+        emit = np.lexsort((first, t))
+        yield t[emit], p[emit], mtype[emit], pair_term, pair_pid
+
+
+def _probe_batch(terms: Sequence[str], tm: TokenModel,
+                 distractors: Optional[Set[Tuple[str, str]]] = None):
+    """Offset-free probes of distinct ``terms`` (needs ``probe_index``):
+    per term its (ptoken, match_type) list in first-matched-occurrence
+    order, NONE-typed candidates dropped.  Given a ``distractors`` set,
+    also adds to it every gram-sharing (term, ptoken) pair that
+    ``_is_distractor`` holds for (compile's classification), one
+    ``_probe_chunk`` slice at a time.  Runs ``_probe_chunk`` over at most
+    ``_PROBE_BATCH`` terms at a time."""
+    ptokens = tm.probe_index.ptokens
+    probes: List[List[Tuple[str, MatchType]]] = [[] for _ in terms]
+    for lo in range(0, len(terms), _PROBE_BATCH):
+        chunk = terms[lo:lo + _PROBE_BATCH]
+        for t, p, mtype, pair_t, pair_p in _probe_chunk(chunk, tm):
+            for ti, pi, mi in zip(t.tolist(), p.tolist(), mtype.tolist()):
+                probes[lo + ti].append((ptokens[pi], _MATCH_TYPES[mi]))
+            if distractors is not None:
+                pair_terms = [chunk[i] for i in pair_t.tolist()]
+                pair_ptokens = [ptokens[i] for i in pair_p.tolist()]
+                distractors.update(compress(
+                    zip(pair_terms, pair_ptokens),
+                    _distractor_mask(pair_terms, pair_ptokens)))
+    return probes
+
+
+def _accumulate_python(token_n: str, tm: TokenModel):
+    """The Python accumulation loop: (number of skipgrams of ``token_n``,
+    {ptoken: [distinct shared gram set, first (start, len), last (start,
+    len)]} in first-matched-occurrence order) over EVERY gram-sharing
+    ptoken.  The path where ``probe_index`` is None (ngram_size > 3), and
+    the spec the batched probe is tested against."""
     skips = token_skipgrams(token_n, tm.ngram_size, tm.skip_size,
                             tm.pad_token)
-    idx: _ProbeIndex = tm.probe_index
-    if idx is not None:
-        import numpy as np
-
-        from fuzzy_search_spark.kernels.skipgrams import encode_gram
-
-        keys = np.fromiter((encode_gram(g) for g, _s, _l in skips),
-                           dtype=np.int64, count=len(skips))
-        pos = np.searchsorted(idx.keys, keys)
-        np.minimum(pos, max(len(idx.keys) - 1, 0), out=pos)
-        occ_hits = np.nonzero(idx.keys[pos] == keys)[0] \
-            if len(idx.keys) else np.zeros(0, dtype=np.int64)
-        if not occ_hits.size:
-            return []
-        starts = idx.offsets[pos[occ_hits]]
-        counts = idx.offsets[pos[occ_hits] + 1] - starts
-        total = int(counts.sum())
-        base = np.cumsum(counts) - counts
-        gather = (np.repeat(starts - base, counts)
-                  + np.arange(total, dtype=np.int64))
-        pids = idx.bucket_pids[gather]
-        upids, first_idx = np.unique(pids, return_index=True)
-        order = np.argsort(first_idx, kind="stable")
-        return [idx.ptokens[pid] for pid in upids[order].tolist()]
-    seen: Dict[str, None] = {}
-    for gram, _s, _l in skips:
+    matched: Dict[str, list] = {}
+    for gram, start, length in skips:
         for ptoken in tm.gram_to_ptokens.get(gram, ()):
-            seen.setdefault(ptoken)
-    return list(seen)
+            ent = matched.get(ptoken)
+            if ent is None:
+                matched[ptoken] = [{gram}, (start, length), (start, length)]
+            else:
+                ent[0].add(gram)
+                ent[2] = (start, length)
+    return len(skips), matched
 
 
-def _probe_token_raw(token_n: str,
-                     tm: TokenModel) -> List[Tuple[str, MatchType]]:
-    """Offset-free skipgram probe of one text token against phrase tokens,
-    memoized per distinct token string.  Both the distractor-pair and the
-    within-offset exclusions are per-ptoken predicates independent of the
-    gram accumulation, so they apply as post-filters (see _probe_token and
-    compile_token_model) and the raw probe caches cleanly — the Spark
-    analog of the reference's vocabulary skipgram-match cache
-    (token_searcher.py:563-577,1095-1122).
-
-    Two equivalent paths: the NumPy one (searchsorted + gather +
-    per-candidate overlap prefilter; candidates whose overlaps cannot
-    clear skipgram_threshold are dropped before scoring — they would
-    type as NONE, which every consumer discards) and the Python
-    accumulation loop (ngram_size > 3, or no index).  Output order is
-    first-matched-occurrence order in both."""
-    cache = tm.runtime_probe_cache
-    hit = cache.get(token_n)
-    if hit is not None:
-        return hit
-    skips = token_skipgrams(token_n, tm.ngram_size, tm.skip_size,
-                            tm.pad_token)
-    num_skips = len(skips)
-    out: List[Tuple[str, MatchType]] = []
-    idx: _ProbeIndex = tm.probe_index
-    if idx is not None:
-        import numpy as np
-
-        from fuzzy_search_spark.kernels.skipgrams import encode_gram
-
-        keys = np.fromiter((encode_gram(g) for g, _s, _l in skips),
-                           dtype=np.int64, count=num_skips)
-        pos = np.searchsorted(idx.keys, keys)
-        np.minimum(pos, len(idx.keys) - 1, out=pos)
-        hit_mask = idx.keys[pos] == keys
-        occ_hits = np.nonzero(hit_mask)[0]
-        if occ_hits.size:
-            starts = idx.offsets[pos[occ_hits]]
-            counts = idx.offsets[pos[occ_hits] + 1] - starts
-            total = int(counts.sum())
-            base = np.cumsum(counts) - counts
-            gather = (np.repeat(starts - base, counts)
-                      + np.arange(total, dtype=np.int64))
-            pids = idx.bucket_pids[gather]
-            # distinct-gram mask: first occurrence of each distinct key
-            seen: set = set()
-            dmask = np.zeros(occ_hits.size, dtype=bool)
-            kh = keys[occ_hits]
-            for j in range(occ_hits.size):
-                k = int(kh[j])
-                if k not in seen:
-                    seen.add(k)
-                    dmask[j] = True
-            upids, first_idx = np.unique(pids, return_index=True)
-            last_idx = total - 1 - np.unique(pids[::-1], return_index=True)[1]
-            _u, dcounts = np.unique(pids[np.repeat(dmask, counts)],
-                                    return_counts=True)
-            occ_of = np.repeat(occ_hits, counts)
-            # vectorized _match_type over all candidates at once: same
-            # arithmetic, same comparisons, same tie semantics as the
-            # scalar function (pinned equivalent by test)
-            to = dcounts / num_skips if num_skips else dcounts * 0.0
-            po = dcounts / idx.num_skips_arr[upids]
-            skip_starts = np.fromiter((s for _g, s, _l in skips),
-                                      dtype=np.int64, count=num_skips)
-            skip_ends = np.fromiter((s + l for _g, s, l in skips),
-                                    dtype=np.int64, count=num_skips)
-            f_occ = occ_of[first_idx]
-            l_occ = occ_of[last_idx]
-            ov_start = skip_starts[f_occ]
-            ov_end = skip_ends[l_occ]
-            len_tok = len(token_n)
-            len_pt = idx.len_arr[upids]
-            lv = np.where(to > po, len_tok - (ov_end - ov_start),
-                          len_pt - (ov_end - ov_start))
-            thr = tm.skipgram_threshold
-            mtlv = tm.max_token_length_variance
-            keep = (((to >= thr) | (po >= thr)) & (lv <= mtlv))
-            order = np.argsort(first_idx[keep], kind="stable")
-            k_pids = upids[keep][order]
-            full = np.abs(len_tok - len_pt[keep][order]) <= mtlv
-            of_phrase = len_tok < len_pt[keep][order]
-            for pid, isfull, isph in zip(k_pids.tolist(), full.tolist(),
-                                         of_phrase.tolist()):
-                out.append((idx.ptokens[pid],
-                            MatchType.FULL if isfull
-                            else (MatchType.PARTIAL_OF_PHRASE_TOKEN if isph
-                                  else MatchType.PARTIAL_OF_TEXT_TOKEN)))
-    else:
-        # per ptoken: [distinct gram set, first (start,len), last (s,l)]
-        matched: Dict[str, list] = {}
-        for gram, start, length in skips:
-            plist = tm.gram_to_ptokens.get(gram)
-            if not plist:
-                continue
-            for ptoken in plist:
-                ent = matched.get(ptoken)
-                if ent is None:
-                    matched[ptoken] = [{gram}, (start, length),
-                                       (start, length)]
-                else:
-                    ent[0].add(gram)
-                    ent[2] = (start, length)
-        for ptoken, (gram_set, first, last) in matched.items():
-            mtype = _match_type(token_n, num_skips, len(gram_set),
-                                first, last, ptoken, tm)
-            if mtype is not MatchType.NONE:
-                out.append((ptoken, mtype))
-    if len(cache) >= _PROBE_CACHE_MAX:
-        cache.clear()
-    cache[token_n] = out
+def _type_python(token_n: str, num_skips: int, matched: Dict[str, list],
+                 tm: TokenModel) -> List[Tuple[str, MatchType]]:
+    """``_accumulate_python``'s candidates typed, NONE dropped."""
+    out = []
+    for ptoken, (gram_set, first, last) in matched.items():
+        mtype = _match_type(token_n, num_skips, len(gram_set), first, last,
+                            ptoken, tm)
+        if mtype is not MatchType.NONE:
+            out.append((ptoken, mtype))
     return out
 
 
-def _probe_token(token_n: str, char_index: int, char_end_index: int,
-                 tm: TokenModel,
-                 within_offsets: bool = True) -> List[Tuple[str, MatchType]]:
-    """Skipgram probe of one text token, (phrase_token, match_type) in
-    first-gram-match order, with the per-occurrence offset filter and the
-    vocabulary distractor-pair filter applied over the memoized raw
-    probe."""
-    raw = _probe_token_raw(token_n, tm)
-    if token_n in tm.vocab_terms and tm.distractor_pairs:
-        raw = [(pt, mt) for pt, mt in raw
-               if (token_n, pt) not in tm.distractor_pairs]
-    if within_offsets and (tm.ptoken_max_start or tm.ptoken_max_end):
-        raw = [(pt, mt) for pt, mt in raw
-               if _within_offsets(tm, pt, char_index, char_end_index)]
-    return raw
+def _raw_probes(strings: Sequence[str],
+                tm: TokenModel) -> Dict[str, List[Tuple[str, MatchType]]]:
+    """Offset-free skipgram probes of the distinct ``strings`` (text tokens
+    outside the vocabulary cache), read through the per-process memo.  The
+    distractor-pair and within-offset exclusions are per-ptoken predicates
+    independent of the gram accumulation, so they apply as post-filters
+    (see _find_token_matches and compile_token_model) and the raw probe
+    caches cleanly — the Spark analog of the reference's vocabulary
+    skipgram-match cache (token_searcher.py:563-577,1095-1122).
+
+    The strings the memo lacks are probed together: one ``_probe_batch``
+    (NumPy) or, where ``probe_index`` is None, the Python loop per string.
+    The memo keeps at most ``_PROBE_CACHE_MAX`` entries (cleared when
+    full); the returned dict holds every string's probe even when one
+    call brings more strings than that."""
+    memo = tm.runtime_probe_cache
+    found: Dict[str, Optional[list]] = dict.fromkeys(strings)
+    new = []
+    for s in found:
+        hit = memo.get(s)
+        if hit is None:
+            new.append(s)
+        else:
+            found[s] = hit
+    if not new:
+        return found
+    if tm.probe_index is None:
+        probes = [_type_python(s, *_accumulate_python(s, tm), tm)
+                  for s in new]
+    else:
+        probes = _probe_batch(new, tm)
+    for s, probe in zip(new, probes):
+        found[s] = probe
+        if len(memo) >= _PROBE_CACHE_MAX:
+            memo.clear()
+        memo[s] = probe
+    return found
 
 
 def _match_type(token_n: str, num_skips: int, num_matched: int,
@@ -787,20 +977,30 @@ def _tokenize(text: str) -> List[Tok]:
 
 
 def _find_token_matches(tokens: List[Tok], tm: TokenModel) -> List[TokenMatch]:
-    """Per-token probe + partial-token chaining (token_searcher.py:579-730)."""
+    """Per-token probe + partial-token chaining (token_searcher.py:579-730).
+
+    Every distinct token outside the vocabulary cache is probed up front,
+    in one batch (``_raw_probes``); the loop then only reads probes and
+    applies the per-occurrence filters."""
     token_matches: List[TokenMatch] = []
     partials: Dict[str, List[Tok]] = {}
     cache = tm.vocab_cache
+    raw = _raw_probes([tok.n for tok in tokens if tok.n not in cache], tm)
+    offsets = tm.ptoken_max_start or tm.ptoken_max_end
     for tok in tokens:
-        cached = cache.get(tok.n)
-        if cached is not None:
+        entries = cache.get(tok.n)
+        if entries is None:
+            entries = raw[tok.n]
+            # a vocabulary term outside the cache: a distractor pair
+            # registered after compile (compat's index_distractor_pair)
+            if tok.n in tm.vocab_terms and tm.distractor_pairs:
+                entries = [(pt, mt) for pt, mt in entries
+                           if (tok.n, pt) not in tm.distractor_pairs]
+        if offsets:
             entries = [
-                (pt, mt) for pt, mt in cached
+                (pt, mt) for pt, mt in entries
                 if _within_offsets(tm, pt, tok.char_index, tok.char_end_index)
             ]
-        else:
-            entries = _probe_token(tok.n, tok.char_index, tok.char_end_index,
-                                   tm)
         for ptoken, mtype in entries:
             if mtype is MatchType.NONE:
                 continue

@@ -3,7 +3,8 @@ model-size story: at 10^3-10^4 phrases the token path must stay the fast
 route).  Single-core, no Spark — isolates kernel cost from scheduling.
 
 Usage: python scripts/token_phrase_scaling.py [sizes...]
-Prints one line per model size: phrases, compile_s, docs/s/core, matches.
+Prints one line per model size: phrases, compile_s, docs/s/core, matches,
+and the process's peak RSS so far (sizes run in the given order).
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ from __future__ import annotations
 import os
 import random
 import re
+import resource
 import sys
 import time
 
@@ -25,7 +27,9 @@ def load_texts(n_docs: int = 120):
     from fuzzy_search_spark.extract import extract_html
 
     corpus = None
-    for name in sorted(os.listdir(os.path.join(REPO, "fixtures"))):
+    fixtures = os.path.join(REPO, "fixtures")
+    for name in sorted(os.listdir(fixtures) if os.path.isdir(fixtures)
+                       else ()):
         if name.startswith("web_pages_"):
             corpus = os.path.join(REPO, "fixtures", name)
     if corpus is None:
@@ -100,7 +104,14 @@ def main():
             best = wall if best is None else min(best, wall)
         print(f"phrases={size:5d} compile={compile_s:6.2f}s "
               f"docs_per_sec_core={len(texts) / best:7.2f} "
-              f"mb_per_sec={chars / best / 1e6:6.2f} matches={n_matches}")
+              f"mb_per_sec={chars / best / 1e6:6.2f} matches={n_matches} "
+              f"peak_rss_mb={peak_rss_mb():.0f}")
+
+
+def peak_rss_mb() -> float:
+    """This process's peak resident set size so far, in MB (ru_maxrss
+    counts KiB on Linux)."""
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
 
 
 if __name__ == "__main__":

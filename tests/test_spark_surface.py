@@ -422,6 +422,33 @@ def test_resume_file_listing_drift(spark, pages4_path, tmp_path):
     assert s2["docs"] > s1["docs"]
 
 
+def test_extraction_job_broadcasts_model_once(spark, pages_path, tmp_path,
+                                              monkeypatch):
+    """run_extraction_job ships the model once per job, not once per group:
+    a 2-group run broadcasts it once, and a resumed run that skips every
+    group broadcasts it not at all."""
+    from pyspark import SparkContext
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    shipped = []
+    broadcast = SparkContext.broadcast
+
+    def counting_broadcast(self, value):
+        shipped.append(value)
+        return broadcast(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
+    out = str(tmp_path / "job_out")
+    s1 = run_extraction_job(spark, pages_path, out, model, num_groups=2)
+    assert s1["ran"] == [0, 1] and s1["matches"] > 0
+    assert sum(value is model for value in shipped) == 1
+    s2 = run_extraction_job(spark, pages_path, out, model, num_groups=2)
+    assert s2["skipped"] == [0, 1]
+    assert sum(value is model for value in shipped) == 1
+
+
 def test_template_matching_spark(spark, matches_df):
     """groupBy(url).applyInPandas template wrapper agrees with the local
     template engine on every document."""

@@ -6,8 +6,19 @@ Plan shape per group (one narrow stage unless the group is spread):
          Iceberg: the table scan filtered on its ``_file`` column)
       -> [only when the group owns fewer files than defaultParallelism]
          repartition on xxhash64(url), so its rows fill every core
-      -> mapInPandas(extract_html + find_matches)   [one Arrow-batched pass]
-      -> write the group's matches
+      -> mapInPandas(extract_html + find_matches   [one Arrow-batched pass]
+                     + pyarrow write of the task's own parquet file)
+      -> collect the names of the files written
+
+Parquet output is written inside the match task, not by Spark's parquet
+writer: each task writes its matches with pyarrow (row groups flushed as
+they fill) to a file under a unique attempt name in ``_staging/group=G/``
+and returns one row, the file's name and row count.  The driver then
+commits the group: it replaces ``matches/group=G/`` with exactly the files
+those rows name, by rename through one ``pyarrow.fs`` handle, removes the
+staging directory (with any failed or duplicate attempt's file) and only
+then writes the group's metrics file and manifest line.  Iceberg output
+still goes through the table writer.
 
 The compiled phrase model is broadcast once per job (`sc.broadcast`, before
 the first group that runs; every group's stage reads that one copy) — the
@@ -45,19 +56,25 @@ skips the call brings that cost back for every task of its stage.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
 import shutil
 import time
+import uuid
 from typing import Iterator, List, Optional, Sequence, Union
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from fuzzy_search_spark.extract import extract_html
 from fuzzy_search_spark.matcher import find_matches
@@ -125,16 +142,13 @@ def _read_iceberg(spark: SparkSession, table: str,
 
 def write_matches(matches: DataFrame, target: str,
                   table_format: str = "parquet") -> None:
-    """Write one group's matches idempotently.
+    """Write a matches DataFrame idempotently through Spark's writers (the
+    CLI's token mode; :func:`run_extraction_job` commits its own groups).
 
-    Parquet overwrites the group directory, so a re-run of an uncommitted
-    group replaces any partial output.  Iceberg uses
-    ``overwritePartitions()`` (dynamic partition overwrite): the incoming
-    rows' ``group`` partition value replaces that partition's previous
-    rows atomically, so a crash between the table commit and the manifest
-    line cannot leave duplicates when the group re-runs — the job-level
-    manifest only tells resume which groups to *skip*, it is not the
-    dedup mechanism."""
+    Parquet overwrites the directory, so a re-run replaces any partial
+    output.  Iceberg uses ``overwritePartitions()`` (dynamic partition
+    overwrite): the incoming rows' partition values replace those
+    partitions' previous rows atomically."""
     if table_format == "iceberg":
         matches.writeTo(target).overwritePartitions()
         return
@@ -156,6 +170,11 @@ MATCH_SCHEMA = T.StructType([
 ])
 
 _MATCH_COLUMNS = [f.name for f in MATCH_SCHEMA.fields]
+_ARROW_SCHEMA = to_arrow_schema(MATCH_SCHEMA)
+# the match stage's rows when it writes its own files (_match_broadcast)
+_PART_SCHEMA = T.StructType([T.StructField("file", T.StringType()),
+                             T.StructField("rows", T.LongType())])
+_ROW_GROUP_ROWS = 1 << 17   # matches per parquet row group a task buffers
 
 
 class _MetricsParam(AccumulatorParam):
@@ -214,24 +233,49 @@ def match_documents(df: DataFrame, model: CompiledModel,
     must be a deterministic top-level callable, it ships to executors).
     """
     return _match_broadcast(df, df.sparkSession.sparkContext.broadcast(model),
-                            model.config.ignorecase, url_col, text_col,
-                            html_col, chunk_chars, extractor, metrics_acc)
+                            find_matches, model.config.ignorecase, url_col,
+                            text_col, html_col, chunk_chars, extractor,
+                            metrics_acc)
 
 
-def _match_broadcast(df: DataFrame, bc_model, ignorecase: bool, url_col: str,
-                     text_col: str, html_col: Optional[str],
-                     chunk_chars: Optional[int], extractor,
-                     metrics_acc) -> DataFrame:
-    """:func:`match_documents` over a model already broadcast as
-    ``bc_model``, so :func:`run_extraction_job` ships it once per job, not
-    once per group."""
+def match_documents_tokens(df: DataFrame, token_model,
+                           url_col: str = "url", text_col: str = "text",
+                           html_col: Optional[str] = None,
+                           extractor=None) -> DataFrame:
+    """Token-level fuzzy match over a documents DataFrame (the fast,
+    slightly-less-exhaustive pipeline).  Same broadcast + mapInPandas shape
+    as match_documents; char/ngram scores are NULL by design (the token
+    searcher computes only the Levenshtein ratio)."""
+    from fuzzy_search_spark.token_matcher import find_token_matches
+
+    return _match_broadcast(
+        df, df.sparkSession.sparkContext.broadcast(token_model),
+        find_token_matches, False, url_col, text_col, html_col, None,
+        extractor, None)
+
+
+def _match_broadcast(df: DataFrame, bc_model, kernel, ignorecase: bool,
+                     url_col: str, text_col: str, html_col: Optional[str],
+                     chunk_chars: Optional[int], extractor, metrics_acc,
+                     staging: Optional[str] = None) -> DataFrame:
+    """The match stage of both pipelines over a model already broadcast as
+    ``bc_model`` (so :func:`run_extraction_job` ships it once per job, not
+    once per group): ``kernel(text, model)`` (``find_matches`` or
+    ``find_token_matches``) runs on each document with text.
+
+    Returns the matches (MATCH_SCHEMA), or, with ``staging``, writes them
+    from the task as one parquet file per partition under ``staging`` (a
+    unique name per task attempt; a partition without matches writes
+    none) and returns one row per file written: ``file`` (its name) and
+    ``rows``."""
     from fuzzy_search_spark.matcher import find_matches_chunked
 
     use_html = html_col is not None
     extract_fn = extractor if extractor is not None else extract_html
     cols = [url_col, text_col] + ([html_col] if use_html else [])
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def match_columns(batches: Iterator[pd.DataFrame]) -> Iterator[dict]:
+        """One dict of MATCH_SCHEMA columns per input batch with a match."""
         drop_zip_importers()
         compiled = bc_model.value
         t0 = time.monotonic()
@@ -253,7 +297,7 @@ def _match_broadcast(df: DataFrame, bc_model, ignorecase: bool, url_col: str,
                     doc_matches = find_matches_chunked(text, compiled,
                                                        chunk_chars)
                 else:
-                    doc_matches = find_matches(text, compiled)
+                    doc_matches = kernel(text, compiled)
                 for m in doc_matches:
                     matched += 1
                     out["url"].append(url)
@@ -267,67 +311,75 @@ def _match_broadcast(df: DataFrame, bc_model, ignorecase: bool, url_col: str,
                     out["char_match"].append(m.char_match)
                     out["ngram_match"].append(m.ngram_match)
                     out["levenshtein_similarity"].append(m.levenshtein_similarity)
-            if not out["url"]:
-                continue  # pandas 2.x types empty frames float64, which
-                # Arrow cannot convert to the list<string> label column
-            yield pd.DataFrame(out)
+            if out["url"]:
+                yield out
         if metrics_acc is not None:
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx else -1
             wall_ms = int((time.monotonic() - t0) * 1000)
             metrics_acc.add({pid: [docs, chars, matched, wall_ms]})
 
-    return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
-
-
-def match_documents_tokens(df: DataFrame, token_model,
-                           url_col: str = "url", text_col: str = "text",
-                           html_col: Optional[str] = None,
-                           extractor=None) -> DataFrame:
-    """Token-level fuzzy match over a documents DataFrame (the fast,
-    slightly-less-exhaustive pipeline).  Same broadcast + mapInPandas shape
-    as match_documents; char/ngram scores are NULL by design (the token
-    searcher computes only the Levenshtein ratio)."""
-    from fuzzy_search_spark.token_matcher import find_token_matches
-
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(token_model)
-    use_html = html_col is not None
-    extract_fn = extractor if extractor is not None else extract_html
-    cols = [url_col, text_col] + ([html_col] if use_html else [])
-
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
-        compiled = bc.value
-        for pdf in batches:
-            out = {c: [] for c in _MATCH_COLUMNS}
-            urls = pdf[url_col].tolist()
-            texts = pdf[text_col].tolist()
-            htmls = pdf[html_col].tolist() if use_html else None
-            for ri, url in enumerate(urls):
-                text = texts[ri]
-                if text is None and use_html:
-                    text = extract_fn(htmls[ri])
-                if not text:
-                    continue
-                for m in find_token_matches(text, compiled):
-                    out["url"].append(url)
-                    out["phrase"].append(m.phrase)
-                    out["variant"].append(m.variant)
-                    out["string"].append(m.string)
-                    out["offset"].append(m.offset)
-                    out["end"].append(m.end)
-                    out["label"].append(_label_list(m.label))
-                    out["ignorecase"].append(False)
-                    out["char_match"].append(m.char_match)
-                    out["ngram_match"].append(m.ngram_match)
-                    out["levenshtein_similarity"].append(
-                        m.levenshtein_similarity)
-            if not out["url"]:
-                continue  # see match_documents: empty-frame dtype trap
-            yield pd.DataFrame(out)
+        # only non-empty frames: pandas 2.x types empty frames float64,
+        # which Arrow cannot convert to the list<string> label column
+        return map(pd.DataFrame, match_columns(batches))
 
-    return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
+    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tables = (pa.Table.from_pydict(out, schema=_ARROW_SCHEMA)
+                  for out in match_columns(batches))
+        row_groups = _row_groups(tables, _ROW_GROUP_ROWS)
+        first = next(row_groups, None)
+        if first is None:
+            return
+        name = (f"part-{TaskContext.get().partitionId():05d}-"
+                f"{uuid.uuid4().hex}.parquet")
+        fs, root = pafs.FileSystem.from_uri(staging)
+        rows = 0
+        with pq.ParquetWriter(f"{root}/{name}", _ARROW_SCHEMA, filesystem=fs,
+                              store_schema=False) as writer:
+            for table in itertools.chain([first], row_groups):
+                writer.write_table(table)
+                rows += table.num_rows
+        yield pd.DataFrame({"file": [name], "rows": [rows]})
+
+    if staging is None:
+        return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
+    return df.select(*cols).mapInPandas(write, _PART_SCHEMA)
+
+
+def _row_groups(tables: Iterator[pa.Table], size: int) -> Iterator[pa.Table]:
+    """``tables`` concatenated into row groups of at least ``size`` rows
+    (the last one may hold fewer), so a task holds one row group at most."""
+    pending: List[pa.Table] = []
+    rows = 0
+    for table in tables:
+        pending.append(table)
+        rows += table.num_rows
+        if rows >= size:
+            yield pa.concat_tables(pending)
+            pending, rows = [], 0
+    if pending:
+        yield pa.concat_tables(pending)
+
+
+def _commit_group(fs: pafs.FileSystem, staging: str, target: str,
+                  parts: Sequence) -> int:
+    """Replace the directory ``target`` with exactly the staged files that
+    ``parts`` (the ``file``, ``rows`` rows of the match stage) name, by
+    rename, then remove ``staging`` with whatever else it holds: a failed
+    or duplicate attempt's file is never named.  A group without any
+    match gets one empty file, so its directory still carries the schema.
+    Returns the rows committed."""
+    fs.delete_dir_contents(target, missing_dir_ok=True)
+    fs.create_dir(target)
+    for part in parts:
+        fs.move(f"{staging}/{part['file']}", f"{target}/{part['file']}")
+    if not parts:
+        pq.write_table(_ARROW_SCHEMA.empty_table(),
+                       f"{target}/part-empty.parquet", filesystem=fs,
+                       store_schema=False)
+    fs.delete_dir(staging)
+    return sum(part["rows"] for part in parts)
 
 
 def _read_manifest(path: str) -> List[dict]:
@@ -420,9 +472,17 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
 
     Output layout:
         <output>/matches/group=G/*.parquet
+        <output>/_staging/group=G/         a running group's task files;
+                                           gone once the job ends
         <output>/_metrics/group=G.json     the group's files and
                                            per-partition lineage rows
         <output>/_manifest.jsonl           one line per committed group
+
+    A group commits in this order: its task files move from ``_staging``
+    into ``matches/group=G/`` (replacing what was there), its staging
+    directory goes, then ``_metrics/group=G.json`` and the manifest line
+    are written.  A crash before the line leaves a group that the next
+    run does again; that run also removes whatever ``_staging`` holds.
     """
     df = read_pages(spark, input_path, table_format)
     files = _list_input_files(spark, df, input_path, table_format)
@@ -455,6 +515,11 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     summary = {"groups": num_groups, "skipped": sorted(done), "ran": [],
                "fingerprint": fingerprint, "docs": 0, "matches": 0}
     cores = spark.sparkContext.defaultParallelism
+    if table_format != "iceberg":
+        # one handle for the staging and final directories of every group
+        fs, root = pafs.FileSystem.from_uri(
+            output_path if "://" in output_path
+            else os.path.abspath(output_path))
     bc_model = None         # broadcast once, before the first group that runs
     for group in range(num_groups):
         if group in done:
@@ -472,17 +537,21 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
             part = read_pages(spark, own, table_format, schema=df.schema)
         if 0 < len(own) < cores:
             part = part.repartition(cores, F.xxhash64(F.col(url_col)))
-        matches = _match_broadcast(part, bc_model, model.config.ignorecase,
-                                   url_col, text_col, html_col, chunk_chars,
-                                   extractor, acc)
-        if table_format == "iceberg":
+        staging = (None if table_format == "iceberg"
+                   else f"{root}/_staging/group={group}")
+        matches = _match_broadcast(part, bc_model, find_matches,
+                                   model.config.ignorecase, url_col, text_col,
+                                   html_col, chunk_chars, extractor, acc,
+                                   staging)
+        if staging is None:
             # replaces the group's earlier rows even when this run has none
             (matches.withColumn("group", F.lit(group)).writeTo(output_path)
              .overwrite(F.col("group") == group))
         else:
-            group_dir = os.path.join(output_path, "matches",
-                                     f"group={group}")
-            write_matches(matches, group_dir)
+            fs.create_dir(staging)
+            written = _commit_group(fs, staging,
+                                    f"{root}/matches/group={group}",
+                                    matches.collect())
         wall = time.monotonic() - t0
 
         partition_metrics = [
@@ -491,7 +560,8 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
             for pid, v in sorted(acc.value.items())
         ]
         docs = sum(m["docs"] for m in partition_metrics)
-        nmatches = sum(m["matches"] for m in partition_metrics)
+        nmatches = (written if staging is not None
+                    else sum(m["matches"] for m in partition_metrics))
         with open(os.path.join(metrics_dir, f"group={group}.json"), "w") as fh:
             json.dump({"group": group, "fingerprint": fingerprint,
                        "wall_s": wall, "docs": docs, "matches": nmatches,
@@ -504,6 +574,10 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
         summary["ran"].append(group)
         summary["docs"] += docs
         summary["matches"] += nmatches
+    if (table_format != "iceberg" and fs.get_file_info(
+            f"{root}/_staging").type != pafs.FileType.NotFound):
+        # the staging root, with whatever a crashed earlier run left in it
+        fs.delete_dir(f"{root}/_staging")
     return summary
 
 

@@ -334,16 +334,17 @@ def test_groups_own_disjoint_input_files(spark, pages4_path, tmp_path,
         assert m["docs"] == rows > 0
 
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    executions = store.executionsList()
-    plans = [executions.apply(i).physicalPlanDescription()
-             for i in range(seen, executions.size())]
-    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p
-              and os.path.join(out, "matches") in p]
-    assert len(writes) == 2
+    executions = [store.executionsList().apply(i)
+                  for i in range(seen, store.executionsList().size())]
+    # each group's match stage writes its own files and returns their
+    # names to the driver: one collect per group
+    plans = [e.physicalPlanDescription() for e in executions
+             if e.description().startswith("collect at ")]
+    assert len(plans) == 2
     spread_by_url = (f"hashpartitioning(xxhash64(url#",
                      f", {spark.sparkContext.defaultParallelism}), "
                      "REPARTITION_BY_NUM")
-    for plan in writes:
+    for plan in plans:
         assert "MapInPandas" in plan, plan
         exchanges = re.findall(r"\(\d+\) Exchange\n.*\nArguments: (.*)", plan)
         if spread:
@@ -447,6 +448,96 @@ def test_extraction_job_broadcasts_model_once(spark, pages_path, tmp_path,
     s2 = run_extraction_job(spark, pages_path, out, model, num_groups=2)
     assert s2["skipped"] == [0, 1]
     assert sum(value is model for value in shipped) == 1
+
+
+def test_extraction_job_output_schema_and_rows(spark, pages_path, tmp_path):
+    """The job's own parquet files read back as MATCH_SCHEMA plus the
+    ``group`` column, with the rows that match_documents gives written
+    through Spark's writer (write_matches): the same strings, offsets and
+    float scores, labels of one and two strings, and NULL labels."""
+    from pyspark.sql import types as T
+
+    from fuzzy_search_spark.spark.job import (
+        MATCH_SCHEMA,
+        match_documents,
+        read_pages,
+        run_extraction_job,
+        write_matches,
+    )
+
+    labels = {"PRAESIDE": "person", "Veneris": ["day", "weekday"]}
+    model = compile_model([dict(p, label=labels.get(p["phrase"]))
+                           for p in README_MODEL], README_CONFIG)
+    out = str(tmp_path / "job_out")
+    run_extraction_job(spark, pages_path, out, model, num_groups=2)
+    got = spark.read.parquet(os.path.join(out, "matches"))
+    assert got.schema == T.StructType(
+        MATCH_SCHEMA.fields + [T.StructField("group", T.IntegerType())])
+
+    ref = str(tmp_path / "ref")
+    write_matches(match_documents(read_pages(spark, pages_path), model,
+                                  html_col="html"), ref)
+    expect = sorted(map(tuple, spark.read.parquet(ref).collect()))
+    rows = sorted(map(tuple, got.drop("group").collect()))
+    assert rows == expect
+    assert {r[6] and tuple(r[6]) for r in rows} == {
+        None, ("person",), ("day", "weekday")}
+    assert all(isinstance(r[8], float) for r in rows)
+
+
+def test_interrupted_job_resumes_to_the_same_rows(spark, pages4_path,
+                                                  tmp_path):
+    """A job whose Spark jobs are cancelled once its first group has
+    committed (a watcher thread, as in perfbench's interrupt) resumes to
+    the rows of an uninterrupted run: the committed group is skipped, the
+    manifest lists each group once and no staged file is left behind."""
+    import json
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    whole = str(tmp_path / "whole")
+    run_extraction_job(spark, pages4_path, whole, model, num_groups=3)
+
+    out = str(tmp_path / "interrupted")
+    manifest = os.path.join(out, "_manifest.jsonl")
+    sc = spark.sparkContext
+    stop = threading.Event()
+
+    def watch():
+        while not stop.is_set():
+            if os.path.exists(manifest):
+                with open(manifest) as fh:
+                    if sum(1 for _ in fh) >= 1:
+                        sc.cancelJobGroup("test-interrupt")
+            stop.wait(0.005)
+
+    sc.setJobGroup("test-interrupt", "interrupted run", True)
+    watcher = threading.Thread(target=watch, daemon=True)
+    watcher.start()
+    try:
+        with pytest.raises(Py4JJavaError):
+            run_extraction_job(spark, pages4_path, out, model, num_groups=3)
+    finally:
+        stop.set()
+        watcher.join()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    s = run_extraction_job(spark, pages4_path, out, model, num_groups=3)
+    assert s["skipped"] and s["ran"]
+    assert sorted(s["skipped"] + s["ran"]) == [0, 1, 2]
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    with open(manifest) as fh:
+        assert sorted(json.loads(line)["group"] for line in fh) == [0, 1, 2]
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(
+            os.path.join(path, "matches")).collect()))
+
+    assert rows(out) == rows(whole)
 
 
 def test_template_matching_spark(spark, matches_df):

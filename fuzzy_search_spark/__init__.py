@@ -19,6 +19,8 @@ Architecture (Spark-first, not a port):
 - ``analysis/``  corpus-level DataFrame-native analytics (ngram freq, LLR,
                  skipgram similarity band-join)
 - ``pipeline/``  web-scale training-data ops (dedup, langid, quality, ANN)
+- ``compat``     the reference's Python API (searchers, PhraseModel,
+                 PhraseMatch) over the same engine
 """
 
 from fuzzy_search_spark.config import DEFAULT_CONFIG, effective_config

@@ -7,19 +7,13 @@ re-expressed as native DataFrame algebra.
   top-k.  The length-band predicate (|len(a)-len(b)| <= d) is the join
   prune that keeps the candidate set linear-ish, mirroring the reference's
   length buckets.
-- ``close_term_pairs``: KeywordList candidate pairs — a band join on term
-  length plus an edit-distance filter (built-in levenshtein).
-- ``word_cooccurrence``: SkipCooccurrence — position-window pair counts.
-- ``begin_end_similarity``: edit similarity of first/last k chars.
 
-Everything is JVM-side column algebra (gram generation included), so the
-same computations run bit-identically on the DuckDB correctness oracle.
+Everything is JVM-side column algebra (gram generation included).
 """
 
 from __future__ import annotations
 
 from itertools import combinations
-from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -161,72 +155,6 @@ def skipgram_similarity_topk_bucketed(terms_df: DataFrame,
         cos.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def close_term_pairs(terms_df: DataFrame, term_col: str = "term",
-                     max_distance: int = 2,
-                     max_length_diff: Optional[int] = None) -> DataFrame:
-    """Candidate close-term pairs: length-band self-join + edit-distance
-    filter (reference KeywordList, similarity.py:161-272)."""
-    if max_length_diff is None:
-        max_length_diff = max_distance
-    a = terms_df.select(F.col(term_col).alias("term_a"))
-    b = terms_df.select(F.col(term_col).alias("term_b"))
-    return (
-        a.join(b, F.col("term_a") < F.col("term_b"))
-        .filter(F.abs(F.length("term_a") - F.length("term_b"))
-                <= max_length_diff)
-        .withColumn("distance", F.levenshtein("term_a", "term_b"))
-        .filter(F.col("distance") <= max_distance)
-    )
-
-
-def word_cooccurrence(df: DataFrame, text_col: str = "text",
-                      window: int = 2, min_freq: int = 2) -> DataFrame:
-    """Ordered word-pair counts within a skip window (reference
-    SkipCooccurrence, similarity.py:96-158): (w1, w2, freq) for pairs at
-    position distance 1..window."""
-    words = F.split(F.lower(F.col(text_col)), r"\s+")
-    size = F.size(words)
-    # one zip over a shifted view per distance d — linear, vs the
-    # per-element slice(words, i+2, window) which allocates a window-sized
-    # array for every position
-    per_distance = []
-    for d in range(1, window + 1):
-        shifted = F.slice(words, d + 1, F.greatest(size - d, F.lit(1)))
-        zipped = F.zip_with(
-            words, shifted,
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
-        # the zip pads the tail with nulls; drop those pairs
-        per_distance.append(
-            F.filter(zipped, lambda s: s.getField("w2").isNotNull()))
-    pairs = (F.concat(*per_distance) if len(per_distance) > 1
-             else per_distance[0])
-    return (
-        df.select(F.explode(pairs).alias("p"))
-        .select("p.w1", "p.w2")
-        .filter((F.length("w1") > 0) & (F.length("w2") > 0))
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") >= min_freq)
-    )
-
-
-def begin_end_similarity(pairs_df: DataFrame, col_a: str = "term_a",
-                         col_b: str = "term_b", k: int = 3) -> DataFrame:
-    """Levenshtein similarity of the first and last k chars of term pairs
-    (reference similarity.py:51-93)."""
-    pre_a = F.substring(F.col(col_a), 1, k)
-    pre_b = F.substring(F.col(col_b), 1, k)
-    suf_a = F.substring(F.col(col_a), -k, k)
-    suf_b = F.substring(F.col(col_b), -k, k)
-
-    def sim(x, y):
-        denom = F.greatest(F.length(x), F.length(y))
-        return F.round(1 - F.levenshtein(x, y) / denom, 6)
-
-    return pairs_df.withColumn("begin_similarity", sim(pre_a, pre_b)) \
-                   .withColumn("end_similarity", sim(suf_a, suf_b))
 
 
 # ---------------------------------------------------------------------------

@@ -7,11 +7,9 @@ shortest combined symbol length.  The reference breaks remaining ties by
 set-iteration order (process-dependent); we use the lexicographically
 smallest pair, making training fully deterministic.
 
-Scale shape: the distributed part of BPE at 100 TB is the token-*type*
-histogram (one hash aggregation); the merge loop itself is inherently
-sequential and runs on the driver over the collected type histogram —
-k iterations of Spark-wide recounting would be the wrong plan
-(SURVEY.md §2.7).  ``bpe_from_corpus`` wires the two together.
+Scale shape: the merge loop is inherently sequential and runs on the
+driver over a token-*type* histogram — k iterations of Spark-wide
+recounting would be the wrong plan (SURVEY.md §2.7).
 """
 
 from __future__ import annotations
@@ -81,15 +79,10 @@ def train_bpe(token_counts: Dict[str, int], k: int):
     return vocab, merges
 
 
-def encode_bpe(token: str, merges: Sequence[Tuple[str, str]],
-               _rank: Dict[Tuple[str, str], int] = None) -> List[str]:
-    """Segment one token with a learned merge list (training-order greedy).
-
-    ``_rank`` lets batch callers (:func:`bpe_token_counts`) hoist the
-    pair-rank dict out of a per-word loop; semantics are identical."""
+def encode_bpe(token: str, merges: Sequence[Tuple[str, str]]) -> List[str]:
+    """Segment one token with a learned merge list (training-order greedy)."""
     symbols = list(token) + [" "]
-    rank = _rank if _rank is not None else {
-        pair: i for i, pair in enumerate(merges)}
+    rank = {pair: i for i, pair in enumerate(merges)}
     while True:
         best_rank, best_i = None, None
         for i, pair in enumerate(zip(symbols, symbols[1:])):
@@ -100,79 +93,6 @@ def encode_bpe(token: str, merges: Sequence[Tuple[str, str]],
             break
         symbols[best_i:best_i + 2] = [symbols[best_i] + symbols[best_i + 1]]
     return symbols
-
-
-def bpe_from_corpus(df, text_col: str = "text", k: int = 200,
-                    max_types: int = 50_000):
-    """Distributed token-type histogram -> driver-side BPE training.
-
-    Returns (vocab, merges).  ``max_types`` caps the histogram pulled to
-    the driver (most frequent types first; deterministic tie order)."""
-    from pyspark.sql import functions as F
-
-    hist = (
-        df.select(F.explode(F.split(F.lower(F.col(text_col)), r"\s+"))
-                  .alias("token"))
-        .filter(F.length("token") > 0)
-        .groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), "token")
-        .limit(max_types)
-        .collect()
-    )
-    return train_bpe({r.token: r.freq for r in hist}, k)
-
-
-def bpe_token_counts(df, merges: Sequence[Tuple[str, str]],
-                     id_col: str = "doc_id", text_col: str = "text"):
-    """Distributed BPE tokenization counts: apply a trained merge list to
-    every document and report (id, n_words, n_bpe_tokens, fertility).
-
-    ``fertility`` = BPE symbols per whitespace word (each word carries the
-    trainer's end-of-word marker symbol) — the standard "how well does
-    this vocabulary fit this corpus" diagnostic per language/source slice.
-
-    The encode loop is inherently sequential per word (greedy rank-order
-    merging), so this is one of the few sanctioned Python stages:
-    Arrow-batched mapInPandas, merge list shipped in the task closure
-    (broadcast-sized: k pairs), pair-rank dict hoisted per task, and a
-    per-batch word-type cache — web text repeats types heavily, so most
-    words are dict hits, not encode calls.  No shuffle at all: the op is
-    a narrow map over whatever partitioning the scan already has.
-    """
-    from pyspark.sql import functions as F
-
-    merges = list(merges)
-    schema = f"{id_col} long, n_words int, n_bpe_tokens int, fertility double"
-
-    def run(batches):
-        import pandas as pd
-
-        rank = {pair: i for i, pair in enumerate(merges)}
-        cache: Dict[str, int] = {}
-        for pdf in batches:
-            n_words_col, n_bpe_col = [], []
-            for text in pdf[text_col]:
-                words = [w for w in (text or "").lower().split() if w]
-                total = 0
-                for w in words:
-                    c = cache.get(w)
-                    if c is None:
-                        c = len(encode_bpe(w, merges, _rank=rank))
-                        cache[w] = c
-                    total += c
-                n_words_col.append(len(words))
-                n_bpe_col.append(total)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].astype("int64"),
-                "n_words": n_words_col,
-                "n_bpe_tokens": n_bpe_col,
-                "fertility": [round(b / w, 6) if w else 0.0
-                              for w, b in zip(n_words_col, n_bpe_col)],
-            })
-
-    return (df.select(F.col(id_col).cast("long").alias(id_col),
-                      F.col(text_col))
-            .mapInPandas(run, schema))
 
 
 # ---------------------------------------------------------------------------

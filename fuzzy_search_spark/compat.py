@@ -755,7 +755,7 @@ def make_searcher(phrases, config=None) -> FuzzyPhraseSearcher:
 def phrase_match_from_json(match_json: dict) -> PhraseMatchResult:
     """Reconstruct a PhraseMatchResult from its json() dict (reference
     phrase_match.py:378-399) — the round-trip counterpart of
-    PhraseMatchResult.json() and the sinks' match_json column."""
+    PhraseMatchResult.json()."""
     scores = match_json.get("match_scores") or {}
     m = Match(
         phrase=match_json["phrase"],

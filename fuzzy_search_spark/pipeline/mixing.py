@@ -126,7 +126,7 @@ def packing_plan(df: DataFrame, id_col: str = "doc_id",
     inside that bin.  Documents longer than ``max_tokens`` keep their
     full count and simply span bins (standard packed-sequence
     continuation); whitespace tokens stand in for tokenizer counts
-    (swap in bpe_token_counts output for exact budgets).
+    (swap in subword-tokenizer counts for exact budgets).
 
     Returns ``(doc_id, shard, pos, n_tokens, start_tok, bin_id,
     bin_offset)`` with ``bin_id`` numbered per shard.

@@ -23,11 +23,11 @@ page payload.  This module turns those bytes into the engine's canonical
   scale the WARC file (~1 GB gzipped) IS the natural partition unit: the
   scan parallelizes across files with zero shuffle, and skew is bounded by
   the archive writer's own file-size cap.
-* ``synth_warc_files`` — deterministic fixture generator used by tests and
-  the driver oracle: wraps the ``documents`` table into real WARC bytes so
-  the whole byte path (write -> gzip -> parse -> decode) is exercised, while
-  every output field stays SQL-reconstructable (payload is a fixed HTML
-  template around the escaped text).
+* ``synth_warc_files`` — deterministic fixture generator used by tests:
+  wraps a ``documents`` table into real WARC bytes so the whole byte path
+  (write -> gzip -> parse -> decode) is exercised, while every output field
+  stays reconstructable (payload is a fixed HTML template around the
+  escaped text).
 
 The reference library has no crawl-ingestion layer (it consumes extracted
 text); this source exists for the north rule's Common-Crawl-style input
@@ -302,8 +302,8 @@ def synth_warc_files(docs_df, n_files: int = 8, gzip_members: bool = True,
                      id_col: str = "doc_id", text_col: str = "text"):
     """Wrap a documents table into real WARC files, deterministically:
     url = ``https://example.org/<id>``, date = 2020-01-01 + id seconds,
-    payload = a fixed HTML template around the escaped text (so the DuckDB
-    oracle can reconstruct every parsed field in SQL).  One applyInPandas
+    payload = a fixed HTML template around the escaped text (so a test can
+    reconstruct every parsed field).  One applyInPandas
     group per output file — the only shuffle, and fixture-only."""
     import pandas as pd
     from pyspark.sql import functions as F

@@ -198,22 +198,6 @@ def _label_list(label) -> Optional[List[str]]:
     return list(label)
 
 
-def attach_extracted_text(df: DataFrame, html_col: str = "html",
-                          out_col: str = "text",
-                          extractor=None) -> DataFrame:
-    """Derive the extracted-text column from raw payload bytes
-    (Arrow-batched); ``extractor`` defaults to extract_html (see
-    match_documents for the alternatives)."""
-    extract_fn = extractor if extractor is not None else extract_html
-
-    @F.pandas_udf(T.StringType())
-    def _extract(html: pd.Series) -> pd.Series:
-        drop_zip_importers()
-        return html.map(extract_fn)
-
-    return df.withColumn(out_col, _extract(F.col(html_col)))
-
-
 def match_documents(df: DataFrame, model: CompiledModel,
                     url_col: str = "url", text_col: str = "text",
                     html_col: Optional[str] = None,
@@ -386,17 +370,21 @@ def _read_manifest(path: str) -> List[dict]:
     """The entries of the manifest at ``path`` (none if it is absent).
 
     A crash in the middle of an append leaves a last line that does not
-    parse.  Its group never committed, so the line is cut off the file and
-    the group runs again; the next append then starts on a line of its
-    own.  A line that does not parse anywhere else raises."""
+    parse, or one that parses but lacks its newline.  Either way its group
+    never committed, so the line is cut off the file and the group runs
+    again (and replaces its own output); the next append then starts on a
+    line of its own.  A line that does not parse anywhere else raises."""
     if not os.path.exists(path):
         return []
     with open(path, "rb") as fh:
         lines = fh.readlines()
     entries = [json.loads(line) for line in lines[:-1]]
     try:
-        entries += [json.loads(line) for line in lines[-1:]]
+        entries += [json.loads(line) for line in lines[-1:]
+                    if line.endswith(b"\n")]
     except ValueError:
+        pass
+    if len(entries) < len(lines):
         with open(path, "r+b") as fh:
             fh.truncate(sum(map(len, lines[:-1])))
     return entries
@@ -580,27 +568,3 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
         fs.delete_dir(f"{root}/_staging")
     return summary
 
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str = "url",
-                   num_buckets: int = 256, sort: bool = True,
-                   mode: str = "overwrite",
-                   table_format: str = "parquet") -> None:
-    """Persist a table bucketed (and sorted) by ``bucket_col`` so every
-    later equi-join or aggregation on that key is CO-LOCATED: both scans
-    read pre-hashed buckets and the join plans with ZERO Exchange
-    operators (pinned by test) instead of reshuffling 10^12 rows per
-    query.
-
-    This is the storage-layout half of the engine's scale story: the
-    pages table, the matches table and every per-url derived table share
-    one bucketing scheme, so url-keyed joins between them never shuffle
-    again — the shuffle is paid ONCE, at write time.  Requires a catalog
-    (`saveAsTable`); plain `.parquet(path)` cannot record bucket
-    metadata.  ``num_buckets`` should be sized so a bucket of the
-    largest table fits an executor's task comfortably (at 10^12 rows and
-    ~2 GB/task that is tens of thousands of buckets — bucket counts only
-    need to match between tables that join each other)."""
-    writer = df.write.bucketBy(num_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.mode(mode).format(table_format).saveAsTable(table)

@@ -2,7 +2,7 @@
 pure-Python shims from tests/oracle_shims) vs this engine's matcher, on
 the same extracted bench corpus with the README model.  Reported in
 BENCH/BASELINE.md ("Reference comparison"); rerun after any kernel change
-and update the template numbers in bench.py.
+and update the figures there.
 
 Usage: python scripts/reference_headtohead.py [n_docs]
 """

@@ -3,7 +3,7 @@ n-gram Jaccard near-dup pairs, exact embedding-cosine near-dup pairs, and
 the synthetic-payload multimodal path.
 
 Each test recomputes the expected result with an independent pure-Python
-oracle (hashlib / numpy), mirroring the DuckDB oracles the driver runs.
+oracle (hashlib / numpy).
 """
 
 import hashlib
@@ -828,32 +828,3 @@ def test_pq_train_refuses_below_k():
 
     with _pytest.raises(ValueError, match="training rows"):
         pq_train_local([1, 2, 3], [[0.0] * 8] * 3, m=2, k=16)
-
-
-def test_entry_pq_books_cache_is_transparent(spark):
-    """The driver queries memoize trained codebooks per sf_dir (training
-    is a build step); the cache must return exactly what a fresh train
-    returns — codebooks are deterministic on the data."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_cache_test",
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "__spark_entry__.py"))
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
-
-    sf_dir = "/root/testdata/sf0.001"
-    entry._PQ_BOOKS_CACHE.clear()
-    _, books_fresh = entry._pq_books(spark, sf_dir)
-    assert sf_dir in entry._PQ_BOOKS_CACHE
-    _, books_cached = entry._pq_books(spark, sf_dir)
-    assert books_cached == books_fresh
-
-    from fuzzy_search_spark.pipeline.ann import pq_train
-    from fuzzy_search_spark.pipeline.mixing import _bucket
-    emb = entry._embeddings(spark, sf_dir)
-    retrained = pq_train(emb.filter(_bucket("vec_id", "pq-v1") < 400_000),
-                         m=8, k=16, iters=2, dim=64)
-    assert retrained == books_fresh

@@ -278,33 +278,6 @@ def test_regex_token_stats_crafted(spark):
     assert out[2].subword_ratio == 1.0
 
 
-def test_bpe_token_counts_matches_python(spark):
-    """Distributed encode counts == pure-Python encode_bpe over the same
-    trained merges (and the hoisted-rank fast path is exercised)."""
-    from fuzzy_search_spark.analysis.subtoken import (bpe_token_counts,
-                                                      encode_bpe, train_bpe)
-
-    texts = {
-        1: "low lower lowest low low slow slower",
-        2: "new newer newest news new",
-        3: "low new low new wider wide",
-    }
-    hist = Counter(w for t in texts.values() for w in t.lower().split())
-    _, merges = train_bpe(dict(hist), 12)
-
-    df = spark.createDataFrame(list(texts.items()),
-                               "doc_id long, text string")
-    got = {r.doc_id: r for r in
-           bpe_token_counts(df.repartition(3), merges).collect()}
-    for doc_id, text in texts.items():
-        words = text.lower().split()
-        want = sum(len(encode_bpe(w, merges)) for w in words)
-        assert got[doc_id].n_words == len(words)
-        assert got[doc_id].n_bpe_tokens == want
-        assert got[doc_id].fertility == pytest.approx(
-            round(want / len(words), 6))
-
-
 # ---------------------------------------------------------------------------
 # plan-shape guards (scale regression pins for the round-3 ops)
 # ---------------------------------------------------------------------------
@@ -337,17 +310,6 @@ def test_projection_ops_have_no_exchange(spark):
         plan = _plan(df)
         assert "Exchange" not in plan, plan
         assert "Python" not in plan, plan
-
-
-def test_bpe_token_counts_is_narrow(spark):
-    """The distributed BPE encode is a narrow mapInPandas over the scan's
-    partitioning: no Exchange anywhere in the plan."""
-    from fuzzy_search_spark.analysis.subtoken import bpe_token_counts
-
-    out = bpe_token_counts(_docs(spark), [("b", "e"), ("be", "ta")])
-    plan = _plan(out)
-    assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
 
 
 def test_dup_span_ops_hash_aggregate_only(spark):

@@ -12,6 +12,7 @@ files still exclude a handful of tests that poke non-contract internals
 skipgram index layout) — those classes themselves are covered by the
 match_skip/match_candidate cases."""
 
+import importlib
 import os
 import subprocess
 import sys
@@ -19,10 +20,6 @@ import sys
 import pytest
 
 from tests.oracle import _REFERENCE_DIR, _SHIM_DIR, reference_available
-
-pytestmark = pytest.mark.skipif(
-    not reference_available(), reason="reference checkout not present"
-)
 
 # (ref module -> facade class) patch sets; kexpr excludes tests that poke
 # NON-CONTRACT INTERNALS (SkipMatches/CandidatePartial/PartialPhraseMatch
@@ -170,6 +167,25 @@ CASES = [
 ]
 
 
+def test_dropin_names_resolve():
+    """Every drop-in that CASES names imports and has its attribute, so a
+    module the reference suite needs cannot be deleted unnoticed while the
+    reference checkout is absent."""
+    missing = []
+    for case in CASES:
+        patch_sets = case.values[0]
+        for _ref_module, patches in patch_sets:
+            for mod_colon in patches.values():
+                mod, attr = mod_colon.split(":")
+                try:
+                    getattr(importlib.import_module(mod), attr)
+                except (ImportError, AttributeError) as exc:
+                    missing.append(f"{case.id}: {mod_colon} ({exc})")
+    assert not missing, missing
+
+
+@pytest.mark.skipif(not reference_available(),
+                    reason="reference checkout not present")
 @pytest.mark.parametrize("patch_sets,test_file,kexpr", CASES)
 def test_reference_suite_with_dropin(patch_sets, test_file, kexpr):
     patch_lines = []

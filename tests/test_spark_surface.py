@@ -1,5 +1,6 @@
-"""End-to-end Spark-surface tests: match job, context columns, sinks,
-streaming (availableNow), multimodal plumbing, pipeline ops.
+"""End-to-end Spark-surface tests: match job, context columns, resumable
+groups, CLI, multimodal plumbing, pipeline ops, vocabulary tables and
+skipgram similarity.
 
 One shared local[4] session; each test drives a real DataFrame action.
 """
@@ -82,79 +83,6 @@ def test_context_library_matches_spark(spark, pages_path, matches_df):
         ctxs = find_matches_with_context(text, model, context_size=10)
         assert [c["match"].string for c in ctxs][:2] == [
             "Veucris", "den 5. Januaris 1725"]
-
-
-def test_sinks(matches_df):
-    import json
-
-    from fuzzy_search_spark.sinks import to_match_json, to_web_annotations
-
-    row = to_match_json(matches_df).head()
-    payload = json.loads(row.match_json)
-    assert payload["type"] == "PhraseMatch"
-    assert {"phrase", "variant", "string", "offset", "match_scores"} <= set(payload)
-
-    anno = json.loads(to_web_annotations(matches_df).head().annotation)
-    assert anno["type"] == "Annotation"
-    assert anno["target"]["selector"][0]["type"] == "TextPositionSelector"
-
-
-def test_streaming_available_now(spark, pages_path, tmp_path):
-    from fuzzy_search_spark.streaming import stream_matches
-
-    model = compile_model(README_MODEL, README_CONFIG)
-    # file-source streaming wants a directory of files
-    stream_in = tmp_path / "stream_in"
-    stream_in.mkdir()
-    shutil.copy(pages_path, stream_in / "part-0.parquet")
-    out = str(tmp_path / "stream_out")
-    chk = str(tmp_path / "chk")
-    q = stream_matches(spark, str(stream_in), model, out, chk,
-                       available_now=True)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out)
-    n_first = first.count()
-    assert n_first > 0
-    # incremental: a new shard arrives; only its rows are appended
-    shutil.copy(pages_path, stream_in / "part-1.parquet")
-    q2 = stream_matches(spark, str(stream_in), model, out, chk,
-                        available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 2 * n_first
-
-
-def test_stream_matches_byte_equals_batch(spark, pages_path, tmp_path):
-    """The exactly-once claim, pinned: an availableNow stream_matches run
-    over sharded input produces BYTE-IDENTICAL rows to the batch
-    match_documents plan on the same pages (streaming is the batch plan
-    under readStream — same broadcast model, same mapInPandas kernel)."""
-    import shutil as _sh
-
-    from fuzzy_search_spark.spark.job import match_documents
-    from fuzzy_search_spark.streaming import stream_matches
-
-    model = compile_model(README_MODEL, README_CONFIG)
-    stream_in = tmp_path / "in"
-    stream_in.mkdir()
-    # two shards so the catch-up run spans multiple micro-batch files
-    _sh.copy(pages_path, stream_in / "part-0.parquet")
-    df = spark.read.parquet(pages_path)
-    extra = df.limit(17)
-    extra.write.mode("overwrite").parquet(str(tmp_path / "extra"))
-    for f in (tmp_path / "extra").glob("*.parquet"):
-        _sh.copy(f, stream_in / "part-1.parquet")
-    out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
-    q = stream_matches(spark, str(stream_in), model, out, chk,
-                       available_now=True)
-    q.awaitTermination(120)
-
-    batch_df = match_documents(
-        spark.read.parquet(str(stream_in)), model, html_col="html")
-    batch = sorted(map(str, batch_df.collect()))
-    streamed = sorted(map(str, spark.read.parquet(out)
-                          .select(*batch_df.columns).collect()))
-    assert len(batch) > 0
-    assert streamed == batch
 
 
 def test_multimodal_plumbing(spark, pages_path):
@@ -242,38 +170,52 @@ def test_resume_fingerprint_column_drift(spark, pages_path, tmp_path):
     assert s2["ran"] == [0, 1] and s2["skipped"] == []
 
 
-def test_resume_torn_manifest_line(spark, pages_path, tmp_path):
+def test_resume_torn_manifest_line(spark, pages4_path, tmp_path):
     """A crash in the middle of a manifest append leaves a partial last
-    line: resume re-runs that group and ends with the same output and a
-    clean manifest.  A bad line that is not the last still raises."""
+    line, or a whole line without its newline: resume re-runs that group
+    and every group after it, ends with the same output and a clean
+    manifest, and later runs keep reading it.  A bad line that is not the
+    last still raises."""
     import json
 
     from fuzzy_search_spark.spark.job import run_extraction_job
 
     out = str(tmp_path / "torn_out")
     model = compile_model(README_MODEL, README_CONFIG)
-    run_extraction_job(spark, pages_path, out, model, num_groups=2)
+
+    def run():
+        return run_extraction_job(spark, pages4_path, out, model,
+                                  num_groups=4)
 
     def rows():
         return sorted(map(str, spark.read.parquet(
             os.path.join(out, "matches")).collect()))
 
+    def groups():
+        with open(manifest) as fh:
+            return [json.loads(line)["group"] for line in fh]
+
+    run()
     expect = rows()
     manifest = os.path.join(out, "_manifest.jsonl")
     with open(manifest) as fh:
-        first, second = fh.readlines()
-    with open(manifest, "w") as fh:
-        fh.write(first + second[:len(second) // 2])
-    s = run_extraction_job(spark, pages_path, out, model, num_groups=2)
-    assert s["skipped"] == [0] and s["ran"] == [1]
-    assert rows() == expect
-    with open(manifest) as fh:
-        assert [json.loads(line)["group"] for line in fh] == [0, 1]
+        lines = fh.readlines()
+    torn = {
+        "cut mid-line": (lines[:3] + [lines[3][:len(lines[3]) // 2]], [3]),
+        "cut at newline": (lines[:1] + [lines[1].rstrip("\n")], [1, 2, 3]),
+    }
+    for name, (content, ran) in torn.items():
+        with open(manifest, "w") as fh:
+            fh.write("".join(content))
+        assert run()["ran"] == ran, name
+        assert rows() == expect, name
+        assert groups() == [0, 1, 2, 3], name
+        assert run()["skipped"] == [0, 1, 2, 3], name
 
     with open(manifest, "w") as fh:
-        fh.write(first[:len(first) // 2] + "\n" + second)
+        fh.write(lines[0][:len(lines[0]) // 2] + "\n" + "".join(lines[1:]))
     with pytest.raises(ValueError):
-        run_extraction_job(spark, pages_path, out, model, num_groups=2)
+        run()
 
 
 @pytest.fixture(scope="module")
@@ -771,14 +713,13 @@ def test_vocabulary_round_trip(spark):
 
 def test_analysis_plans_are_lazy(spark):
     """Regression guard for the de-eagered scalar-totals pattern: building
-    the spelling/frequency plans must trigger ZERO Spark jobs (totals are
+    the frequency plans must trigger ZERO Spark jobs (totals are
     broadcast one-row aggregates inside the DAG, not driver .head() calls),
     and the adaptive runtime reuses the shared aggregation exchange."""
     from fuzzy_search_spark.analysis.freq import (
         log_likelihood_ratio,
         ngram_probabilities,
     )
-    from fuzzy_search_spark.analysis.spelling import spelling_shifts
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta w{i % 7} beta") for i in range(40)],
@@ -790,10 +731,9 @@ def test_analysis_plans_are_lazy(spark):
     before = len(tracker.getJobIdsForGroup(None))
     p1 = ngram_probabilities(docs)
     p2 = log_likelihood_ratio(docs, docs2, min_freq=1)
-    p3 = spelling_shifts(docs, docs2, min_freq=1, similarity_threshold=0.1)
     after = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
     assert after == before, "plan construction ran eager Spark jobs"
-    assert p1.count() > 0 and p2.count() > 0 and p3.count() >= 0
+    assert p1.count() > 0 and p2.count() > 0
     p1.collect()
     final = p1._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final
@@ -901,34 +841,6 @@ def test_skipgram_similarity_bucketed_identical_and_debuckets_hot_grams(spark):
     assert hot >= 3 * hot_bucketed
 
 
-def test_spelling_shifts_similarity_injection(spark):
-    """An injected (term_a, term_b, similarity) table — the reference's
-    external-embedding hook — replaces the built-in skipgram cosine and is
-    honored in both orientations."""
-    from pyspark.sql import functions as F
-
-    from fuzzy_search_spark.analysis.spelling import spelling_shifts
-
-    c1 = spark.createDataFrame(
-        [(i, "aleph aleph aleph bet bet gimel") for i in range(6)],
-        "doc_id long, text string")
-    c2 = spark.createDataFrame(
-        [(i, "alef alef alef bet bet gimel") for i in range(6)],
-        "doc_id long, text string")
-    sims = spark.createDataFrame(
-        [("alef", "aleph", 0.9), ("gimel", "dalet", 0.8)],
-        "term_a string, term_b string, similarity double")
-    out = spelling_shifts(c1, c2, min_freq=1, similarity_threshold=0.5,
-                          similarity_df=sims).collect()
-    assert [(r["drop_word"], r["jump_word"], r["similarity"],
-             r["change_type"]) for r in out] == [
-        ("aleph", "alef", 0.9, "replace")]
-    # below-threshold pairs drop out
-    none = spelling_shifts(c1, c2, min_freq=1, similarity_threshold=0.95,
-                           similarity_df=sims)
-    assert none.count() == 0
-
-
 def test_extract_mode_main_in_job(spark, tmp_path):
     """--extract-mode main routes the DOM-heuristic extractor through the
     job, and a mode switch invalidates manifest resume (new fingerprint)."""
@@ -969,22 +881,20 @@ def test_extract_mode_main_in_job(spark, tmp_path):
 
 
 def test_single_scan_pattern_and_ngram_plans(spark):
-    """Plan guards: multi-pattern extraction and multi-order ngram counts
-    read the corpus ONCE (tagged-array explode), not once per pattern or
-    order (unionAll re-scans)."""
+    """Plan guard: multi-order ngram counts read the corpus ONCE
+    (tagged-array explode), not once per order (unionAll re-scans)."""
     from pyspark.sql import functions as F
 
     from fuzzy_search_spark.analysis.freq import word_ngram_counts
-    from fuzzy_search_spark.patterns import extract_patterns
 
     docs = spark.createDataFrame(
         [(i, f"u{i}", "the cat sat on the mat in Amsterdam 1725")
          for i in range(10)],
         "doc_id long, url string, text string")
-    for df in (extract_patterns(docs), word_ngram_counts(docs, max_n=3)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        scans = plan.count("Scan parquet") + plan.count("Scan ExistingRDD")
-        assert scans == 1 and "Union" not in plan
+    plan = word_ngram_counts(docs, max_n=3)._jdf.queryExecution() \
+        .executedPlan().toString()
+    scans = plan.count("Scan parquet") + plan.count("Scan ExistingRDD")
+    assert scans == 1 and "Union" not in plan
     # the order tag must be the ngram order, not the array index
     counts = word_ngram_counts(docs, max_n=3)
     per_n = {r["n"]: r["total"] for r in counts.groupBy("n").agg(
@@ -1044,41 +954,6 @@ def test_match_documents_matchless_batch(spark):
     out = match_documents(docs, model)
     assert out.count() == 0
     assert out.schema["label"].dataType.simpleString() == "array<string>"
-
-
-def test_bucketed_join_is_colocated(spark, tmp_path):
-    """write_bucketed tables join with ZERO Exchange operators — the
-    shuffle is paid once at write time, not per query (the 100-TB layout
-    story); the same join over unbucketed frames shuffles both sides."""
-    from fuzzy_search_spark.spark.job import write_bucketed
-
-    old_wh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        pages = spark.range(500).selectExpr(
-            "concat('u', id) AS url", "id AS x")
-        matches = spark.range(1500).selectExpr(
-            "concat('u', id % 500) AS url", "id AS m")
-        write_bucketed(pages, "pages_b", num_buckets=8)
-        write_bucketed(matches, "matches_b", num_buckets=8)
-
-        j = spark.table("pages_b").join(spark.table("matches_b"), "url")
-        assert j.count() == 1500
-        plan = j._jdf.queryExecution().executedPlan().toString() \
-            .split("== Initial Plan ==")[0]
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-
-        j2 = pages.join(matches, "url")
-        j2.count()
-        plan2 = j2._jdf.queryExecution().executedPlan().toString() \
-            .split("== Initial Plan ==")[0]
-        assert plan2.count("Exchange") >= 2
-    finally:
-        spark.sql("DROP TABLE IF EXISTS pages_b")
-        spark.sql("DROP TABLE IF EXISTS matches_b")
-        if old_wh is not None:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_wh)
 
 
 def test_match_job_plan_is_narrow(spark, pages_path):

@@ -41,20 +41,6 @@ def char_ngrams(text: str, n: int) -> List[str]:
     return [padded[i:i + n] for i in range(len(padded) - n + 1)]
 
 
-def _multiset_overlap(items1, items2) -> int:
-    """Sum of per-key minimum counts (hot path: plain dicts beat Counter)."""
-    bag = {}
-    for item in items1:
-        bag[item] = bag.get(item, 0) + 1
-    overlap = 0
-    for item in items2:
-        remaining = bag.get(item, 0)
-        if remaining:
-            bag[item] = remaining - 1
-            overlap += 1
-    return overlap
-
-
 @lru_cache(maxsize=65536)
 def _bag_of(items_key) -> dict:
     """Frozen count-bag of a string or tuple of grams; term1 in the score
@@ -185,15 +171,6 @@ def non_word_prefix(s: str) -> str:
         return s[:2]
     if s[:1] in NON_WORD_AFFIXES_1:
         return s[:1]
-    return ""
-
-
-def non_word_suffix(s: str) -> str:
-    """The trailing non-word affix of ``s``."""
-    if s[-2:] in NON_WORD_AFFIXES_2:
-        return s[-2:]
-    if s[-1:] in NON_WORD_AFFIXES_1:
-        return s[-1:]
     return ""
 
 

@@ -12,7 +12,7 @@ Semantics anchors: skip_match.py:21-75, candidate_match.py:44-330.
 from __future__ import annotations
 
 from collections import Counter, defaultdict
-from typing import Dict, List, Optional, Union
+from typing import Dict, Optional
 
 
 class SkipMatches:
@@ -101,17 +101,6 @@ def get_match_start_offset(candidate: CandidatePartial) -> Optional[int]:
     first_in_phrase = candidate.skipgram_index[first_skip.string][0]
     offset = first_skip.start_offset - first_in_phrase.start_offset
     return 0 if offset < 0 else offset
-
-
-def get_match_string(candidate: CandidatePartial,
-                     text: Dict[str, object]) -> Optional[str]:
-    """Slice of the text spanned by the candidate
-    (candidate_match.py:316-330)."""
-    if candidate.match_start_offset is None or \
-            candidate.match_start_offset < 0:
-        return None
-    return text["text"][candidate.match_start_offset:
-                        candidate.match_end_offset]
 
 
 def get_skip_match_length(candidate: CandidatePartial) -> int:

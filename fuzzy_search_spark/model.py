@@ -240,16 +240,3 @@ def compile_model(phrases: Sequence[Union[str, dict]],
         phrase_type=phrase_type,
         scanner=scanner,
     )
-
-
-def load_model_json(path: str, config: Optional[dict] = None) -> CompiledModel:
-    """Load a phrase model from a JSON file: either a list of phrase dicts or
-    ``{"config": {...}, "phrases": [...]}``."""
-    with open(path, "r", encoding="utf-8") as fh:
-        payload = json.load(fh)
-    if isinstance(payload, dict):
-        merged = dict(payload.get("config") or {})
-        if config:
-            merged.update(config)
-        return compile_model(payload["phrases"], merged)
-    return compile_model(payload, config)

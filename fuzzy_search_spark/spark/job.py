@@ -28,14 +28,25 @@ against the huge stream side (documents) inside the UDF.
 Resumability: the job lists its input files once, sorts the listing and
 splits it into ``num_groups`` groups; group ``g`` owns ``files[g::num_groups]``
 and reads only those files, so the table is scanned once over the whole job.
+The listing runs no Spark job: parquet is listed through a read given a
+schema, and each group reads the columns it matches on with the types the
+first file's footer gives them, so no read infers a schema.
 Each group commits its output directory plus a manifest line (group id,
-fingerprint, row counts, wall time).  A restarted job re-reads the manifest
+fingerprint, row counts, wall time).  Lines are appended in the order the
+groups commit, not in group order.  A restarted job re-reads the manifest
 and skips each group whose newest line carries the current fingerprint.  A
 change of model, config, extractor, input column names, group count or file
 listing changes the fingerprint and invalidates old groups; groups beyond
 the current count are removed.  A document is
 never split across tasks, so a giant document still lands in one task
 (chunk_chars bounds its memory, not its time).
+
+Concurrency: two groups are in flight at a time (Iceberg, whose concurrent
+table commits are untested here: one), each submitted from its own driver
+thread that carries the caller's local properties (job group, tags) and
+sets its own job description.  Spark's default FIFO scheduler runs the
+first group's tasks first; the second group's fill the cores the first
+leaves idle while its job starts, its last tasks run and it commits.
 
 Lineage/metrics: a dict accumulator collects one row per *partition*
 (docs, chars, matches, wall_ms) from inside the UDF; the driver persists
@@ -60,8 +71,10 @@ import itertools
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator, List, Optional, Sequence, Union
 
 import pandas as pd
@@ -69,12 +82,12 @@ import pyarrow as pa
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
-from pyspark import TaskContext
+from pyspark import TaskContext, inheritable_thread_target
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 
 from fuzzy_search_spark.extract import extract_html
 from fuzzy_search_spark.matcher import find_matches
@@ -86,8 +99,9 @@ def read_pages(spark: SparkSession, input_path: Union[str, Sequence[str]],
                schema: Optional[T.StructType] = None) -> DataFrame:
     """Read the web-pages table.  ``input_path`` is one path or, for
     ``parquet`` and ``warc``, a list of paths (the files of one group of
-    :func:`run_extraction_job`).  ``schema`` (parquet) is the table's schema
-    when the caller already has it, so the read infers none.
+    :func:`run_extraction_job`).  ``schema`` (parquet) is the schema to
+    read, columns and types, when the caller already has it, so the read
+    infers none.
     ``table_format``:
 
     - ``parquet`` (default): a parquet directory or file path(s).
@@ -390,16 +404,48 @@ def _read_manifest(path: str) -> List[dict]:
     return entries
 
 
-def _list_input_files(spark: SparkSession, df: DataFrame, input_path: str,
+def _list_input_files(spark: SparkSession, input_path: str,
                       table_format: str) -> List[str]:
-    """The sorted data files of the input table.  ``inputFiles()`` lists
-    parquet and WARC inputs; an Iceberg table lists none through it, so its
-    data files come from the table's ``files`` metadata table."""
+    """The sorted data files of the input table.  Parquet is listed through
+    a read given a schema, so it runs no schema-inference job; WARC through
+    ``binaryFile``, whose schema is fixed.  An Iceberg table lists none
+    through ``inputFiles()``, so its data files come from the table's
+    ``files`` metadata table.  A parquet or WARC input without files
+    raises."""
     if table_format == "iceberg":
         meta = _read_iceberg(spark, input_path, "files")
         return sorted(r.file_path for r in meta.filter("content = 0")
                       .select("file_path").collect())
-    return sorted(df.inputFiles())
+    if table_format == "warc":
+        reader = spark.read.format("binaryFile")
+    else:
+        # any schema will do: only the listing is used
+        reader = spark.read.format(table_format).schema("url string")
+    files = sorted(reader.load(input_path).inputFiles())
+    if not files:
+        raise ValueError(f"no input files under {input_path!r}")
+    return files
+
+
+def _read_schema(spark: SparkSession, first_file: str,
+                 columns: Sequence[str]) -> T.StructType:
+    """The Spark types of ``columns`` (those the footer of the parquet file
+    ``first_file`` has; names match as Spark's do, ignoring case) as
+    Spark's own inference gives them, read from that footer with no Spark
+    job.  Only these columns: converting the whole footer would type a
+    naive timestamp as ``timestamp`` where Spark infers ``timestamp_ntz``,
+    and hand the read a nanosecond timestamp that Spark cannot read."""
+    wanted = {c.lower() for c in columns}
+    try:
+        fs, path = pafs.FileSystem.from_uri(first_file)
+    except (pa.ArrowInvalid, OSError):
+        # a scheme pyarrow has no filesystem for (s3a://, ...): let Spark
+        # infer the schema, at the cost of its job
+        return T.StructType([f for f in spark.read.parquet(first_file).schema
+                             if f.name.lower() in wanted])
+    return T.StructType([T.StructField(f.name, from_arrow_type(f.type))
+                         for f in pq.read_schema(path, filesystem=fs)
+                         if f.name.lower() in wanted])
 
 
 def _drop_groups_from(spark: SparkSession, output_path: str, num_groups: int,
@@ -449,6 +495,11 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
                        extractor=None) -> dict:
     """End-to-end resumable job: read -> (extract) -> match -> write.
 
+    The input is listed once, with no Spark job (parquet: a read given a
+    schema; WARC: ``binaryFile``).  A parquet group reads only the columns
+    it matches on, typed from the first file's footer, so no group infers
+    a schema either; the job never reads any other column.
+
     Group ``g`` reads only ``files[g::num_groups]`` of the sorted input
     listing, in one narrow stage; a group that owns no file commits an
     empty output with ``docs`` = 0.  A task reads whole files (WARC does
@@ -458,13 +509,22 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     the cost of one shuffle of the group's rows.  Groups >= ``num_groups``
     that an earlier run left in ``output_path`` are removed first.
 
+    Two groups are in flight at a time (Iceberg: one), each from its own
+    driver thread with the caller's local properties (job group, tags)
+    and a job description ``fuzzy-spark group G/N``.  Under Spark's FIFO
+    scheduler the second group's tasks fill the cores while the first
+    starts, runs its last tasks and commits.  If a group fails, no further
+    group starts; the one still in flight finishes and commits, and then
+    the first error is raised.
+
     Output layout:
         <output>/matches/group=G/*.parquet
         <output>/_staging/group=G/         a running group's task files;
                                            gone once the job ends
         <output>/_metrics/group=G.json     the group's files and
                                            per-partition lineage rows
-        <output>/_manifest.jsonl           one line per committed group
+        <output>/_manifest.jsonl           one line per committed group,
+                                           in the order they committed
 
     A group commits in this order: its task files move from ``_staging``
     into ``matches/group=G/`` (replacing what was there), its staging
@@ -472,8 +532,7 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     are written.  A crash before the line leaves a group that the next
     run does again; that run also removes whatever ``_staging`` holds.
     """
-    df = read_pages(spark, input_path, table_format)
-    files = _list_input_files(spark, df, input_path, table_format)
+    files = _list_input_files(spark, input_path, table_format)
 
     fingerprint = model.fingerprint()
     if extractor is not None:
@@ -499,30 +558,46 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     if resume:
         done = {group for group, entry in newest.items()
                 if entry.get("fingerprint") == fingerprint}
+    todo = [group for group in range(num_groups) if group not in done]
 
     summary = {"groups": num_groups, "skipped": sorted(done), "ran": [],
                "fingerprint": fingerprint, "docs": 0, "matches": 0}
-    cores = spark.sparkContext.defaultParallelism
-    if table_format != "iceberg":
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    if table_format == "iceberg":
+        table = read_pages(spark, input_path, table_format)
+    else:
+        schema = (_read_schema(spark, files[0],
+                               [c for c in (url_col, text_col, html_col) if c])
+                  if table_format == "parquet" else None)
         # one handle for the staging and final directories of every group
         fs, root = pafs.FileSystem.from_uri(
             output_path if "://" in output_path
             else os.path.abspath(output_path))
-    bc_model = None         # broadcast once, before the first group that runs
-    for group in range(num_groups):
-        if group in done:
-            continue
-        if bc_model is None:
-            bc_model = spark.sparkContext.broadcast(model)
+    # broadcast once, before the first group, from the caller's thread
+    bc_model = sc.broadcast(model) if todo else None
+    lock = threading.Lock()     # the manifest and the summary
+    errors: List[BaseException] = []
+
+    def guarded(group: int) -> None:
+        if errors:
+            return              # a group failed: start no further group
+        try:
+            run_group(group)
+        except BaseException as exc:
+            errors.append(exc)
+
+    def run_group(group: int) -> None:
+        sc.setJobDescription(f"fuzzy-spark group {group}/{num_groups}")
         t0 = time.monotonic()
-        acc = spark.sparkContext.accumulator({}, _MetricsParam())
+        acc = sc.accumulator({}, _MetricsParam())
         own = files[group::num_groups]
         if table_format == "iceberg":
             # assumes Iceberg prunes data files on a `_file` predicate;
             # unchecked, since no Iceberg runtime is at hand
-            part = df.filter(F.col("_file").isin(own))
+            part = table.filter(F.col("_file").isin(own))
         else:
-            part = read_pages(spark, own, table_format, schema=df.schema)
+            part = read_pages(spark, own, table_format, schema=schema)
         if 0 < len(own) < cores:
             part = part.repartition(cores, F.xxhash64(F.col(url_col)))
         staging = (None if table_format == "iceberg"
@@ -555,16 +630,26 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
                        "wall_s": wall, "docs": docs, "matches": nmatches,
                        "files": own, "partitions": partition_metrics},
                       fh, indent=1)
-        with open(manifest_path, "a") as fh:
-            fh.write(json.dumps({
-                "group": group, "fingerprint": fingerprint, "docs": docs,
-                "matches": nmatches, "wall_s": round(wall, 3)}) + "\n")
-        summary["ran"].append(group)
-        summary["docs"] += docs
-        summary["matches"] += nmatches
+        with lock:
+            with open(manifest_path, "a") as fh:
+                fh.write(json.dumps({
+                    "group": group, "fingerprint": fingerprint, "docs": docs,
+                    "matches": nmatches, "wall_s": round(wall, 3)}) + "\n")
+            summary["ran"].append(group)
+            summary["docs"] += docs
+            summary["matches"] += nmatches
+
+    with ThreadPoolExecutor(1 if table_format == "iceberg" else 2) as pool:
+        for group in todo:
+            # wrapped one by one: each copy of the caller's properties is
+            # its own, so a group's job description stays on its jobs
+            pool.submit(inheritable_thread_target(spark)(guarded), group)
     if (table_format != "iceberg" and fs.get_file_info(
             f"{root}/_staging").type != pafs.FileType.NotFound):
-        # the staging root, with whatever a crashed earlier run left in it
+        # the staging root, with what a failed group or a crashed earlier
+        # run left in it
         fs.delete_dir(f"{root}/_staging")
+    if errors:
+        raise errors[0]
+    summary["ran"].sort()
     return summary
-

@@ -172,10 +172,11 @@ def test_resume_fingerprint_column_drift(spark, pages_path, tmp_path):
 
 def test_resume_torn_manifest_line(spark, pages4_path, tmp_path):
     """A crash in the middle of a manifest append leaves a partial last
-    line, or a whole line without its newline: resume re-runs that group
-    and every group after it, ends with the same output and a clean
-    manifest, and later runs keep reading it.  A bad line that is not the
-    last still raises."""
+    line, or a whole line without its newline: resume re-runs the group of
+    every line cut off (lines are in commit order, so the groups are read
+    from the lines), ends with the same output and a clean manifest that
+    lists each group once, and later runs keep reading it.  A bad line
+    that is not the last still raises."""
     import json
 
     from fuzzy_search_spark.spark.job import run_extraction_job
@@ -200,16 +201,19 @@ def test_resume_torn_manifest_line(spark, pages4_path, tmp_path):
     manifest = os.path.join(out, "_manifest.jsonl")
     with open(manifest) as fh:
         lines = fh.readlines()
+    assert sorted(groups()) == [0, 1, 2, 3]
     torn = {
-        "cut mid-line": (lines[:3] + [lines[3][:len(lines[3]) // 2]], [3]),
-        "cut at newline": (lines[:1] + [lines[1].rstrip("\n")], [1, 2, 3]),
+        "cut mid-line": (lines[:3] + [lines[3][:len(lines[3]) // 2]],
+                         lines[3:]),
+        "cut at newline": (lines[:1] + [lines[1].rstrip("\n")], lines[1:]),
     }
-    for name, (content, ran) in torn.items():
+    for name, (content, cut) in torn.items():
         with open(manifest, "w") as fh:
             fh.write("".join(content))
-        assert run()["ran"] == ran, name
+        assert run()["ran"] == sorted(json.loads(line)["group"]
+                                      for line in cut), name
         assert rows() == expect, name
-        assert groups() == [0, 1, 2, 3], name
+        assert sorted(groups()) == [0, 1, 2, 3], name
         assert run()["skipped"] == [0, 1, 2, 3], name
 
     with open(manifest, "w") as fh:
@@ -279,10 +283,13 @@ def test_groups_own_disjoint_input_files(spark, pages4_path, tmp_path,
     executions = [store.executionsList().apply(i)
                   for i in range(seen, store.executionsList().size())]
     # each group's match stage writes its own files and returns their
-    # names to the driver: one collect per group
-    plans = [e.physicalPlanDescription() for e in executions
-             if e.description().startswith("collect at ")]
-    assert len(plans) == 2
+    # names to the driver: one execution per group, under its description
+    groups = sorted((e.description(), e.physicalPlanDescription())
+                    for e in executions
+                    if e.description().startswith("fuzzy-spark group "))
+    assert [d for d, _ in groups] == ["fuzzy-spark group 0/2",
+                                      "fuzzy-spark group 1/2"]
+    plans = [plan for _, plan in groups]
     spread_by_url = (f"hashpartitioning(xxhash64(url#",
                      f", {spark.sparkContext.defaultParallelism}), "
                      "REPARTITION_BY_NUM")
@@ -299,20 +306,31 @@ def test_groups_own_disjoint_input_files(spark, pages4_path, tmp_path,
 
 def test_more_groups_than_files(spark, pages4_path, tmp_path):
     """Groups that own no file still commit, with docs = 0, and a second
-    run skips every group."""
+    run skips every group.  The groups run two at a time, with threads
+    switched often: the summary's totals are the sums of the manifest's
+    lines, one line per group."""
     import json
+    import sys
 
     from fuzzy_search_spark.spark.job import run_extraction_job
 
     model = compile_model(README_MODEL, README_CONFIG)
     out = str(tmp_path / "sparse_out")
-    s1 = run_extraction_job(spark, pages4_path, out, model, num_groups=6)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        s1 = run_extraction_job(spark, pages4_path, out, model, num_groups=6)
+    finally:
+        sys.setswitchinterval(interval)
     assert s1["ran"] == list(range(6)) and s1["docs"] > 0
     assert [m["docs"] for m in _group_metrics(out, 6)][4:] == [0, 0]
     with open(os.path.join(out, "_manifest.jsonl")) as fh:
         manifest = [json.loads(line) for line in fh]
-    assert [e["group"] for e in manifest] == list(range(6))
-    assert [e["docs"] for e in manifest][4:] == [0, 0]
+    assert sorted(e["group"] for e in manifest) == list(range(6))
+    assert s1["docs"] == sum(e["docs"] for e in manifest)
+    assert s1["matches"] == sum(e["matches"] for e in manifest) > 0
+    docs = {e["group"]: e["docs"] for e in manifest}
+    assert [docs[4], docs[5]] == [0, 0]
     assert spark.read.parquet(os.path.join(out, "matches")).count() > 0
     s2 = run_extraction_job(spark, pages4_path, out, model, num_groups=6)
     assert s2["ran"] == [] and s2["skipped"] == list(range(6))
@@ -481,6 +499,183 @@ def test_interrupted_job_resumes_to_the_same_rows(spark, pages4_path,
 
     assert rows(out) == rows(whole)
 
+
+
+def test_groups_run_together_under_the_callers_job_group(spark, tmp_path,
+                                                         monkeypatch):
+    """Each group's job runs from its own thread with the caller's local
+    properties: on an input where every group takes the narrow path (8
+    files, 2 groups, local[4]) the caller's job group holds exactly one
+    Spark job per group, and no other (no schema inference, no listing).
+    The two groups are in flight together and commit in any order: group
+    0's commit waits until group 1 has committed, and the manifest lists
+    group 1 first."""
+    import json
+    import time
+
+    from fuzzy_search_spark.spark import job
+
+    pages = str(tmp_path / "pages")
+    write_web_pages_parquet(pages, n_bulk=60, n_files=8, tail_docs_per_1k=0)
+    out = str(tmp_path / "out")
+    manifest = os.path.join(out, "_manifest.jsonl")
+    commit = job._commit_group
+
+    def groups():
+        if not os.path.exists(manifest):
+            return []
+        with open(manifest) as fh:
+            return [json.loads(line)["group"] for line in fh]
+
+    def commit_after_group_1(fs, staging, target, parts):
+        deadline = time.monotonic() + 20
+        while (target.endswith("group=0") and 1 not in groups()
+               and time.monotonic() < deadline):
+            time.sleep(0.01)
+        return commit(fs, staging, target, parts)
+
+    monkeypatch.setattr(job, "_commit_group", commit_after_group_1)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-groups", "a caller's job group")
+    try:
+        s = job.run_extraction_job(spark, pages, out,
+                                   compile_model(README_MODEL, README_CONFIG),
+                                   num_groups=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["ran"] == [0, 1] and s["docs"] > 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("test-groups")) == 2
+    assert groups() == [1, 0]
+
+
+@pytest.mark.parametrize("html_type", ["binary", "string"])
+def test_footer_schema_and_rows(spark, pages_path, tmp_path, monkeypatch,
+                                html_type):
+    """The read schema comes from the first file's footer, for the columns
+    the job reads only, and equals Spark's own inference on them: html as
+    binary or string, and an all-NULL string text (so every document is
+    extracted from html).  The naive timestamp warc_ts, which a conversion
+    of the whole footer would type as timestamp instead of Spark's
+    timestamp_ntz, is not read; the job's rows equal match_documents +
+    write_matches.  A nanosecond timestamp, which Spark cannot read, fails
+    its inference but not the job.  A file pyarrow has no filesystem for
+    falls back to Spark's inference, with the same schema.  An input
+    without files fails with a clear error."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from fuzzy_search_spark.spark import job
+    from fuzzy_search_spark.spark.job import (
+        _list_input_files,
+        _read_schema,
+        match_documents,
+        read_pages,
+        run_extraction_job,
+        write_matches,
+    )
+
+    table = pq.read_table(pages_path)
+    table = table.set_column(table.schema.get_field_index("text"), "text",
+                             pa.nulls(table.num_rows, pa.string()))
+    if html_type == "string":
+        html = table.schema.get_field_index("html")
+        table = table.set_column(html, "html",
+                                 table.column(html).cast(pa.string()))
+    assert table.schema.field("warc_ts").type == pa.timestamp("us")
+    pages, pages_ns = str(tmp_path / "pages"), str(tmp_path / "pages_ns")
+    half = table.num_rows // 2
+    for path, t in ((pages, table), (pages_ns, table.set_column(
+            table.schema.get_field_index("warc_ts"), "warc_ts",
+            table.column("warc_ts").cast(pa.timestamp("ns"))))):
+        os.makedirs(path)
+        pq.write_table(t.slice(0, half), f"{path}/part-0.parquet")
+        pq.write_table(t.slice(half), f"{path}/part-1.parquet")
+
+    columns = ["url", "text", "html"]
+    files = _list_input_files(spark, pages, "parquet")
+    os.makedirs(tmp_path / "empty")
+    for table_format in ("parquet", "warc"):
+        with pytest.raises(ValueError, match="no input files"):
+            _list_input_files(spark, str(tmp_path / "empty"), table_format)
+    schema = _read_schema(spark, files[0], columns)
+    inferred = spark.read.parquet(pages).schema
+    assert schema == T.StructType([f for f in inferred if f.name in columns])
+    assert inferred["warc_ts"].dataType == T.TimestampNTZType()
+    assert {f.name: f.dataType for f in schema} == {
+        "url": T.StringType(), "text": T.StringType(),
+        "html": T.BinaryType() if html_type == "binary" else T.StringType()}
+    with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
+        spark.read.parquet(pages_ns).schema
+
+    def no_filesystem(uri):
+        raise pa.ArrowInvalid(f"Unrecognized filesystem type in URI: {uri}")
+
+    with monkeypatch.context() as m:
+        m.setattr(job, "pafs", SimpleNamespace(
+            FileSystem=SimpleNamespace(from_uri=no_filesystem)))
+        assert _read_schema(spark, files[0], columns) == schema
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    ref = str(tmp_path / "ref")
+    write_matches(match_documents(read_pages(spark, pages), model,
+                                  html_col="html"), ref)
+    expect = sorted(map(tuple, spark.read.parquet(ref).collect()))
+    assert expect
+    for path in (pages, pages_ns):
+        out = path + "_out"
+        run_extraction_job(spark, path, out, model, num_groups=2)
+        got = spark.read.parquet(os.path.join(out, "matches")).drop("group")
+        assert sorted(map(tuple, got.collect())) == expect, path
+
+
+def test_failed_group_keeps_the_other_groups_commit(spark, pages4_path,
+                                                    tmp_path):
+    """A group whose input file is torn fails the job with the error its
+    Spark job raised.  The other group, in flight with it, still commits
+    its output and manifest line; no staged file and no driver thread is
+    left behind.  Once the file is repaired, a resume runs only the failed
+    group and ends with the rows of an uninterrupted run."""
+    import json
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    whole = str(tmp_path / "whole")
+    run_extraction_job(spark, pages4_path, whole, model, num_groups=2)
+
+    pages = str(tmp_path / "pages")
+    shutil.copytree(pages4_path, pages)
+    # group 0 owns files 0 and 2 of the listing; file 0 stays whole, as the
+    # read schema comes from its footer
+    torn = os.path.join(pages, sorted(os.listdir(pages4_path))[2])
+    with open(torn, "r+b") as fh:
+        fh.truncate(os.path.getsize(torn) // 2)
+    out = str(tmp_path / "out")
+    threads = threading.active_count()
+    with pytest.raises(Py4JJavaError):
+        run_extraction_job(spark, pages, out, model, num_groups=2)
+    assert threading.active_count() == threads
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    with open(os.path.join(out, "_manifest.jsonl")) as fh:
+        assert [json.loads(line)["group"] for line in fh] == [1]
+
+    def rows(path, group="*"):
+        return sorted(map(tuple, spark.read.parquet(
+            os.path.join(path, "matches", f"group={group}")).collect()))
+
+    assert rows(out, 1) == rows(whole, 1)
+    shutil.copy(os.path.join(pages4_path, os.path.basename(torn)), torn)
+    s = run_extraction_job(spark, pages, out, model, num_groups=2)
+    assert s["ran"] == [0] and s["skipped"] == [1]
+    assert rows(out) == rows(whole)
 
 def test_template_matching_spark(spark, matches_df):
     """groupBy(url).applyInPandas template wrapper agrees with the local

@@ -10,11 +10,12 @@
 
 The phrases file is a JSON list of strings or phrase dicts (the
 reference's PhraseModel input shape); config is the flat reference config
-dict.  The phrase job is resumable: it splits the sorted list of input
-files into ``--num-groups`` groups, each read and committed on its own,
-and a re-run skips committed groups unless the fingerprint (model,
-config, columns, group count, file listing) changed (spark/job.py
-manifest).
+dict.  ``--token-mode`` compiles a token model instead of a phrase model;
+either way the one resumable job (spark/job.py) runs it: it splits the
+sorted list of input files into ``--num-groups`` groups, each read and
+committed on its own, and a re-run skips committed groups unless the
+fingerprint (model and its kind, config, columns, group count, file
+listing) changed (manifest).
 """
 
 from __future__ import annotations
@@ -51,10 +52,11 @@ def build_parser() -> argparse.ArgumentParser:
                         "pass '' to disable HTML extraction")
     p.add_argument("--chunk-chars", type=int, default=None,
                    help="exactness-preserving chunked matching bound for "
-                        "giant documents")
+                        "giant documents (phrase pipeline only)")
     p.add_argument("--token-mode", action="store_true",
                    help="use the token-level pipeline (the fast path for "
-                        "large phrase models; slightly less exhaustive)")
+                        "large phrase models; slightly less exhaustive), "
+                        "in the same resumable job")
     p.add_argument("--extract-mode", default="strip",
                    choices=["strip", "main", "auto"],
                    help="payload->text extraction for NULL-text rows: "
@@ -89,38 +91,25 @@ def main(argv=None, spark=None) -> dict:
                  "auto": _ex.extract_payload}[args.extract_mode]
 
     if args.token_mode:
-        from fuzzy_search_spark.spark.job import match_documents_tokens
         from fuzzy_search_spark.token_matcher import compile_token_model
 
-        if args.chunk_chars:
-            print("warning: --chunk-chars applies to the phrase pipeline "
-                  "only; ignored in --token-mode", file=sys.stderr)
-        from fuzzy_search_spark.spark.job import read_pages
-
-        tmodel = compile_token_model(phrases, config)
-        df = read_pages(spark, args.input, args.table_format)
-        from fuzzy_search_spark.spark.job import write_matches
-
-        out = match_documents_tokens(
-            df, tmodel, url_col=args.url_col, text_col=args.text_col,
-            html_col=args.html_col or None, extractor=extractor)
-        write_matches(out, args.output, args.table_format)
-        summary = {"mode": "token", "output": args.output}
+        model = compile_token_model(phrases, config)
     else:
         from fuzzy_search_spark.model import compile_model
-        from fuzzy_search_spark.spark.job import run_extraction_job
 
         model = compile_model(phrases, config)
-        summary = run_extraction_job(
-            spark, args.input, args.output, model,
-            num_groups=args.num_groups,
-            resume=not args.no_resume,
-            url_col=args.url_col, text_col=args.text_col,
-            html_col=args.html_col or None,
-            chunk_chars=args.chunk_chars,
-            table_format=args.table_format,
-            extractor=extractor)
-        summary["mode"] = "phrase"
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    summary = run_extraction_job(
+        spark, args.input, args.output, model,
+        num_groups=args.num_groups,
+        resume=not args.no_resume,
+        url_col=args.url_col, text_col=args.text_col,
+        html_col=args.html_col or None,
+        chunk_chars=args.chunk_chars,
+        table_format=args.table_format,
+        extractor=extractor)
+    summary["mode"] = "token" if args.token_mode else "phrase"
     print(json.dumps(summary))
     return summary
 

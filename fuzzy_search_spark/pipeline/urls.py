@@ -131,42 +131,3 @@ def crawl_delta(old_df: DataFrame, new_df: DataFrame,
               .otherwise(F.lit("changed")))
     return j.select("url", status.alias("status"), "old_md5", "new_md5")
 
-
-def blocklist_admission(df: DataFrame, blocked_domains,
-                        id_col: str = "doc_id",
-                        url_col: str = "url") -> DataFrame:
-    """URL blocklist admission (the UT1/CCNet/FineWeb URL-filter stage):
-    a page is blocked when its host equals a listed domain OR is a
-    subdomain of one (domain-suffix semantics).  Emits one row per page
-    with the lowercase host, the matched domain (lexicographic min when
-    several list entries match — deterministic) and the ``allowed``
-    flag.
-
-    Scale shape: the host explodes into its suffix chain (bounded by
-    the label count, ~10 for real hostnames) and equi-joins the domain
-    list on the suffix — a plain hash join that broadcasts for any
-    realistic blocklist (UT1 is ~3M rows) and stays skew-free, instead
-    of the LIKE-any BroadcastNestedLoopJoin a naive predicate would
-    plan.  One aggregation back to page grain."""
-    spark = df.sparkSession
-    dom_df = F.broadcast(spark.createDataFrame(
-        [(d.lower(),) for d in sorted(set(blocked_domains))],
-        "domain string"))
-    host = F.lower(F.regexp_extract(F.col(url_col),
-                                    r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)",
-                                    1))
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    # suffix chain: host itself, then each strictly-shorter dot-suffix
-    suffixes = F.transform(
-        F.sequence(F.lit(0), n - F.lit(1)),
-        lambda i: F.array_join(F.slice(labels, i + 1, n), "."))
-    base = df.select(F.col(id_col), F.col(url_col), host.alias("host"),
-                     suffixes.alias("_sfx"))
-    hits = (base.select(id_col, F.explode("_sfx").alias("domain"))
-            .join(dom_df, "domain")
-            .groupBy(id_col)
-            .agg(F.min("domain").alias("matched_domain")))
-    return (base.drop("_sfx").join(hits, id_col, "left")
-            .select(id_col, url_col, "host", "matched_domain",
-                    F.col("matched_domain").isNull().alias("allowed")))

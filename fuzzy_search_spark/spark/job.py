@@ -6,7 +6,7 @@ Plan shape per group (one narrow stage unless the group is spread):
          Iceberg: the table scan filtered on its ``_file`` column)
       -> [only when the group owns fewer files than defaultParallelism]
          repartition on xxhash64(url), so its rows fill every core
-      -> mapInPandas(extract_html + find_matches   [one Arrow-batched pass]
+      -> mapInPandas(extract_html + the model's kernel [one Arrow-batched pass]
                      + pyarrow write of the task's own parquet file)
       -> collect the names of the files written
 
@@ -20,10 +20,10 @@ staging directory (with any failed or duplicate attempt's file) and only
 then writes the group's metrics file and manifest line.  Iceberg output
 still goes through the table writer.
 
-The compiled phrase model is broadcast once per job (`sc.broadcast`, before
-the first group that runs; every group's stage reads that one copy) — the
-classic broadcast-hash-join shape: the tiny build side (phrases) probes
-against the huge stream side (documents) inside the UDF.
+The compiled model, phrase or token, is broadcast once per job
+(`sc.broadcast`, before the first group that runs; every group's stage reads
+that one copy) — the classic broadcast-hash-join shape: the tiny build side
+(phrases) probes against the huge stream side (documents) inside the UDF.
 
 Resumability: the job lists its input files once, sorts the listing and
 splits it into ``num_groups`` groups; group ``g`` owns ``files[g::num_groups]``
@@ -35,10 +35,10 @@ Each group commits its output directory plus a manifest line (group id,
 fingerprint, row counts, wall time).  Lines are appended in the order the
 groups commit, not in group order.  A restarted job re-reads the manifest
 and skips each group whose newest line carries the current fingerprint.  A
-change of model, config, extractor, input column names, group count or file
-listing changes the fingerprint and invalidates old groups; groups beyond
-the current count are removed.  A document is
-never split across tasks, so a giant document still lands in one task
+change of model (its kind too), config, extractor, input column names,
+group count or file listing changes the fingerprint and invalidates old
+groups; groups beyond the current count are removed.  A document is never
+split across tasks, so a giant document still lands in one task
 (chunk_chars bounds its memory, not its time).
 
 Concurrency: two groups are in flight at a time (Iceberg, whose concurrent
@@ -66,6 +66,7 @@ skips the call brings that cost back for every task of its stage.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import itertools
 import json
@@ -90,9 +91,11 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 
 from fuzzy_search_spark.extract import extract_html
-from fuzzy_search_spark.matcher import find_matches
+from fuzzy_search_spark.matcher import find_matches, find_matches_chunked
 from fuzzy_search_spark.model import CompiledModel
 from fuzzy_search_spark.spark.worker import drop_zip_importers
+from fuzzy_search_spark.token_matcher import TokenModel, find_token_matches
+
 
 def read_pages(spark: SparkSession, input_path: Union[str, Sequence[str]],
                table_format: str = "parquet",
@@ -154,21 +157,6 @@ def _read_iceberg(spark: SparkSession, table: str,
                             else f"{table}.{metadata}")
 
 
-def write_matches(matches: DataFrame, target: str,
-                  table_format: str = "parquet") -> None:
-    """Write a matches DataFrame idempotently through Spark's writers (the
-    CLI's token mode; :func:`run_extraction_job` commits its own groups).
-
-    Parquet overwrites the directory, so a re-run replaces any partial
-    output.  Iceberg uses ``overwritePartitions()`` (dynamic partition
-    overwrite): the incoming rows' partition values replace those
-    partitions' previous rows atomically."""
-    if table_format == "iceberg":
-        matches.writeTo(target).overwritePartitions()
-        return
-    matches.write.mode("overwrite").parquet(target)
-
-
 MATCH_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("phrase", T.StringType()),
@@ -212,13 +200,31 @@ def _label_list(label) -> Optional[List[str]]:
     return list(label)
 
 
+def _kernel(model: Union[CompiledModel, TokenModel],
+            chunk_chars: Optional[int] = None):
+    """``(kernel, ignorecase)`` for ``model``: ``kernel(text, model)`` is
+    the per-document matcher, ``ignorecase`` the value of the rows' column.
+    The token searcher never lowercases, and has no chunked form."""
+    if isinstance(model, TokenModel):
+        if chunk_chars:
+            raise ValueError("chunk_chars does not apply to a TokenModel")
+        return find_token_matches, False
+    if chunk_chars:
+        # falls back to find_matches for a text of at most chunk_chars
+        return (functools.partial(find_matches_chunked,
+                                  chunk_chars=chunk_chars),
+                model.config.ignorecase)
+    return find_matches, model.config.ignorecase
+
+
 def match_documents(df: DataFrame, model: CompiledModel,
                     url_col: str = "url", text_col: str = "text",
                     html_col: Optional[str] = None,
                     chunk_chars: Optional[int] = None,
                     extractor=None,
                     metrics_acc=None) -> DataFrame:
-    """Run the fuzzy-match pipeline over a documents DataFrame.
+    """Run the fuzzy-match pipeline over a documents DataFrame (the token
+    pipeline for a ``TokenModel``).
 
     Returns the exploded matches table (MATCH_SCHEMA).  When ``html_col`` is
     given, rows with NULL ``text_col`` are extracted from html in the same
@@ -230,10 +236,10 @@ def match_documents(df: DataFrame, model: CompiledModel,
     removal, ``extract.extract_payload`` for mixed HTML/PDF/plain tables —
     must be a deterministic top-level callable, it ships to executors).
     """
+    kernel, ignorecase = _kernel(model, chunk_chars)
     return _match_broadcast(df, df.sparkSession.sparkContext.broadcast(model),
-                            find_matches, model.config.ignorecase, url_col,
-                            text_col, html_col, chunk_chars, extractor,
-                            metrics_acc)
+                            kernel, ignorecase, url_col, text_col, html_col,
+                            extractor, metrics_acc)
 
 
 def match_documents_tokens(df: DataFrame, token_model,
@@ -244,30 +250,24 @@ def match_documents_tokens(df: DataFrame, token_model,
     slightly-less-exhaustive pipeline).  Same broadcast + mapInPandas shape
     as match_documents; char/ngram scores are NULL by design (the token
     searcher computes only the Levenshtein ratio)."""
-    from fuzzy_search_spark.token_matcher import find_token_matches
-
-    return _match_broadcast(
-        df, df.sparkSession.sparkContext.broadcast(token_model),
-        find_token_matches, False, url_col, text_col, html_col, None,
-        extractor, None)
+    return match_documents(df, token_model, url_col, text_col, html_col,
+                           extractor=extractor)
 
 
 def _match_broadcast(df: DataFrame, bc_model, kernel, ignorecase: bool,
                      url_col: str, text_col: str, html_col: Optional[str],
-                     chunk_chars: Optional[int], extractor, metrics_acc,
+                     extractor, metrics_acc,
                      staging: Optional[str] = None) -> DataFrame:
     """The match stage of both pipelines over a model already broadcast as
     ``bc_model`` (so :func:`run_extraction_job` ships it once per job, not
-    once per group): ``kernel(text, model)`` (``find_matches`` or
-    ``find_token_matches``) runs on each document with text.
+    once per group): ``kernel(text, model)`` (from :func:`_kernel`) runs
+    on each document with text.
 
     Returns the matches (MATCH_SCHEMA), or, with ``staging``, writes them
     from the task as one parquet file per partition under ``staging`` (a
     unique name per task attempt; a partition without matches writes
     none) and returns one row per file written: ``file`` (its name) and
     ``rows``."""
-    from fuzzy_search_spark.matcher import find_matches_chunked
-
     use_html = html_col is not None
     extract_fn = extractor if extractor is not None else extract_html
     cols = [url_col, text_col] + ([html_col] if use_html else [])
@@ -291,12 +291,7 @@ def _match_broadcast(df: DataFrame, bc_model, kernel, ignorecase: bool,
                     continue
                 docs += 1
                 chars += len(text)
-                if chunk_chars and len(text) > chunk_chars:
-                    doc_matches = find_matches_chunked(text, compiled,
-                                                       chunk_chars)
-                else:
-                    doc_matches = kernel(text, compiled)
-                for m in doc_matches:
+                for m in kernel(text, compiled):
                     matched += 1
                     out["url"].append(url)
                     out["phrase"].append(m.phrase)
@@ -486,14 +481,17 @@ def _drop_groups_from(spark: SparkSession, output_path: str, num_groups: int,
 
 
 def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
-                       model: CompiledModel, *, num_groups: int = 4,
-                       resume: bool = True,
+                       model: Union[CompiledModel, TokenModel], *,
+                       num_groups: int = 4, resume: bool = True,
                        url_col: str = "url", text_col: str = "text",
                        html_col: Optional[str] = "html",
                        chunk_chars: Optional[int] = None,
                        table_format: str = "parquet",
                        extractor=None) -> dict:
-    """End-to-end resumable job: read -> (extract) -> match -> write.
+    """End-to-end resumable job: read -> (extract) -> match -> write, with
+    the phrase matcher for a ``CompiledModel`` and the token matcher for a
+    ``TokenModel`` (whose rows carry NULL char and ngram scores and
+    ``ignorecase`` False; ``chunk_chars`` with it raises ``ValueError``).
 
     The input is listed once, with no Spark job (parquet: a read given a
     schema; WARC: ``binaryFile``).  A parquet group reads only the columns
@@ -532,8 +530,10 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     are written.  A crash before the line leaves a group that the next
     run does again; that run also removes whatever ``_staging`` holds.
     """
+    kernel, ignorecase = _kernel(model, chunk_chars)
     files = _list_input_files(spark, input_path, table_format)
 
+    # a TokenModel's starts "token:": a switch of matcher reruns every group
     fingerprint = model.fingerprint()
     if extractor is not None:
         # a different payload->text function changes every downstream row:
@@ -602,10 +602,9 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
             part = part.repartition(cores, F.xxhash64(F.col(url_col)))
         staging = (None if table_format == "iceberg"
                    else f"{root}/_staging/group={group}")
-        matches = _match_broadcast(part, bc_model, find_matches,
-                                   model.config.ignorecase, url_col, text_col,
-                                   html_col, chunk_chars, extractor, acc,
-                                   staging)
+        matches = _match_broadcast(part, bc_model, kernel, ignorecase,
+                                   url_col, text_col, html_col, extractor,
+                                   acc, staging)
         if staging is None:
             # replaces the group's earlier rows even when this run has none
             (matches.withColumn("group", F.lit(group)).writeTo(output_path)

@@ -26,6 +26,8 @@ PartialPhraseMatch, get_token_skipgram_matches:1125-1163, match typing
 
 from __future__ import annotations
 
+import hashlib
+import json
 from dataclasses import dataclass, field
 from enum import Enum
 from functools import lru_cache
@@ -172,6 +174,26 @@ class TokenModel:
         state = self.__dict__.copy()
         state["runtime_probe_cache"] = {}
         return state
+
+    def fingerprint(self) -> str:
+        """Deterministic version stamp for lineage / resume-drift detection
+        (``CompiledModel.fingerprint``'s counterpart), prefixed ``token:``
+        so that the matcher kind is part of it.  It covers every input that
+        changes rows: the config scalars, each phrase (in resolution order)
+        with its kind, labels and offsets, the variant links, the
+        vocabulary and the distractor pairs, which compat can add after
+        compile.  Everything derived from those is left out."""
+        digest = hashlib.sha256(json.dumps({
+            "config": {f: v for f, v in vars(self).items()
+                       if isinstance(v, (bool, int, float))},
+            "phrases": [[tp.name, tp.kind, sorted(tp.label_set),
+                         tp.max_start_offset, tp.max_end_offset]
+                        for tp in self.phrases.values()],
+            "is_variant_of": sorted(self.is_variant_of.items()),
+            "vocab_terms": sorted(self.vocab_terms),
+            "distractor_pairs": sorted(self.distractor_pairs),
+        }, sort_keys=True).encode("utf-8"))
+        return "token:" + digest.hexdigest()[:16]
 
 
 def _is_distractor(text_token: str, phrase_token: str,

@@ -1,6 +1,7 @@
 """Unit tests for the round-3 web-corpus hygiene ops: Gopher-style
-repetition signals, benchmark decontamination, PII scan/redaction, and
-URL canonicalization + URL-level dedup.
+repetition signals, benchmark decontamination, PII scan/redaction,
+URL canonicalization + URL-level dedup, and the paragraph-dedup
+transformation (strip_duplicate_paragraphs).
 
 Each crafted test pins hand-computed expectations; the differential test
 recomputes repetition fractions with an independent pure-Python oracle
@@ -1169,3 +1170,69 @@ def test_host_quality_rollup(spark):
     strict = {r.doc_id: r for r in
               host_quality_rollup(df, min_host_docs=2).collect()}
     assert not strict[6].host_keep and strict[0].host_keep
+
+
+# ---------------------------------------------------------------------------
+# strip_duplicate_paragraphs
+# ---------------------------------------------------------------------------
+
+def test_strip_duplicate_paragraphs_crafted(spark):
+    from fuzzy_search_spark.pipeline.textstats import (
+        strip_duplicate_paragraphs,
+    )
+
+    docs = spark.createDataFrame([
+        (1, "unique one\n\nshared banner\n\ntail a"),
+        (2, "unique two\n\nshared banner\n\ntail a"),
+        (3, "all alone here\n\n\n\nanother solo"),   # empty para dropped
+        (4, "shared banner"),                          # fully boilerplate
+    ], "doc_id long, text string")
+    out = {r.doc_id: r for r in strip_duplicate_paragraphs(docs).collect()}
+    assert len(out) == 4
+    assert (out[1].n_paras, out[1].n_kept) == (3, 1)
+    assert out[1].clean_text == "unique one"
+    assert out[2].clean_text == "unique two"
+    # doc 3: both paragraphs unique, empty middle removed, order kept
+    assert (out[3].n_paras, out[3].n_kept) == (2, 2)
+    assert out[3].clean_text == "all alone here\n\nanother solo"
+    # doc 4: its single paragraph is shared -> empty text, still present
+    assert (out[4].n_paras, out[4].n_kept) == (1, 0)
+    assert out[4].clean_text == ""
+
+
+def test_strip_duplicate_paragraphs_line_mode(spark):
+    """sep='\\n' gives RefinedWeb-style line-level dedup."""
+    from fuzzy_search_spark.pipeline.textstats import (
+        strip_duplicate_paragraphs,
+    )
+
+    docs = spark.createDataFrame([
+        (1, "keep me\nnav | home | about\nreal content 1"),
+        (2, "nav | home | about\nreal content 2"),
+    ], "doc_id long, text string")
+    out = {r.doc_id: r for r in
+           strip_duplicate_paragraphs(docs, sep="\n").collect()}
+    assert out[1].clean_text == "keep me\nreal content 1"
+    assert out[2].clean_text == "real content 2"
+
+
+def test_strip_duplicate_paragraphs_plan_shape(spark):
+    """The paragraph relation explodes ONCE: the dup-set aggregation and
+    the keep join share the repartition(phash) exchange at runtime (AQE
+    reuse); aggregation stays HashAggregate."""
+    from fuzzy_search_spark.pipeline.textstats import (
+        strip_duplicate_paragraphs,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"unique lead {i}\n\nshared boilerplate\n\ntail {i % 3}")
+         for i in range(30)],
+        "doc_id long, text string")
+    out = strip_duplicate_paragraphs(docs)
+    out.collect()
+    final = (out._jdf.queryExecution().executedPlan().toString()
+             .split("== Initial")[0])
+    assert "isFinalPlan=true" in final
+    assert final.count("Reused") >= 1, "paragraph subtree not stage-reused"
+    assert final.count("Generate posexplode") == 1
+    assert "SortAggregate" not in final

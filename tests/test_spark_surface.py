@@ -413,7 +413,7 @@ def test_extraction_job_broadcasts_model_once(spark, pages_path, tmp_path,
 def test_extraction_job_output_schema_and_rows(spark, pages_path, tmp_path):
     """The job's own parquet files read back as MATCH_SCHEMA plus the
     ``group`` column, with the rows that match_documents gives written
-    through Spark's writer (write_matches): the same strings, offsets and
+    through Spark's parquet writer: the same strings, offsets and
     float scores, labels of one and two strings, and NULL labels."""
     from pyspark.sql import types as T
 
@@ -422,7 +422,6 @@ def test_extraction_job_output_schema_and_rows(spark, pages_path, tmp_path):
         match_documents,
         read_pages,
         run_extraction_job,
-        write_matches,
     )
 
     labels = {"PRAESIDE": "person", "Veneris": ["day", "weekday"]}
@@ -435,14 +434,82 @@ def test_extraction_job_output_schema_and_rows(spark, pages_path, tmp_path):
         MATCH_SCHEMA.fields + [T.StructField("group", T.IntegerType())])
 
     ref = str(tmp_path / "ref")
-    write_matches(match_documents(read_pages(spark, pages_path), model,
-                                  html_col="html"), ref)
+    match_documents(read_pages(spark, pages_path), model,
+                    html_col="html").write.mode("overwrite").parquet(ref)
     expect = sorted(map(tuple, spark.read.parquet(ref).collect()))
     rows = sorted(map(tuple, got.drop("group").collect()))
     assert rows == expect
     assert {r[6] and tuple(r[6]) for r in rows} == {
         None, ("person",), ("day", "weekday")}
     assert all(isinstance(r[8], float) for r in rows)
+
+
+def test_token_job_rows_metrics_and_resume(spark, pages4_path, tmp_path):
+    """A TokenModel runs through the same job: its ``matches/`` rows equal
+    match_documents_tokens on every column (NULL char and ngram scores,
+    ignorecase False), each group's ``_metrics`` partition rows account
+    for its documents, a second run skips both groups, and a phrase model
+    run into the same output runs both again (the matcher kind is part of
+    the fingerprint)."""
+    from fuzzy_search_spark.spark.job import (
+        match_documents_tokens,
+        run_extraction_job,
+    )
+    from fuzzy_search_spark.token_matcher import compile_token_model
+
+    model = compile_token_model(README_MODEL, README_CONFIG)
+    out = str(tmp_path / "token_out")
+    s1 = run_extraction_job(spark, pages4_path, out, model, num_groups=2)
+    assert s1["ran"] == [0, 1] and s1["fingerprint"].startswith("token:")
+    got = spark.read.parquet(os.path.join(out, "matches"))
+    rows = sorted(map(tuple, got.drop("group").collect()))
+    expect = sorted(map(tuple, match_documents_tokens(
+        spark.read.parquet(pages4_path), model, html_col="html").collect()))
+    assert rows == expect and len(rows) == s1["matches"] > 0
+    assert all(r.char_match is None and r.ngram_match is None
+               and r.ignorecase is False for r in got.collect())
+
+    texts = spark.read.parquet(pages4_path).filter(
+        "text is not null and text <> ''").count()
+    docs = [sum(p["docs"] for p in m["partitions"])
+            for m in _group_metrics(out, 2)]
+    assert all(docs) and sum(docs) == texts == s1["docs"]
+
+    s2 = run_extraction_job(spark, pages4_path, out, model, num_groups=2)
+    assert s2["ran"] == [] and s2["skipped"] == [0, 1]
+    s3 = run_extraction_job(spark, pages4_path, out,
+                            compile_model(README_MODEL, README_CONFIG),
+                            num_groups=2)
+    assert s3["ran"] == [0, 1] and s3["skipped"] == []
+
+
+def test_token_model_rejects_chunk_chars(spark, pages_path, tmp_path):
+    """Chunked matching exists for the phrase matcher only: a TokenModel
+    with chunk_chars raises ValueError from match_documents, from the job
+    (before it writes anything) and from the CLI's --token-mode."""
+    import json
+
+    from fuzzy_search_spark.__main__ import main
+    from fuzzy_search_spark.spark.job import (
+        match_documents,
+        run_extraction_job,
+    )
+    from fuzzy_search_spark.token_matcher import compile_token_model
+
+    model = compile_token_model(README_MODEL, README_CONFIG)
+    with pytest.raises(ValueError, match="chunk_chars"):
+        match_documents(spark.read.parquet(pages_path), model,
+                        chunk_chars=120)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="chunk_chars"):
+        run_extraction_job(spark, pages_path, out, model, chunk_chars=120)
+    phrases_file = tmp_path / "phrases.json"
+    phrases_file.write_text(json.dumps(list(README_MODEL)))
+    with pytest.raises(ValueError, match="chunk_chars"):
+        main(["--input", pages_path, "--output", out,
+              "--phrases", str(phrases_file), "--token-mode",
+              "--chunk-chars", "120"], spark=spark)
+    assert not os.path.exists(out)
 
 
 def test_interrupted_job_resumes_to_the_same_rows(spark, pages4_path,
@@ -558,9 +625,10 @@ def test_footer_schema_and_rows(spark, pages_path, tmp_path, monkeypatch,
     binary or string, and an all-NULL string text (so every document is
     extracted from html).  The naive timestamp warc_ts, which a conversion
     of the whole footer would type as timestamp instead of Spark's
-    timestamp_ntz, is not read; the job's rows equal match_documents +
-    write_matches.  A nanosecond timestamp, which Spark cannot read, fails
-    its inference but not the job.  A file pyarrow has no filesystem for
+    timestamp_ntz, is not read; the job's rows equal match_documents
+    written through Spark's parquet writer.  A nanosecond timestamp, which
+    Spark cannot read, fails its inference but not the job.  A file
+    pyarrow has no filesystem for
     falls back to Spark's inference, with the same schema.  An input
     without files fails with a clear error."""
     from types import SimpleNamespace
@@ -576,7 +644,6 @@ def test_footer_schema_and_rows(spark, pages_path, tmp_path, monkeypatch,
         match_documents,
         read_pages,
         run_extraction_job,
-        write_matches,
     )
 
     table = pq.read_table(pages_path)
@@ -622,8 +689,8 @@ def test_footer_schema_and_rows(spark, pages_path, tmp_path, monkeypatch,
 
     model = compile_model(README_MODEL, README_CONFIG)
     ref = str(tmp_path / "ref")
-    write_matches(match_documents(read_pages(spark, pages), model,
-                                  html_col="html"), ref)
+    match_documents(read_pages(spark, pages), model,
+                    html_col="html").write.mode("overwrite").parquet(ref)
     expect = sorted(map(tuple, spark.read.parquet(ref).collect()))
     assert expect
     for path in (pages, pages_ns):
@@ -835,7 +902,8 @@ def test_minhash_bucket_cap(spark):
 
 def test_cli_entry_point(spark, pages_path, tmp_path):
     """The spark-submit entry point (python -m fuzzy_search_spark) runs
-    both pipelines end to end from file-based phrase/config inputs."""
+    both pipelines end to end from file-based phrase/config inputs, each
+    through the resumable job."""
     import json
 
     from fuzzy_search_spark.__main__ import main
@@ -858,10 +926,11 @@ def test_cli_entry_point(spark, pages_path, tmp_path):
     summary2 = main([
         "--input", pages_path, "--output", out2,
         "--phrases", str(phrases_file), "--config", str(config_file),
-        "--token-mode",
+        "--num-groups", "2", "--token-mode",
     ], spark=spark)
-    assert summary2["mode"] == "token"
-    assert spark.read.parquet(out2).count() > 0
+    assert summary2["mode"] == "token" and summary2["ran"] == [0, 1]
+    assert summary2["fingerprint"].startswith("token:")
+    assert spark.read.parquet(os.path.join(out2, "matches")).count() > 0
 
 
 def test_vocabulary_table_dense_ids_no_global_window(spark):
@@ -952,28 +1021,53 @@ def test_ann_plans_are_lazy_with_dim(spark):
     assert p1.count() > 0 and p2.count() == 12
 
 
-def test_write_matches_iceberg_is_partition_overwrite():
-    """Iceberg group writes must be replace-not-append so a re-run of a
-    group whose manifest line never landed stays idempotent (the sandbox
-    has no Iceberg jars, so the v2-writer call is asserted via a stub)."""
-    from fuzzy_search_spark.spark.job import write_matches
+def test_iceberg_groups_overwrite_their_own_rows(spark, pages4_path,
+                                                tmp_path, monkeypatch):
+    """The job's Iceberg branch, with the listing, the table read and the
+    table writer stubbed (no Iceberg runtime is installed): each group
+    that runs calls ``writeTo(table).overwrite(group == g)`` exactly once
+    with its own rows, also a group that owns no file, so that its empty
+    output still replaces the rows an earlier run left in the table."""
+    from pyspark.sql import functions as F
 
+    from fuzzy_search_spark.spark import job
+    from fuzzy_search_spark.spark.job import match_documents
+
+    table = spark.read.parquet(pages4_path).withColumn(
+        "_file", F.input_file_name())
+    files = sorted(r[0] for r in table.select("_file").distinct().collect())
+    assert len(files) == 4
+    monkeypatch.setattr(job, "_list_input_files",
+                        lambda spark, path, table_format: files)
+    monkeypatch.setattr(job, "read_pages",
+                        lambda spark, path, table_format: table)
     calls = []
 
-    class _Writer:
-        def overwritePartitions(self):
-            calls.append("overwritePartitions")
+    def write_to(df, target):
+        class _Writer:
+            def overwrite(self, condition):
+                calls.append((target, str(condition), df.collect()))
 
-        def append(self):  # pragma: no cover - would be the bug
-            calls.append("append")
+        return _Writer()
 
-    class _Df:
-        def writeTo(self, target):
-            calls.append(f"writeTo:{target}")
-            return _Writer()
-
-    write_matches(_Df(), "cat.db.matches", table_format="iceberg")
-    assert calls == ["writeTo:cat.db.matches", "overwritePartitions"]
+    # the session's DataFrame class (Spark 4: the classic subclass)
+    monkeypatch.setattr(type(table), "writeTo", write_to)
+    monkeypatch.chdir(tmp_path)     # the manifest lands under the table name
+    model = compile_model(README_MODEL, README_CONFIG)
+    s = job.run_extraction_job(spark, "db.pages", "db.matches", model,
+                               num_groups=5, table_format="iceberg")
+    assert s["ran"] == [0, 1, 2, 3, 4]
+    groups = {str(F.col("group") == g): g for g in range(5)}
+    assert len(calls) == 5
+    assert {target for target, _, _ in calls} == {"db.matches"}
+    rows = {groups[condition]: got for _, condition, got in calls}
+    assert sorted(rows) == [0, 1, 2, 3, 4]
+    assert rows[4] == [] and all(rows[g] for g in range(4))
+    assert all(r["group"] == g for g in rows for r in rows[g])
+    expect = sorted(map(tuple, match_documents(
+        spark.read.parquet(pages4_path), model, html_col="html").collect()))
+    assert sorted(tuple(r)[:-1] for g in rows for r in rows[g]) == expect
+    assert s["matches"] == len(expect)
 
 
 def test_cli_chunk_chars_forwarded(spark, pages_path, tmp_path):

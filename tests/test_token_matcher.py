@@ -293,3 +293,68 @@ def test_distractor_pair_registered_after_compile():
     assert "confirmatle" in searcher.model.runtime_probe_cache
     searcher.index_distractor_pair("confirmatle", "confirmatie")
     assert searcher.find_matches(text) == []
+
+
+_FINGERPRINT_PHRASES = [
+    {"phrase": "confirmatie resolutie", "label": ["act", "decision"],
+     "variants": ["confirmatie van resolutie"]},
+    {"phrase": "ordonnantie missive", "label": "act"},
+    {"phrase": "hoogheid mogende heeren", "distractors": ["hooge heeren"]},
+]
+_FINGERPRINT_VOCABULARY = ["daarop", "besloten", "zeer", "wel", "missieve"]
+
+
+def test_token_model_fingerprint():
+    """TokenModel.fingerprint names the matcher kind, and changes with each
+    input that changes rows: a config field, a label, a vocabulary term
+    and a distractor pair registered after compile (through compat, for a
+    term already in the vocabulary)."""
+    from fuzzy_search_spark.compat import FuzzyTokenSearcher
+
+    def fingerprint(phrases=_FINGERPRINT_PHRASES, config=None,
+                    vocabulary=_FINGERPRINT_VOCABULARY):
+        return compile_token_model(phrases, config or {},
+                                   vocabulary).fingerprint()
+
+    base = fingerprint()
+    assert base.startswith("token:") and fingerprint() == base
+    assert fingerprint(config={"levenshtein_threshold": 0.8}) != base
+    assert fingerprint(config={"max_token_gap": 2}) != base
+    relabeled = [dict(_FINGERPRINT_PHRASES[0], label=["act"])]
+    assert fingerprint(relabeled + _FINGERPRINT_PHRASES[1:]) != base
+    assert fingerprint(vocabulary=_FINGERPRINT_VOCABULARY + ["heer"]) != base
+
+    searcher = FuzzyTokenSearcher(phrase_list=_FINGERPRINT_PHRASES)
+    before = searcher.model.fingerprint()
+    assert "van" in searcher.model.vocab_terms
+    assert not searcher.has_distractor_pair("van", "heeren")
+    searcher.index_distractor_pair("van", "heeren")
+    assert searcher.model.fingerprint() != before
+
+
+def test_token_model_fingerprint_ignores_the_hash_seed():
+    """The fingerprint is the same under PYTHONHASHSEED 1 and 2, although
+    the model's sets iterate in another order under each."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json, sys\n"
+        "from fuzzy_search_spark.token_matcher import compile_token_model\n"
+        "phrases, vocabulary = json.loads(sys.argv[1])\n"
+        "tm = compile_token_model(phrases, {}, vocabulary)\n"
+        "print(json.dumps([tm.fingerprint(), list(tm.vocab_terms),\n"
+        "                  list(tm.distractor_pairs)]))\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    arg = json.dumps([_FINGERPRINT_PHRASES, _FINGERPRINT_VOCABULARY])
+    runs = [json.loads(subprocess.run(
+        [sys.executable, "-c", code, arg], cwd=root, check=True,
+        capture_output=True, text=True,
+        env=dict(os.environ, PYTHONHASHSEED=seed)).stdout)
+        for seed in ("1", "2")]
+    assert runs[0][1] != runs[1][1]
+    assert runs[0][0] == runs[1][0]
+    assert runs[0][0] == compile_token_model(
+        _FINGERPRINT_PHRASES, {}, _FINGERPRINT_VOCABULARY).fingerprint()

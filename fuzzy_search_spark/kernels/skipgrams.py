@@ -12,12 +12,14 @@ its covered ``length`` (= last combination index + 1).  Special cases: when
 ``ngram_size == 1`` each char is its own gram.
 
 Scale design: the per-document hot loop is NOT "generate every gram in
-Python".  Grams are encoded as int64 keys (21 bits per codepoint, enough for
-all of Unicode) and generated as NumPy shifted-slice arrays; membership
-against the broadcast phrase-model vocabulary is a vectorized
-``searchsorted``; only the (rare) hits drop back into Python.  On web-scale
-corpora where most documents match nothing, per-document cost is O(L) NumPy
-work, not O(L * combos) Python work.
+Python".  For ``ngram_size`` <= 3, grams are encoded as int64 keys (21 bits
+per codepoint, enough for all of Unicode) and generated as NumPy
+shifted-slice arrays, for texts of any length; membership against the
+broadcast phrase-model vocabulary is a vectorized ``searchsorted``.  On
+web-scale corpora where most documents match nothing, per-document cost is
+O(L) NumPy work, not O(L * combos) Python work.  Wider grams do not fold
+into 63 bits: they are generated in Python and coded by their rank in the
+model's sorted gram vocabulary (:class:`GramScanner`).
 """
 
 from __future__ import annotations
@@ -70,9 +72,6 @@ def iter_skipgrams(text: str, ngram_size: int = 2,
                 continue
             gram = first + "".join(window[i] for i in combo)
             yield gram, start, combo[-1] + 1
-    return
-
-
 
 
 class SkipGram:
@@ -197,72 +196,98 @@ def keyed_skipgrams(text: str, ngram_size: int = 2,
                     skip_size: int = 2) -> List[Tuple[GramKey, int, int]]:
     """All skipgrams as (key, start, length); int keys when ngram_size<=3."""
     use_int = ngram_size <= 3
-    out = []
-    for gram, start, length in iter_skipgrams(text, ngram_size, skip_size):
-        out.append((encode_gram(gram) if use_int and len(gram) <= 3 else gram,
-                    start, length))
-    return out
+    return [(encode_gram(gram) if use_int else gram, start, length)
+            for gram, start, length in iter_skipgrams(text, ngram_size,
+                                                      skip_size)]
 
 
 class GramScanner:
     """Vectorized scanner: finds occurrences of a fixed gram vocabulary in
     texts.  Built once per (compiled model, config) on the driver; cheap to
-    pickle into the broadcast closure."""
+    pickle into the broadcast closure.
+
+    The scanner owns the gram-code format.  For ``ngram_size`` <= 3 a
+    gram's code is its :func:`encode_gram` fold; a wider gram does not fit
+    in 63 bits, so its code is its rank in the sorted string vocabulary.
+    Only those wider grams are still generated in Python."""
 
     def __init__(self, vocab_keys, ngram_size: int, skip_size: int):
         self.ngram_size = ngram_size
         self.skip_size = skip_size
         self._combos = skipgram_combinations(ngram_size, skip_size)
-        self._vectorized = ngram_size in (2, 3)
-        int_keys = sorted(k for k in vocab_keys if isinstance(k, int))
-        self._sorted_keys = np.array(int_keys, dtype=np.int64)
-        self._str_keys = frozenset(k for k in vocab_keys if isinstance(k, str))
-        self._all_keys = frozenset(vocab_keys)
+        self._vocab = sorted(vocab_keys)
+        if ngram_size <= 3:
+            self._rank = None
+            self._sorted_codes = np.array(self._vocab, dtype=np.int64)
+        else:
+            self._rank = {g: i for i, g in enumerate(self._vocab)}
+            self._sorted_codes = np.arange(len(self._vocab), dtype=np.int64)
+
+    def codes(self, keys) -> np.ndarray:
+        """The int64 codes of vocabulary gram ``keys`` (ints or strings, as
+        :func:`keyed_skipgrams` gives them), in the order given."""
+        if self._rank is not None:
+            keys = [self._rank[k] for k in keys]
+        return np.array(keys, dtype=np.int64)
 
     def scan(self, text: str) -> List[Tuple[GramKey, int, int]]:
         """Occurrences of vocabulary grams in ``text`` as (key, start,
         length) tuples, in reference generation order."""
-        out = self.scan_arrays(text)
-        if isinstance(out, list):
-            return out
-        keys, starts, lens = out
-        return list(zip(keys.tolist(), starts.tolist(), lens.tolist()))
+        codes, starts, lens = self.scan_arrays(text)
+        keys = codes.tolist() if self._rank is None else \
+            [self._vocab[c] for c in codes.tolist()]
+        return list(zip(keys, starts.tolist(), lens.tolist()))
+
+    def _member(self, codes: np.ndarray) -> np.ndarray:
+        vocab = self._sorted_codes
+        if vocab.size == 0:
+            return np.zeros(codes.size, dtype=bool)
+        pos = np.searchsorted(vocab, codes)
+        pos[pos == vocab.size] = 0
+        return vocab[pos] == codes
+
+    def _hits(self, codes: np.ndarray, starts, lens):
+        """The grams among (codes, starts, lens) that are in the vocabulary."""
+        keep = self._member(codes)
+        return codes[keep], starts[keep], lens[keep]
 
     def scan_arrays(self, text: str):
-        """Like :meth:`scan` but returns (keys, starts, lens) int64 arrays
-        when the vectorized path applies, else a list of tuples (short
-        texts / exotic gram sizes / string keys)."""
+        """Like :meth:`scan` but returns int64 (codes, starts, lens)
+        arrays, for every text and every ``ngram_size``."""
         n = len(text)
-        if not self._vectorized or n <= self.ngram_size or n < 64:
-            # short texts / exotic ngram sizes: direct generation is cheaper
-            # than NumPy setup
-            return [(k, s, ln) for k, s, ln in
-                    keyed_skipgrams(text, self.ngram_size, self.skip_size)
-                    if k in self._all_keys]
-        cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+        if self._rank is not None:
+            rank = self._rank
+            hits = [(rank[g], s, ln) for g, s, ln in iter_skipgrams(
+                text, self.ngram_size, self.skip_size) if g in rank]
+            return tuple(np.array(hits, dtype=np.int64).reshape(-1, 3).T)
+        if self.ngram_size > 1 and n <= self.ngram_size:
+            # the whole text is the one gram
+            return self._hits(np.array([encode_gram(text)], dtype=np.int64),
+                              np.zeros(1, dtype=np.int64),
+                              np.full(1, n, dtype=np.int64))
+        cp = np.frombuffer(text.encode("utf-32-le", "surrogatepass"),
+                           dtype=np.uint32).astype(np.int64)
+        if self.ngram_size == 1:
+            # one gram per char, each at start 0 (the reference's quirk)
+            return self._hits(cp, np.zeros_like(cp), np.ones_like(cp))
         starts_parts, order_parts, keys_parts, len_parts = [], [], [], []
         for ci, combo in enumerate(self._combos):
             last = combo[-1]
             # valid window starts for this combo: 0 .. n-1-last  (the
             # reference's range(0, n-1) bound is implied because last >= 1)
             limit = n - last
+            if limit <= 0:
+                continue
             keys = cp[:limit] << (_CP_BITS * len(combo))
             for depth, idx in enumerate(combo):
                 shift = _CP_BITS * (len(combo) - 1 - depth)
                 keys = keys | (cp[idx:idx + limit] << shift)
-            pos = np.searchsorted(self._sorted_keys, keys)
-            pos[pos == len(self._sorted_keys)] = 0
-            hit = np.zeros(limit, dtype=bool) if len(self._sorted_keys) == 0 \
-                else self._sorted_keys[pos] == keys
-            idxs = np.nonzero(hit)[0]
-            if idxs.size:
-                starts_parts.append(idxs)
-                order_parts.append(np.full(idxs.size, ci, dtype=np.int64))
-                keys_parts.append(keys[idxs])
-                len_parts.append(np.full(idxs.size, last + 1, dtype=np.int64))
-        if not starts_parts:
-            return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.int64))
+            idxs = np.nonzero(self._member(keys))[0]
+            starts_parts.append(idxs)
+            order_parts.append(np.full(idxs.size, ci, dtype=np.int64))
+            keys_parts.append(keys[idxs])
+            len_parts.append(np.full(idxs.size, last + 1, dtype=np.int64))
+        # n > ngram_size, so the first combo always fits: no list is empty
         starts = np.concatenate(starts_parts)
         order = np.concatenate(order_parts)
         keys = np.concatenate(keys_parts)
@@ -271,13 +296,8 @@ class GramScanner:
         return keys[perm], starts[perm], lens[perm]
 
     def __getstate__(self):
-        return {
-            "ngram_size": self.ngram_size,
-            "skip_size": self.skip_size,
-            "keys": self._sorted_keys.tolist(),
-            "str_keys": sorted(self._str_keys),
-        }
+        return {"ngram_size": self.ngram_size, "skip_size": self.skip_size,
+                "keys": self._vocab}
 
     def __setstate__(self, state):
-        self.__init__(state["keys"] + state["str_keys"],
-                      state["ngram_size"], state["skip_size"])
+        self.__init__(state["keys"], state["ngram_size"], state["skip_size"])

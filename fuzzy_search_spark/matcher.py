@@ -29,6 +29,11 @@ suite): (a) a phrase with ``max_end_offset`` raises AttributeError there
 intended pruning.  (b) uncovered boundary-table combinations raise there; we
 reject the candidate.  (c) set-iteration orders there are id-hash dependent;
 we use first-match insertion order (deterministic).
+
+Stages 3-5 take one code path for every text and gram config: the model's
+scanner returns int64 gram codes (kernels/skipgrams.py), ``_accumulate``
+maps each searched phrase's hits to phrase-local ids, and
+``_sweep_candidates`` assembles the candidates on those ids.
 """
 
 from __future__ import annotations
@@ -72,113 +77,7 @@ class _Candidate:
     skip_count_overlap: float
 
 
-class _Partial:
-    """Growing span hypothesis for one phrase (reference CandidatePartial)."""
-
-    __slots__ = ("cp", "glist", "gset", "gcount", "start", "end", "max_len", "mlv")
-
-    def __init__(self, cp: CompiledPhrase, mlv: int):
-        self.cp = cp
-        self.glist: List[Tuple] = []       # (key, start, length)
-        self.gset = set()
-        self.gcount: Dict = {}
-        self.start: Optional[int] = -1
-        self.end = -1
-        self.mlv = mlv
-        self.max_len = len(cp.name) + mlv
-
-    def span_len(self) -> int:
-        if self.start is None:
-            return 0
-        return self.end - self.start
-
-    def _compute_start(self) -> Optional[int]:
-        if not self.glist:
-            return None
-        key, gstart, _ = self.glist[0]
-        off = gstart - self.cp.gram_first_offset[key]
-        return 0 if off < 0 else off
-
-    def _pop_first(self) -> None:
-        key, _, _ = self.glist.pop(0)
-        self.gcount[key] -= 1
-        if self.gcount[key] == 0:
-            self.gset.discard(key)
-
-    def add(self, gram: Tuple) -> None:
-        key, gstart, glen = gram
-        if not self.glist and key not in self.cp.early:
-            return  # a candidate can only open on an early gram
-        self.gset.add(key)
-        self.glist.append(gram)
-        if self.start is None or self.start < 0:
-            self.start = self._compute_start()
-        if gstart + glen > self.end:
-            self.end = gstart + glen
-        self.gcount[key] = self.gcount.get(key, 0) + 1
-        # evict from the front while the span is too long for the phrase
-        while self.glist and self.span_len() > self.max_len:
-            self._pop_first()
-            self.start = self._compute_start()
-        # ... and while the front gram can no longer start a match
-        while self.glist and self.glist[0][0] not in self.cp.early:
-            self._pop_first()
-            self.start = self._compute_start()
-
-    def is_match(self, skipgram_threshold: float) -> bool:
-        if not self.glist:
-            return False
-        if self.glist[0][0] not in self.cp.early:
-            return False
-        span = self.span_len()
-        if span > len(self.cp.name) + self.mlv:
-            return False
-        if span < self.cp.late_threshold - self.mlv:
-            return False
-        if self.glist[-1][0] not in self.cp.late:
-            return False
-        return len(self.gset) / len(self.cp.gram_set) >= skipgram_threshold
-
-    def count_overlap(self) -> float:
-        """Skip-count score: (total matched - freq deviation) / phrase grams."""
-        diff = 0
-        total = 0
-        freq = self.cp.gram_freq
-        for key, count in self.gcount.items():
-            diff += abs(count - freq.get(key, 0))
-            total += count
-        return (total - diff) / self.cp.num_grams
-
-    def shift_start(self) -> bool:
-        """If the span is longer than the phrase, try to re-anchor the start
-        on a later gram whose phrase offset is no worse; returns whether the
-        start moved (a shifted second candidate is then emitted)."""
-        if self.span_len() <= len(self.cp.name):
-            return False
-        first = self.cp.gram_first_offset
-        start_gram = self.glist[0]
-        best_phrase_off = first[start_gram[0]]
-        best_idx = 0
-        best_start = start_gram[1]
-        slack = self.span_len() - len(self.cp.name)
-        for si, gram in enumerate(self.glist):
-            key, gstart, _ = gram
-            if gstart - start_gram[1] > slack:
-                break  # shifting further would leave the match too short
-            phrase_off = first[key]
-            if gstart > best_start and phrase_off <= best_phrase_off:
-                best_idx = si
-                best_start = gstart
-                best_phrase_off = phrase_off
-            if key not in self.cp.early:
-                break
-        for _ in range(best_idx):
-            self._pop_first()
-        self.start = self._compute_start()
-        return best_idx > 0
-
-
-def _sweep_candidates(cp: CompiledPhrase, grams, text: str,
+def _sweep_candidates(cp: CompiledPhrase, gk, gs, gl, text: str,
                       skipgram_threshold: float, mlv: int,
                       gap_limit: int) -> List[_Candidate]:
     """Sequential sweep over one phrase's matched grams (text order),
@@ -188,209 +87,23 @@ def _sweep_candidates(cp: CompiledPhrase, grams, text: str,
     machine (the reference's CandidatePartial, candidate_match.py:92-329)
     is inlined and expressed as a two-pointer window over the gram stream:
     all pointer movements (front evictions, shift_start pops) are
-    monotone, so the sweep is O(n) with no list mutation.  Semantics are
-    pinned by the differential parity suite and
-    tests/test_sweep_equivalence.py.
+    monotone, so the sweep is O(n) with no list mutation.
 
-    ``grams`` is either a (keys, starts, lens) triple of parallel lists
-    (the vectorized accumulator's native output — no per-gram tuple
-    objects) or a list of (key, start, len) tuples (the scanner/spec
-    shape), converted here.
-    """
-    if isinstance(grams, tuple):
-        gk, gs, gl = grams
-    else:
-        if not grams:
-            return []
-        gk = [g[0] for g in grams]
-        gs = [g[1] for g in grams]
-        gl = [g[2] for g in grams]
+    ``gk`` holds phrase-LOCAL dense gram ids (positions in
+    ``cp.sorted_keys_np``) and ``gs``/``gl`` the grams' starts and lengths,
+    so every per-visit state update is flat list indexing: counts as an int
+    list (-1 = untracked; a gram evicted to count 0 stays tracked, and the
+    count-overlap score depends on that), distinct-gram overlap as a
+    counter maintained on 0<->1 count transitions.  Equivalence with the
+    reference-shaped partial candidate is pinned by
+    tests/test_sweep_equivalence.py."""
     if not gk:
         return []
     # pre-gate: a window's distinct-gram overlap can never exceed the
     # stream's global distinct count, so if even that upper bound is
-    # below the threshold no emit is possible and the sweep is a no-op.
-    # (Same float expression as the emit check, so no boundary drift.)
-    # Two tiers: len(gk) >= len(set(gk)), so the raw length is an even
-    # cheaper upper bound — only when it is inconclusive (passes) do we
-    # pay the O(n) set build, keeping dense-match docs near-free.
-    if len(gk) / len(cp.gram_set) < skipgram_threshold:
-        return []
-    if len(gk) > len(cp.gram_set) \
-            and len(set(gk)) / len(cp.gram_set) < skipgram_threshold:
-        return []
-    candidates: List[_Candidate] = []
-    early = cp.early
-    late = cp.late
-    first_off = cp.gram_first_offset
-    freq = cp.gram_freq
-    num_grams = cp.num_grams
-    name_len = len(cp.name)
-    max_len = name_len + mlv
-    low_len = cp.late_threshold - mlv
-    gram_set_size = len(cp.gram_set)  # overlap compared as a ratio, same
-    last = len(gk) - 1                # float expression as the reference
-
-    # window state: the partial is grams[h..ci] (empty when h > ci);
-    # gcount keeps zero-count entries after eviction — the count-overlap
-    # score depends on those zeros staying present
-    h = 0
-    gset: set = set()
-    gcount: Dict = {}
-    cdiff = 0  # running sum of |count - phrase_freq| over touched keys
-    start: Optional[int] = -1
-    end = -1
-    ci = 0
-
-    freq_get = freq.get
-
-    def pop_front() -> None:
-        nonlocal h, cdiff
-        k0 = gk[h]
-        h += 1
-        c0 = gcount[k0] - 1
-        gcount[k0] = c0
-        # integer counts: |c0-f| - |c0+1-f| is -1 when c0 >= f, else +1
-        cdiff += -1 if c0 >= freq_get(k0, 0) else 1
-        if c0 == 0:
-            gset.discard(k0)
-
-    def emit() -> None:
-        # finalize the current partial as a candidate (dup-suppressed
-        # against the last emission), then optionally re-anchor the start
-        # on a later gram and emit the shifted candidate as well
-        nonlocal start
-        if start == end:
-            return  # zero-width span: the reference would raise here
-        if not candidates or not (candidates[-1].start == start
-                                  and candidates[-1].end == end):
-            candidates.append(_Candidate(cp, start, end, text[start:end],
-                                         (ci - h + 1 - cdiff) / num_grams))
-        # shift_start (reference candidate_match.py:173-204)
-        if end - start > name_len:
-            anchor_start = gs[h]
-            best_po = first_off[gk[h]]
-            best_idx = 0
-            best_start = anchor_start
-            slack = (end - start) - name_len
-            for si in range(h, ci + 1):
-                k2 = gk[si]
-                s2 = gs[si]
-                if s2 - anchor_start > slack:
-                    break  # a later start would leave the match too short
-                po = first_off[k2]
-                if s2 > best_start and po <= best_po:
-                    best_idx, best_start, best_po = si - h, s2, po
-                if k2 not in early:
-                    break
-            for _ in range(best_idx):
-                pop_front()
-            off = gs[h] - first_off[gk[h]]
-            start = 0 if off < 0 else off
-            if best_idx > 0 and start != end:
-                candidates.append(_Candidate(cp, start, end, text[start:end],
-                                             (ci - h + 1 - cdiff) / num_grams))
-
-    for ci in range(last + 1):
-        key = gk[ci]
-        # the window before adding gram ci is grams[h..ci-1]: empty iff h >= ci
-        if h >= ci:
-            # empty partial: it only opens on an early gram — but a fully
-            # evicted partial still carries zero-count gcount entries that
-            # feed the count-overlap score, so the gap reset must still
-            # fire before skipping
-            if key not in early:
-                h = ci + 1  # stays empty at the next index
-                if gcount and ci < last:
-                    ns = gs[ci + 1]
-                    if ns and ns - gs[ci] > gap_limit:
-                        gset = set()
-                        gcount = {}
-                        cdiff = 0
-                        start = -1
-                        end = -1
-                continue
-            h = ci  # the window opens on this gram
-        # --- add the gram (reference add_skip_match) ---
-        gset.add(key)
-        if start is None or start < 0:
-            off = gs[h] - first_off[gk[h]]
-            start = 0 if off < 0 else off
-        gram_end = gs[ci] + gl[ci]
-        if gram_end > end:
-            end = gram_end
-        c_old = gcount.get(key)
-        if c_old is None:
-            f_new = freq_get(key, 0)
-            gcount[key] = 1
-            cdiff += f_new - 1 if f_new >= 1 else 1 - f_new
-        else:
-            # the key may be present with count 0 (evicted): its |0-f|
-            # contribution must be replaced, not added to; for integer
-            # counts that delta is +1 when c_old >= f, else -1
-            gcount[key] = c_old + 1
-            cdiff += 1 if c_old >= freq_get(key, 0) else -1
-        # evict from the front while the span is too long for the phrase
-        while h <= ci and end - start > max_len:
-            pop_front()
-            if h <= ci:
-                off = gs[h] - first_off[gk[h]]
-                start = 0 if off < 0 else off
-            else:
-                start = None
-                break
-        # ... and while the front gram can no longer start a match
-        while h <= ci and gk[h] not in early:
-            pop_front()
-            if h <= ci:
-                off = gs[h] - first_off[gk[h]]
-                start = 0 if off < 0 else off
-            else:
-                start = None
-        # --- is_match (reference candidate_match.py:234-269) ---
-        if h <= ci and gk[h] in early:
-            span = end - start
-            if (span <= max_len and span >= low_len
-                    and key in late
-                    and len(gset) / gram_set_size >= skipgram_threshold):
-                emit()
-        next_start = gs[ci + 1] if ci < last else None
-        if next_start and next_start - gs[ci] > gap_limit:
-            # the gap to the next matched gram exceeds a whole skipgram:
-            # it cannot belong to this candidate
-            h = ci + 1
-            gset = set()
-            gcount = {}
-            cdiff = 0
-            start = -1
-            end = -1
-    # end of gram stream: check the remaining partial
-    if h <= last and gk[h] in early:
-        span = end - start
-        if (span <= max_len and span >= low_len
-                and gk[last] in late
-                and len(gset) / gram_set_size >= skipgram_threshold):
-            emit()
-    return candidates
-
-
-def _sweep_candidates_local(cp: CompiledPhrase, gk, gs, gl, text: str,
-                            skipgram_threshold: float, mlv: int,
-                            gap_limit: int) -> List[_Candidate]:
-    """Same state machine as ``_sweep_candidates``, taking the phrase-LOCAL
-    dense gram ids the vectorized accumulator already derives (positions in
-    ``cp.sorted_keys_np``), so every per-visit dict/set operation becomes
-    flat list indexing: counts as an int list (-1 = untracked, mirroring
-    the dict's present-at-zero vs absent distinction the count-overlap
-    score depends on), distinct-gram overlap as a counter maintained on
-    0<->1 count transitions.  Equivalence with the generic sweep is pinned
-    by tests/test_sweep_equivalence.py."""
-    if not gk:
-        return []
-    # pre-gate: same global-distinct upper bound as _sweep_candidates —
-    # a sweep whose whole stream can't reach the overlap threshold in
-    # any window is skipped outright (big win on sparse corpora where
-    # most phrases share only a few grams with most documents).
+    # below the threshold no emit is possible and the sweep is skipped
+    # outright (big win on sparse corpora where most phrases share only a
+    # few grams with most documents).
     if len(set(gk)) / len(cp.loc_freq) < skipgram_threshold:
         return []
     candidates: List[_Candidate] = []
@@ -647,77 +360,16 @@ def _known_word_changes(index: Dict[int, dict]) -> List[Tuple[int, Optional[dict
     return changes
 
 
-def _accumulate_python(hits, model: CompiledModel, cfg, mlv: int,
-                       changes) -> list:
-    """Per-hit accumulation (fallback for string-keyed models / short
-    texts): returns [(compiled_phrase, gram_list)] for phrases passing the
-    skipgram-set overlap prefilter, in first-surviving-hit order."""
-    acc: Dict[CompiledPhrase, list] = {}
-    change_i = 0
-    n_changes = len(changes)
-    known: Optional[dict] = None
-    gram_to_phrases = model.gram_to_phrases
-    gram_to_variants = model.gram_to_variants
-    include_variants = cfg.include_variants
-    word_in_phrase = model.word_in_phrase
-    acc_get = acc.get
-    for gram in hits:
-        key, gstart, glen = gram
-        if change_i < n_changes:
-            while change_i < n_changes and changes[change_i][0] <= gstart:
-                known = changes[change_i][1]
-                change_i += 1
-        plist = gram_to_phrases.get(key)
-        if plist is not None:
-            for cp in plist:
-                if cp.needs_offset_prune:
-                    if cp.max_start_offset > 0 and \
-                            cp.max_start_end + mlv < gstart + glen:
-                        continue
-                    if cp.max_end_offset > 0 and \
-                            gstart + glen > cp.max_end_offset + mlv:
-                        # intended max_end pruning (crashes in the reference)
-                        continue
-                if known is not None and cp.name in known["match_phrases"]:
-                    continue
-                ent = acc_get(cp)
-                if ent is None:
-                    acc[cp] = [{key}, [gram]]
-                else:
-                    ent[0].add(key)
-                    ent[1].append(gram)
-        if include_variants:
-            vlist = gram_to_variants.get(key)
-            if vlist is not None:
-                for vp in vlist:
-                    if known is not None:
-                        if vp.name not in word_in_phrase.get(
-                                known["word"], ()):
-                            continue
-                        if vp.name in known["match_phrases"]:
-                            continue
-                    ent = acc_get(vp)
-                    if ent is None:
-                        acc[vp] = [{key}, [gram]]
-                    else:
-                        ent[0].add(key)
-                        ent[1].append(gram)
-    return [
-        (cp, grams) for cp, (gset, grams) in acc.items()
-        if len(gset) / len(cp.gram_set) >= cfg.skipgram_threshold
-    ]
-
-
-def _accumulate_vectorized(hits, model: CompiledModel, cfg, mlv: int,
-                           changes) -> list:
+def _accumulate(hits, model: CompiledModel, cfg, mlv: int,
+                changes) -> list:
     """NumPy accumulation: no Python work per hit.  For each searchable
-    phrase, membership of the hit-key stream against the phrase's sorted
-    key array gives its gram sublist directly; a cheap distinct-key
-    over-approximation skips phrases below the skipgram threshold before
-    any per-hit materialization (suppression/pruning only shrink the match
-    set, so the over-approximation is safe).  Output order replicates the
-    per-hit path: (first surviving hit, mains before variants, model
-    order)."""
+    phrase, membership of the hit-code stream against the phrase's sorted
+    codes gives its gram sublist directly, as phrase-local ids; a cheap
+    distinct-code over-approximation skips phrases below the skipgram
+    threshold before any per-hit materialization (suppression/pruning only
+    shrink the match set, so the over-approximation is safe).  Output order
+    is the reference's per-hit order: (first surviving hit, mains before
+    variants, model order)."""
     import numpy as np
 
     keys, starts, lens = hits
@@ -727,8 +379,6 @@ def _accumulate_vectorized(hits, model: CompiledModel, cfg, mlv: int,
     ends = starts + lens
     thr = cfg.skipgram_threshold
 
-    bounds = None
-    entries = None
     if changes:
         bounds = np.array([c[0] for c in changes], dtype=np.int64)
         entries = [c[1] for c in changes]
@@ -744,6 +394,8 @@ def _accumulate_vectorized(hits, model: CompiledModel, cfg, mlv: int,
     for kind, rank, cp in searchables:
         pk = cp.sorted_keys_np
         gram_set_size = len(cp.gram_set)
+        if not gram_set_size:
+            continue  # an empty phrase has no grams at ngram_size 1
         # over-approximate distinct overlap on the doc's unique keys
         pos = np.searchsorted(uniq, pk)
         np.minimum(pos, uniq.size - 1, out=pos)
@@ -777,14 +429,13 @@ def _accumulate_vectorized(hits, model: CompiledModel, cfg, mlv: int,
             continue
         # pos[idx] are exact positions in sorted_keys_np (pk[pos] == keys on
         # the mask), i.e. phrase-local dense gram ids — distinct-count
-        # equivalent to the raw keys, and the local sweep's native currency
+        # equivalent to the codes, and the sweep's native currency
         lkeys = pos[idx]
         if np.unique(lkeys).size / gram_set_size < thr:
             continue
         # parallel lists, not tuples: the sweep indexes columns directly,
         # so no per-gram tuple objects are ever materialized
-        grams = (lkeys.tolist(), starts[idx].tolist(), lens[idx].tolist(),
-                 True)
+        grams = (lkeys.tolist(), starts[idx].tolist(), lens[idx].tolist())
         ordered.append((int(idx[0]), kind, rank, cp, grams))
     ordered.sort(key=lambda t: (t[0], t[1], t[2]))
     return [(t[3], t[4]) for t in ordered]
@@ -809,25 +460,16 @@ def find_matches(text: str, model: CompiledModel,
     hits = model.scanner.scan_arrays(scan_text)
     changes = _known_word_changes(known_index) if known_index else []
 
-    if isinstance(hits, list):
-        per_phrase = _accumulate_python(hits, model, cfg, mlv, changes)
-    else:
-        per_phrase = _accumulate_vectorized(hits, model, cfg, mlv, changes)
+    per_phrase = _accumulate(hits, model, cfg, mlv, changes)
 
     # 4-5: per-phrase prefilter (done inside accumulation) + candidate
     # assembly, grouped by main phrase
     gap_limit = cfg.ngram_size + cfg.skip_size + 1
     groups: Dict[str, List[_Candidate]] = {}
-    for cp, grams in per_phrase:
+    for cp, (gk, gs, gl) in per_phrase:
         main = model.is_variant_of.get(cp.name, cp.name)
-        if isinstance(grams, tuple) and len(grams) == 4:
-            # local-id stream from the vectorized accumulator
-            cands = _sweep_candidates_local(cp, grams[0], grams[1], grams[2],
-                                            text, cfg.skipgram_threshold,
-                                            mlv, gap_limit)
-        else:
-            cands = _sweep_candidates(cp, grams, text,
-                                      cfg.skipgram_threshold, mlv, gap_limit)
+        cands = _sweep_candidates(cp, gk, gs, gl, text,
+                                  cfg.skipgram_threshold, mlv, gap_limit)
         groups.setdefault(main, []).extend(cands)
 
     # 6-7: boundary snapping + per-phrase overlap dedup

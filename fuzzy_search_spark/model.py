@@ -9,10 +9,11 @@ hash.
 Semantics contract (reference: phrase/phrase.py:29-119 and
 phrase/phrase_model.py:80-155):
 
-- A phrase compiles into its skipgram occurrence list, distinct-gram set,
-  gram frequency counter, first-occurrence offset per gram, and "early"/
-  "late" gram subsets (grams starting before ``early_threshold``, grams
-  reaching past ``len(phrase) - late_threshold - ngram_size``).
+- A phrase compiles into its skipgram occurrence list and distinct-gram set,
+  plus, per distinct gram in gram-code order, its frequency, first start
+  offset and "early"/"late" flags (grams starting before
+  ``early_threshold``, grams reaching past ``len(phrase) - late_threshold -
+  ngram_size``).
 - A model registers phrases, spelling variants (resolved back to their main
   phrase on match), distractors (used to reject matches that fit a
   look-alike better) and labels; words of every phrase/variant/distractor
@@ -36,7 +37,7 @@ from fuzzy_search_spark.kernels.skipgrams import GramKey, GramScanner, keyed_ski
 _WORD_RE = re.compile(r"\w+")
 
 
-@dataclass(eq=False)  # identity hash: phrases key accumulator dicts
+@dataclass(eq=False)  # identity equality and hash
 class CompiledPhrase:
     """One phrase (or variant, or distractor) compiled for matching."""
 
@@ -44,10 +45,6 @@ class CompiledPhrase:
     match_text: str              # string grams were computed from (lowered if ignorecase)
     grams: List[Tuple[GramKey, int, int]]          # (key, start, length) occurrences
     gram_set: Set[GramKey] = field(default_factory=set)
-    gram_freq: Dict[GramKey, int] = field(default_factory=dict)
-    gram_first_offset: Dict[GramKey, int] = field(default_factory=dict)
-    early: Set[GramKey] = field(default_factory=set)
-    late: Set[GramKey] = field(default_factory=set)
     num_grams: int = 0
     late_threshold: int = 0
     label: Union[None, str, List[str]] = None
@@ -57,20 +54,17 @@ class CompiledPhrase:
     metadata: dict = field(default_factory=dict)
     # plain field (not a property): read once per (gram x phrase) probe
     needs_offset_prune: bool = False
-    # sorted int64 key array for vectorized membership tests (None when the
-    # model uses string keys, i.e. ngram_size > 3)
+    # the phrase's distinct grams as sorted int64 codes (the scanner's
+    # format), set by compile_model on every searched phrase
     sorted_keys_np: object = None
     # flat per-local-id tables aligned with sorted_keys_np (local id =
-    # position in sorted_keys_np): the sweep's per-visit state then indexes
-    # lists instead of hashing gram keys into dicts/sets
-    loc_freq: Optional[List[int]] = None
-    loc_first: Optional[List[int]] = None
-    loc_early: Optional[List[bool]] = None
-    loc_late: Optional[List[bool]] = None
-
-    @property
-    def has_max_start(self) -> bool:
-        return self.max_start_offset >= 0
+    # position in sorted_keys_np): each distinct gram's count, first start
+    # offset, and whether it is early (may open a candidate) or late (may
+    # close one).  The sweep's per-visit state then indexes lists.
+    loc_freq: List[int] = field(default_factory=list)
+    loc_first: List[int] = field(default_factory=list)
+    loc_early: List[bool] = field(default_factory=list)
+    loc_late: List[bool] = field(default_factory=list)
 
     def refresh_prune_flag(self) -> None:
         self.needs_offset_prune = (
@@ -83,24 +77,28 @@ def compile_phrase(phrase: Union[str, dict], config: SearchConfig) -> CompiledPh
     name = props["phrase"]
     match_text = name.lower() if config.ignorecase else name
     grams = keyed_skipgrams(match_text, config.ngram_size, config.skip_size)
-    gram_first: Dict[GramKey, int] = {}
+    first: Dict[GramKey, int] = {}
     for key, start, _length in grams:
-        if key not in gram_first:
-            gram_first[key] = start
+        first.setdefault(key, start)
+    freq = Counter(g[0] for g in grams)
     late_cut = len(name) - config.late_threshold - config.ngram_size
+    late = {g[0] for g in grams if g[1] + g[2] > late_cut}
+    # key order is also code order: a rank code sorts as its string
+    keys = sorted(first)
     cp = CompiledPhrase(
         name=name,
         match_text=match_text,
         grams=grams,
-        gram_set={g[0] for g in grams},
-        gram_freq=dict(Counter(g[0] for g in grams)),
-        gram_first_offset=gram_first,
-        early={g[0] for g in grams if g[1] < config.early_threshold},
-        late={g[0] for g in grams if g[1] + g[2] > late_cut},
+        gram_set=set(keys),
         num_grams=len(grams),
         late_threshold=late_cut,
         label=props.get("label"),
         metadata=props,
+        loc_freq=[freq[k] for k in keys],
+        loc_first=[first[k] for k in keys],
+        # grams run in start order, so a gram's first start is its lowest
+        loc_early=[first[k] < config.early_threshold for k in keys],
+        loc_late=[k in late for k in keys],
     )
     if isinstance(props.get("max_start_offset"), int) and props["max_start_offset"] >= 0:
         cp.max_start_offset = props["max_start_offset"]
@@ -108,15 +106,6 @@ def compile_phrase(phrase: Union[str, dict], config: SearchConfig) -> CompiledPh
     if isinstance(props.get("max_end_offset"), int) and props["max_end_offset"] >= 0:
         cp.max_end_offset = props["max_end_offset"]
     cp.refresh_prune_flag()
-    if all(isinstance(k, int) for k in cp.gram_set):
-        import numpy as np
-
-        skeys = sorted(cp.gram_set)
-        cp.sorted_keys_np = np.array(skeys, dtype=np.int64)
-        cp.loc_freq = [cp.gram_freq[k] for k in skeys]
-        cp.loc_first = [cp.gram_first_offset[k] for k in skeys]
-        cp.loc_early = [k in cp.early for k in skeys]
-        cp.loc_late = [k in cp.late for k in skeys]
     return cp
 
 
@@ -226,6 +215,11 @@ def compile_model(phrases: Sequence[Union[str, dict]],
     if cfg.include_variants:
         vocab |= set(gram_to_variants)
     scanner = GramScanner(vocab, cfg.ngram_size, cfg.skip_size)
+    searched = list(main.values())
+    if cfg.include_variants:
+        searched += variants.values()
+    for cp in searched:
+        cp.sorted_keys_np = scanner.codes(sorted(cp.gram_set))
 
     return CompiledModel(
         config=cfg,

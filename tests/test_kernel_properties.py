@@ -6,6 +6,7 @@ exact reference behavior; properties guard the whole input space."""
 
 import string as stdlib_string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -77,16 +78,19 @@ def test_skipgram_count_formula(text):
         assert start + length <= n or n <= 2
 
 
+@pytest.mark.parametrize("ngram_size,skip_size",
+                         [(2, 2), (3, 1), (4, 1), (1, 0)])
 @settings(max_examples=200, deadline=None)
-@given(st.text(alphabet=stdlib_string.ascii_lowercase + " .#", min_size=0,
-               max_size=120))
-def test_vectorized_scanner_equals_generator(text):
-    """The NumPy scanner (the production scan path, incl. texts >= 64
-    chars) returns exactly the generator's grams filtered to the
-    vocabulary, in the same order."""
-    vocab = {k for k, _, _ in keyed_skipgrams("the quick # brown", 2, 2)}
-    scanner = GramScanner(vocab, 2, 2)
+@given(text=st.text(alphabet=stdlib_string.ascii_lowercase + " .#",
+                    min_size=0, max_size=80))
+def test_vectorized_scanner_equals_generator(ngram_size, skip_size, text):
+    """The scanner (NumPy for ngram_size <= 3, rank codes above) returns
+    exactly the generator's grams filtered to the vocabulary, in the same
+    order, for every text length."""
+    vocab = {k for k, _, _ in keyed_skipgrams("the quick # brown",
+                                              ngram_size, skip_size)}
+    scanner = GramScanner(vocab, ngram_size, skip_size)
     got = scanner.scan(text)
-    expect = [(k, s, ln) for k, s, ln in keyed_skipgrams(text, 2, 2)
-              if k in vocab]
+    expect = [(k, s, ln) for k, s, ln in keyed_skipgrams(
+        text, ngram_size, skip_size) if k in vocab]
     assert got == expect

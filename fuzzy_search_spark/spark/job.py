@@ -543,14 +543,26 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
     listing = hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]
     fingerprint += (f":url={url_col}:text={text_col}:html={html_col}"
                     f":groups={num_groups}:files={listing}")
-    manifest_path = os.path.join(output_path, "_manifest.jsonl")
-    metrics_dir = os.path.join(output_path, "_metrics")
+    if table_format == "iceberg":
+        state_root = output_path
+    else:
+        # one handle for the staging and final directories of every group
+        fs, root = pafs.FileSystem.from_uri(
+            output_path if "://" in output_path
+            else os.path.abspath(output_path))
+        # the manifest and metrics are written through os.*, which reads a
+        # file:// URI as a relative path: on a local filesystem they take
+        # the matches' root instead
+        state_root = (root if isinstance(fs, pafs.LocalFileSystem)
+                      else output_path)
+    manifest_path = os.path.join(state_root, "_manifest.jsonl")
+    metrics_dir = os.path.join(state_root, "_metrics")
     os.makedirs(metrics_dir, exist_ok=True)
 
     # read even without resume: it cuts a torn last line before the
     # appends below.  A group's directory holds the rows of its newest
     # line only, so an older line with this fingerprint proves nothing.
-    entries = _drop_groups_from(spark, output_path, num_groups,
+    entries = _drop_groups_from(spark, state_root, num_groups,
                                 _read_manifest(manifest_path),
                                 manifest_path, table_format)
     newest = {entry["group"]: entry for entry in entries}
@@ -570,10 +582,6 @@ def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,
         schema = (_read_schema(spark, files[0],
                                [c for c in (url_col, text_col, html_col) if c])
                   if table_format == "parquet" else None)
-        # one handle for the staging and final directories of every group
-        fs, root = pafs.FileSystem.from_uri(
-            output_path if "://" in output_path
-            else os.path.abspath(output_path))
     # broadcast once, before the first group, from the caller's thread
     bc_model = sc.broadcast(model) if todo else None
     lock = threading.Lock()     # the manifest and the summary

@@ -383,6 +383,31 @@ def test_resume_file_listing_drift(spark, pages4_path, tmp_path):
     assert s2["docs"] > s1["docs"]
 
 
+def test_file_uri_output_keeps_its_state(spark, pages4_path, tmp_path,
+                                         monkeypatch):
+    """With a file:// output the manifest and metrics sit next to the
+    matches, so a run from another working directory skips every group,
+    and neither run leaves a ``file:`` directory where it ran."""
+    from fuzzy_search_spark.spark.job import run_extraction_job
+
+    model = compile_model(README_MODEL, README_CONFIG)
+    out = tmp_path / "uri_out"
+    first, second = tmp_path / "cwd1", tmp_path / "cwd2"
+    first.mkdir()
+    second.mkdir()
+    monkeypatch.chdir(first)
+    s1 = run_extraction_job(spark, pages4_path, out.as_uri(), model,
+                            num_groups=2)
+    assert s1["ran"] == [0, 1]
+    assert sorted(os.listdir(out)) == ["_manifest.jsonl", "_metrics",
+                                       "matches"]
+    monkeypatch.chdir(second)
+    s2 = run_extraction_job(spark, pages4_path, out.as_uri(), model,
+                            num_groups=2)
+    assert s2["ran"] == [] and s2["skipped"] == [0, 1]
+    assert os.listdir(first) == [] and os.listdir(second) == []
+
+
 def test_extraction_job_broadcasts_model_once(spark, pages_path, tmp_path,
                                               monkeypatch):
     """run_extraction_job ships the model once per job, not once per group:

@@ -72,9 +72,8 @@ def host_page_cap(df: DataFrame, max_pages_per_host: int = 1000,
                   url_col: str = "url") -> DataFrame:
     """Crawl-budget enforcement: keep at most ``max_pages_per_host`` pages
     per host, selected DETERMINISTICALLY by md5(url) rank (unbiased w.r.t.
-    crawl order, stable under retries / repartitioning / re-runs — the
-    same properties as the stratified sampler in ``mixing.py``, which a
-    ``LIMIT``-per-group or ``sample()`` would not have).
+    crawl order, stable under retries / repartitioning / re-runs, which a
+    ``LIMIT``-per-group or ``sample()`` would not be).
 
     SEO-heavy hosts contribute millions of near-template pages; capping
     per host is the standard pre-dedup volume gate (C4/RefinedWeb keep

@@ -194,71 +194,6 @@ def test_url_dup_groups_merges_variants(spark):
 
 
 # ---------------------------------------------------------------------------
-# corpus mixing: mixture_plan + corpus_sample
-# ---------------------------------------------------------------------------
-
-def test_mixture_plan_crafted(spark):
-    from fuzzy_search_spark.pipeline.mixing import mixture_plan
-
-    rows = [
-        (1, "a", "one two three four"),          # 4 tokens
-        (2, "a", "five six"),                     # stratum a: 6 tokens
-        (3, "b", "x " * 99 + "x"),                # stratum b: 100 tokens
-        (4, "c", "only excluded stratum here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = {r.source: r for r in
-           mixture_plan(df, {"a": 3.0, "b": 1.0}, 40).collect()}
-    assert set(out) == {"a", "b"}                 # 'c' has no weight
-    # a: weight 0.75 -> 30 target tokens over 6 available -> capped at 1.0
-    assert out["a"].n_docs == 2 and out["a"].n_tokens == 6
-    assert out["a"].target_tokens == 30.0 and out["a"].rate == 1.0
-    # b: weight 0.25 -> 10 target over 100 -> rate 0.1
-    assert out["b"].n_tokens == 100 and out["b"].rate == pytest.approx(0.1)
-
-
-def test_corpus_sample_deterministic_and_monotone(spark):
-    import hashlib
-
-    from fuzzy_search_spark.pipeline.mixing import corpus_sample
-
-    rows = [(i, "s", "text") for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-
-    def py_bucket(i):
-        return int(hashlib.md5(f"mix-v1:{i}".encode())
-                   .hexdigest()[:15], 16) % 1_000_000
-
-    got = {r.doc_id: r.bucket
-           for r in corpus_sample(df, {"s": 0.3}).collect()}
-    want = {i: py_bucket(i) for i in range(200)
-            if py_bucket(i) < 300_000}
-    assert got == want                            # matches python oracle
-
-    # deterministic under repartitioning (unlike DataFrame.sample)
-    again = {r.doc_id for r in
-             corpus_sample(df.repartition(7), {"s": 0.3}).collect()}
-    assert again == set(want)
-
-    # monotone: raising the rate only ever ADDS documents
-    bigger = {r.doc_id for r in corpus_sample(df, {"s": 0.6}).collect()}
-    assert set(want) <= bigger
-
-
-def test_corpus_sample_accepts_plan_df(spark):
-    from fuzzy_search_spark.pipeline.mixing import corpus_sample, mixture_plan
-
-    rows = [(i, "a" if i % 2 else "b", "w1 w2 w3 w4 w5") for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    plan = mixture_plan(df, {"a": 1.0, "b": 1.0}, 100)
-    sampled = corpus_sample(df, plan)
-    # rates = 50 target / 250 stratum tokens = 0.2 -> roughly 20 docs
-    n = sampled.count()
-    assert 0 < n < 100
-    assert set(sampled.columns) == {"doc_id", "source", "bucket"}
-
-
-# ---------------------------------------------------------------------------
 # token counting: regex pre-tokenizer + distributed BPE encode
 # ---------------------------------------------------------------------------
 
@@ -369,76 +304,6 @@ def test_decontaminate_broadcasts_bench(spark):
     assert plan.count("hashpartitioning(span_hash") <= 1, plan
 
 
-def test_mixing_is_broadcast_and_lazy(spark):
-    """corpus_sample shuffles NOTHING (broadcast rate table + row filter)
-    and neither mixing op fires a Spark job at plan-construction time."""
-    from fuzzy_search_spark.pipeline.mixing import corpus_sample, mixture_plan
-
-    from pyspark.sql import functions as F
-
-    docs = _docs(spark).withColumn(
-        "source", (F.col("doc_id") % 2 == 0).cast("string"))
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    plan_df = mixture_plan(docs, {"true": 2.0, "false": 1.0},
-                           token_budget=100)
-    sample = corpus_sample(docs, {"true": 0.5, "false": 0.25})
-    after = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
-    assert after == before, "plan construction ran eager Spark jobs"
-
-    splan = _plan(sample)
-    assert "BroadcastHashJoin" in splan
-    assert "Exchange hashpartitioning" not in splan, splan
-    assert plan_df.count() == 2 and sample.count() > 0
-
-
-
-def test_packing_plan_invariants(spark):
-    """Per-shard packing: positions are dense, running sums are
-    consistent (start_tok of pos p == start_tok + n_tokens of pos p-1),
-    bins honor the budget arithmetic, and the plan is deterministic
-    across repartitioning."""
-    from fuzzy_search_spark.pipeline.mixing import packing_plan
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(5 + i % 17)))
-         for i in range(60)],
-        "doc_id long, text string")
-    rows = packing_plan(docs, max_tokens=32, num_shards=4).collect()
-    assert len(rows) == 60
-
-    by_shard = {}
-    for r in rows:
-        by_shard.setdefault(r.shard, []).append(r)
-    assert set(by_shard) <= {0, 1, 2, 3}
-    for shard, members in by_shard.items():
-        members.sort(key=lambda r: r.pos)
-        assert [m.pos for m in members] == list(range(len(members)))
-        cum = 0
-        for m in members:
-            assert m.start_tok == cum
-            assert m.bin_id == cum // 32
-            assert m.bin_offset == cum % 32
-            cum += m.n_tokens
-
-    # deterministic under input repartitioning
-    again = {r.doc_id: (r.shard, r.pos, r.bin_id) for r in
-             packing_plan(docs.repartition(7), max_tokens=32,
-                          num_shards=4).collect()}
-    assert again == {r.doc_id: (r.shard, r.pos, r.bin_id) for r in rows}
-
-
-def test_packing_plan_no_global_window(spark):
-    """The cumulative sum windows over SHARD, never a single partition."""
-    from fuzzy_search_spark.pipeline.mixing import packing_plan
-
-    out = packing_plan(_docs(spark), max_tokens=64, num_shards=8)
-    plan = _plan(out)
-    assert "windowspecdefinition(shard" in plan
-    assert "Exchange SinglePartition" not in plan
-    assert "Python" not in plan
-
-
 def test_tfidf_topk_crafted(spark):
     """TF-IDF keywords: a term unique to one doc outranks corpus-wide
     terms; ranking is dense 1..k; ubiquitous terms get the lowest idf."""
@@ -494,127 +359,6 @@ def test_tfidf_topk_plan_shape(spark):
     # the only SinglePartition exchange is the one-row corpus-count
     # total that gets broadcast (the blessed scalar-totals pattern)
     assert final.count("Exchange SinglePartition") <= 1
-
-
-# ---------------------------------------------------------------------------
-# Stupid-Backoff bigram LM quality scoring (pipeline/lm.py)
-# ---------------------------------------------------------------------------
-
-
-def test_lm_bigram_training_counts(spark):
-    from fuzzy_search_spark.pipeline.lm import train_bigram_lm
-
-    train = spark.createDataFrame(
-        [(0, "the cat sat"), (2, "the cat ran"), (4, "")],
-        "doc_id long, text string")
-    uni, big, tot = train_bigram_lm(train)
-    assert sorted((r.w, r.c) for r in uni.collect()) == [
-        ("cat", 2), ("ran", 1), ("sat", 1), ("the", 2)]
-    # context counts attached; <s> context = n_docs (incl. the empty doc)
-    assert sorted((r.g, r.c12, r.c1) for r in big.collect()) == [
-        ("<s> the", 2, 3), ("cat ran", 1, 2), ("cat sat", 1, 2),
-        ("the cat", 2, 2)]
-    t = tot.collect()[0]
-    assert (t.train_tokens, t.vocab_size, t.n_docs) == (6, 4, 3)
-
-
-def test_lm_score_documents_hand_computed(spark):
-    """Seen-bigram, backoff-unigram and OOV paths, against hand math;
-    empty docs survive with zero counts and perplexity 1."""
-    import math
-
-    from fuzzy_search_spark.pipeline.lm import (score_documents,
-                                                train_bigram_lm)
-
-    train = spark.createDataFrame(
-        [(0, "the cat sat"), (2, "the cat ran"), (4, "")],
-        "doc_id long, text string")
-    uni, big, tot = train_bigram_lm(train)
-    score = spark.createDataFrame(
-        [(0, "the cat sat"), (1, "the dog"), (9, "")],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           score_documents(score, uni, big, tot).collect()}
-
-    # doc 0: (<s> the) 2/3, (the cat) 2/2, (cat sat) 1/2 - all seen bigrams
-    exp0 = (round(math.log10(2 / 3) * 1e6) + 0
-            + round(math.log10(0.5) * 1e6))
-    assert out[0].n_scored == 3
-    assert out[0].sum_logp_micro == exp0
-    # doc 1: (<s> the) seen; (the dog) OOV word -> alpha/(T+V+1) = 0.4/11
-    exp1 = (round(math.log10(2 / 3) * 1e6)
-            + round(math.log10(0.4 / 11) * 1e6))
-    assert out[1].sum_logp_micro == exp1
-    assert out[1].avg_logp == round(exp1 / 2) / 1e6
-    assert out[1].perplexity == round(10 ** -out[1].avg_logp, 4)
-    # empty doc: kept, zeroed, ppl 1
-    assert (out[9].n_scored, out[9].sum_logp_micro,
-            out[9].avg_logp, out[9].perplexity) == (0, 0, 0.0, 1.0)
-
-
-def test_lm_backoff_seen_unigram_path(spark):
-    """A word seen in training but in an unseen bigram takes the
-    alpha*(c+1)/(T+V+1) unigram backoff."""
-    import math
-
-    from fuzzy_search_spark.pipeline.lm import (score_documents,
-                                                train_bigram_lm)
-
-    train = spark.createDataFrame(
-        [(0, "a b"), (2, "b c")], "doc_id long, text string")
-    uni, big, tot = train_bigram_lm(train)
-    # bigram "a c" unseen; c seen (count 1); T=4 V=3
-    out = score_documents(
-        spark.createDataFrame([(1, "a c")], "doc_id long, text string"),
-        uni, big, tot).collect()[0]
-    exp = (round(math.log10(1 / 2) * 1e6)           # (<s> a): 1/2 docs
-           + round(math.log10(0.4 * 2 / 8) * 1e6))  # backoff for c
-    assert out.sum_logp_micro == exp
-
-
-def test_lm_plan_shape(spark):
-    """LM training + scoring stays JVM-side: zero SortAggregates (numeric
-    agg buffers), no Python stage, and no per-doc Window — pair
-    construction is zip_with over shifted slices.  The two-tier skew
-    guard must surface as a BroadcastHashJoin (the hot-gram tier joins
-    map-side; only tail-gram rows shuffle)."""
-    from fuzzy_search_spark.pipeline.lm import (score_documents,
-                                                train_bigram_lm)
-
-    docs = _docs(spark)
-    uni, big, tot = train_bigram_lm(docs)
-    out = score_documents(docs, uni, big, tot)
-    plan = _plan(out)
-    assert "SortAggregate" not in plan
-    assert "Python" not in plan
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan  # hot tier of the skew guard
-
-
-def test_lm_two_tier_equivalence(spark):
-    """The skew guard is a pure execution-strategy change: scores with
-    the hot tier enabled (even a tiny hot_k that splits the stream into
-    both tiers) match the plain shuffle-join path row for row, for both
-    the bigram and trigram scorers."""
-    from fuzzy_search_spark.pipeline.lm import (score_documents,
-                                                score_documents_trigram,
-                                                train_bigram_lm,
-                                                train_trigram_lm)
-
-    docs = _docs(spark)
-    uni, big, tot = train_bigram_lm(docs)
-    plain = sorted(map(tuple, score_documents(
-        docs, uni, big, tot, hot_k=0).collect()))
-    tiered = sorted(map(tuple, score_documents(
-        docs, uni, big, tot, hot_k=3).collect()))
-    assert plain == tiered
-
-    uni3, big3, tri3, tot3 = train_trigram_lm(docs)
-    plain3 = sorted(map(tuple, score_documents_trigram(
-        docs, uni3, big3, tri3, tot3, hot_k=0).collect()))
-    tiered3 = sorted(map(tuple, score_documents_trigram(
-        docs, uni3, big3, tri3, tot3, hot_k=3).collect()))
-    assert plain3 == tiered3
 
 
 def test_fix_mojibake_crafted(spark):
@@ -738,92 +482,6 @@ def test_crawl_delta_statuses(spark):
     assert plan.count("md5") >= 2      # digests computed BELOW the join
 
 
-def test_assign_splits_deterministic_and_growth_stable(spark):
-    """Splits are a pure function of the id: retries/repartitioning and
-    corpus GROWTH never move a document between splits; fractions land
-    near the requested weights; thresholds are exact bucket cutoffs."""
-    from fuzzy_search_spark.pipeline.mixing import assign_splits
-
-    docs = spark.range(2000).selectExpr("id AS doc_id")
-    w = {"train": 0.8, "validation": 0.1, "test": 0.1}
-    a = {r.doc_id: r.split for r in assign_splits(docs, w).collect()}
-    b = {r.doc_id: r.split
-         for r in assign_splits(docs.repartition(13), w).collect()}
-    assert a == b
-    # growth: the first 500 docs keep their split when 1500 more arrive
-    small = {r.doc_id: r.split for r in assign_splits(
-        spark.range(500).selectExpr("id AS doc_id"), w).collect()}
-    assert all(a[k] == v for k, v in small.items())
-    from collections import Counter
-
-    frac = Counter(a.values())
-    assert 0.75 <= frac["train"] / 2000 <= 0.85
-    assert frac["validation"] > 0 and frac["test"] > 0
-
-    plan = assign_splits(docs, w)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_lm_trigram_hand_computed(spark):
-    """Trigram stupid backoff against hand math: seen-trigram,
-    bigram-backoff, unigram-backoff and OOV paths; recursive alpha decay;
-    empty docs survive zeroed."""
-    import math
-
-    from fuzzy_search_spark.pipeline.lm import (score_documents_trigram,
-                                                train_trigram_lm)
-
-    train = spark.createDataFrame(
-        [(0, "the cat sat"), (2, "the cat ran"), (4, "")],
-        "doc_id long, text string")
-    uni, bi, tri, tot = train_trigram_lm(train)
-    assert sorted((r.g, r.c123, r.c12) for r in tri.collect()) == [
-        ("<s> <s> the", 2, 3), ("<s> the cat", 2, 2),
-        ("the cat ran", 1, 2), ("the cat sat", 1, 2)]
-
-    score = spark.createDataFrame(
-        [(0, "the cat sat"), (1, "the dog sat"), (9, "")],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           score_documents_trigram(score, uni, bi, tri, tot).collect()}
-    a, D = 0.4, 6 + 4 + 1
-    # doc 0: all trigrams seen: 2/3, 2/2, 1/2
-    exp0 = (round(math.log10(2 / 3) * 1e6) + 0
-            + round(math.log10(0.5) * 1e6))
-    assert out[0].sum_logp_micro == exp0
-    # doc 1: (<s> <s> the) seen 2/3; (<s> the dog) OOV word -> a^2/D;
-    # (the dog sat): tri+bi unseen, sat seen c=1 -> a^2 * 2/D
-    exp1 = (round(math.log10(2 / 3) * 1e6)
-            + round(math.log10(a * a / D) * 1e6)
-            + round(math.log10(a * a * 2 / D) * 1e6))
-    assert out[1].sum_logp_micro == exp1
-    assert (out[9].n_scored, out[9].sum_logp_micro,
-            out[9].perplexity) == (0, 0, 1.0)
-
-
-def test_lm_trigram_bigram_backoff_path(spark):
-    """A seen bigram under an unseen trigram context takes alpha * c/c."""
-    import math
-
-    from fuzzy_search_spark.pipeline.lm import (score_documents_trigram,
-                                                train_trigram_lm)
-
-    train = spark.createDataFrame(
-        [(0, "a b c"), (2, "x b c")], "doc_id long, text string")
-    uni, bi, tri, tot = train_trigram_lm(train)
-    # scoring "q b c": (<s> <s> q) OOV; (<s> q b) tri+bi('q b') unseen,
-    # b seen; (q b c): trigram unseen, bigram 'b c' seen c=2 ctx c(b)=2
-    out = score_documents_trigram(
-        spark.createDataFrame([(1, "q b c")], "doc_id long, text string"),
-        uni, bi, tri, tot).collect()[0]
-    a, D = 0.4, 6 + 4 + 1    # T=6 tokens, V=4 ({a, b, c, x})
-    exp = (round(math.log10(a * a / D) * 1e6)              # q OOV
-           + round(math.log10(a * a * (2 + 1) / D) * 1e6)  # b unigram
-           + round(math.log10(a * 2 / 2) * 1e6))           # bigram 'b c'
-    assert out.sum_logp_micro == exp
-
-
 # ---------------------------------------------------------------------------
 # cross_doc_spans
 # ---------------------------------------------------------------------------
@@ -937,111 +595,6 @@ def test_strip_cross_doc_spans_no_python_stage(spark):
     plan = _plan(strip_cross_doc_spans(_docs(spark), k=3))
     assert "Python" not in plan
     assert "SortAggregate" not in plan
-
-
-def test_perplexity_tiers_crafted(spark):
-    """Per-language CCNet tiers: exact integer ranking keys, equal-count
-    thirds per language, deterministic tie-break on doc_id."""
-    from pyspark.sql import functions as F
-
-    from fuzzy_search_spark.pipeline.lm import perplexity_tiers
-
-    # synthetic scored rows: lang A has 6 docs (2/2/2 tiers), lang B has
-    # 4 (ceil boundaries: 2/1/1), one zero-scored doc, one exact tie.
-    scored = spark.createDataFrame(
-        [(i, n, s) for i, n, s in [
-            (0, 2, -200), (1, 2, -400), (2, 2, -600), (3, 2, -800),
-            (4, 2, -1000), (5, 0, 0),
-            (10, 2, -100), (11, 2, -300), (12, 2, -300), (13, 2, -900),
-        ]],
-        "doc_id long, n_scored long, sum_logp_micro long")
-    langs = spark.createDataFrame(
-        [(i, "aa" if i < 10 else "bb") for i in
-         [0, 1, 2, 3, 4, 5, 10, 11, 12, 13]],
-        "doc_id long, lang_guess string")
-    out = {r.doc_id: r for r in
-           perplexity_tiers(scored, langs).collect()}
-
-    # lang aa: avg micro = -100,-200,-300,-400,-500, and doc 5 -> 0 (best)
-    order_aa = [5, 0, 1, 2, 3, 4]
-    for rank, doc in enumerate(order_aa, start=1):
-        assert out[doc].lang_rank == rank, doc
-        assert out[doc].n_lang == 6
-    assert [out[d].tier for d in order_aa] == \
-        ["head", "head", "middle", "middle", "tail", "tail"]
-
-    # lang bb: -50, then the -150 tie broken by doc_id (11 before 12)
-    order_bb = [10, 11, 12, 13]
-    for rank, doc in enumerate(order_bb, start=1):
-        assert out[doc].lang_rank == rank, doc
-    # n=4, tiers at floor(3*(r-1)/4): ranks 1-2 head, 3 middle, 4 tail
-    assert [out[d].tier for d in order_bb] == \
-        ["head", "head", "middle", "tail"]
-
-    # repartitioning the input must not change a single row
-    again = {r.doc_id: r for r in
-             perplexity_tiers(scored.repartition(7, F.col("doc_id")),
-                              langs).collect()}
-    assert {k: tuple(v) for k, v in out.items()} == \
-        {k: tuple(v) for k, v in again.items()}
-
-
-def test_perplexity_tiers_by_cutoffs_agrees_with_rank_anchor(spark):
-    """The skew-safe cutoff variant: monotone in score within language,
-    near-equal tier sizes, and per-doc agreement with the exact rank
-    anchor everywhere except within one boundary position per cutoff."""
-    import random
-
-    from fuzzy_search_spark.pipeline.lm import (perplexity_tiers,
-                                                perplexity_tiers_by_cutoffs)
-
-    rng = random.Random(3)
-    rows, lang_rows = [], []
-    for lang, n in (("aa", 90), ("bb", 31)):
-        base = 0 if lang == "aa" else 10_000
-        for i in range(n):
-            doc = base + i
-            rows.append((doc, 2, -rng.randrange(1, 10**6) * 2))
-            lang_rows.append((doc, lang))
-    scored = spark.createDataFrame(
-        rows, "doc_id long, n_scored long, sum_logp_micro long")
-    langs = spark.createDataFrame(lang_rows, "doc_id long, lang_guess string")
-
-    exact = {r.doc_id: r for r in perplexity_tiers(scored, langs).collect()}
-    cut = {r.doc_id: r
-           for r in perplexity_tiers_by_cutoffs(scored, langs).collect()}
-    assert set(cut) == set(exact)
-
-    # monotone: a better score never lands in a worse tier (per lang)
-    by_lang = {}
-    for d, r in cut.items():
-        by_lang.setdefault(r.lang, []).append(r)
-    for lang, rs in by_lang.items():
-        rs.sort(key=lambda r: (-r.avg_logp_micro, r.doc_id))
-        assert all(a.tier_idx <= b.tier_idx for a, b in zip(rs, rs[1:])), lang
-        # near-equal sizes: each tier within 2 of n/3
-        n = len(rs)
-        for t in range(3):
-            size = sum(1 for r in rs if r.tier_idx == t)
-            assert abs(size - n / 3) <= 2, (lang, t, size)
-
-    # agreement with the exact anchor except at tier boundaries: a doc
-    # may shift by at most one tier, and only within one rank position
-    # of a boundary
-    for d in exact:
-        e, c = exact[d], cut[d]
-        if e.tier_idx != c.tier_idx:
-            assert abs(e.tier_idx - c.tier_idx) == 1, d
-            boundary_ranks = {e.n_lang // 3, 2 * e.n_lang // 3}
-            assert min(abs(e.lang_rank - 1 - b) for b in boundary_ranks) \
-                <= 1, (d, e.lang_rank)
-
-    # plan shape: no window function anywhere — one hash agg + a
-    # broadcast join is the whole point
-    plan = (perplexity_tiers_by_cutoffs(scored, langs)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_gopher_quality_rules_crafted(spark):

@@ -223,7 +223,7 @@ class GramScanner:
             self._rank = {g: i for i, g in enumerate(self._vocab)}
             self._sorted_codes = np.arange(len(self._vocab), dtype=np.int64)
 
-    def codes(self, keys) -> np.ndarray:
+    def _codes(self, keys) -> np.ndarray:
         """The int64 codes of vocabulary gram ``keys`` (ints or strings, as
         :func:`keyed_skipgrams` gives them), in the order given."""
         if self._rank is not None:

@@ -219,7 +219,7 @@ def compile_model(phrases: Sequence[Union[str, dict]],
     if cfg.include_variants:
         searched += variants.values()
     for cp in searched:
-        cp.sorted_keys_np = scanner.codes(sorted(cp.gram_set))
+        cp.sorted_keys_np = scanner._codes(sorted(cp.gram_set))
 
     return CompiledModel(
         config=cfg,

@@ -179,6 +179,15 @@ def test_phrase_pipeline_goldens(name):
     assert case_digest(name) == GOLDENS[name]
 
 
+def test_phrase_without_grams():
+    """At ngram_size 1 an empty phrase has no grams: it never matches, and
+    the other phrases match as before."""
+    model = compile_model(["", "PRAESIDE"], _grams(1, 0))
+    got = find_matches("den PRAESIDE en PRESIDE", model)
+    assert [(m.phrase, m.string, m.offset) for m in got] == \
+        [("PRAESIDE", "PRAESIDE", 4)]
+
+
 if __name__ == "__main__":
     # prints the GOLDENS table for the code as it stands
     for case in CASES:

@@ -394,8 +394,10 @@ def _accumulate(hits, model: CompiledModel, cfg, mlv: int,
     for kind, rank, cp in searchables:
         pk = cp.sorted_keys_np
         gram_set_size = len(cp.gram_set)
-        if not gram_set_size:
-            continue  # an empty phrase has no grams at ngram_size 1
+        if not cp.name or not gram_set_size:
+            # an empty phrase never matches: at ngram_size 1 it has no
+            # grams, above it its one gram "" codes as NUL padding does
+            continue
         # over-approximate distinct overlap on the doc's unique keys
         pos = np.searchsorted(uniq, pk)
         np.minimum(pos, uniq.size - 1, out=pos)

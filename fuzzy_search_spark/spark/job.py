@@ -61,7 +61,12 @@ and on Python >= 3.10 that re-reads the zip directory of every cached
 ``zipimporter`` (pyspark.zip's sub-packages, the spark-core jar, py4j):
 most of a task's fixed cost on a short task.  Dropping them once per task
 leaves a reused worker none to re-read.  A new worker-side function that
-skips the call brings that cost back for every task of its stage.
+skips the call brings that cost back for every task of its stage.  The
+workers of a ``get_spark`` session are forks of :mod:`spark.daemon`, which
+has already imported this module (with the matchers, ``extract``, pandas
+and pyarrow), dropped its own zip importers and frozen its heap; the
+per-task call stays, because the worker's ``invalidate_caches()`` runs
+after the fork, before every task.
 """
 
 from __future__ import annotations

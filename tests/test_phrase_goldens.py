@@ -188,6 +188,19 @@ def test_phrase_without_grams():
         [("PRAESIDE", "PRAESIDE", 4)]
 
 
+@pytest.mark.parametrize("ngram_size", [1, 2, 3])
+def test_empty_phrase_is_skipped(ngram_size):
+    """Above ngram_size 1 an empty phrase's whole-text gram "" codes to 0,
+    as the all-NUL gram does: on a NUL text it must still find nothing,
+    and the other phrases match as without it."""
+    cfg = {"char_match_threshold": 0.3, "levenshtein_threshold": 0.3,
+           "ngram_threshold": 0.2, "max_length_variance": 2,
+           "ngram_size": ngram_size, "skip_size": 0}
+    for text in ["\x00\x00", "\x00a\x00", "a"]:
+        assert find_matches(text, compile_model(["", "a"], cfg)) == \
+            find_matches(text, compile_model(["a"], cfg))
+
+
 if __name__ == "__main__":
     # prints the GOLDENS table for the code as it stands
     for case in CASES:

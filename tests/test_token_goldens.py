@@ -7,7 +7,8 @@ of its seed.  Each case freezes two digests: one over every match row of
 model's ``distractor_pairs`` and ``vocab_cache``.  The cases differ in
 config, so the goldens cover the default probe, a user vocabulary (terms
 that are not phrase tokens), per-phrase offset limits, padded grams and
-trigram keys.  A change to the probe, the compile or the chain loop must
+trigram keys, and wide grams (4 and 5 chars), whose keys do not fold
+into int64.  A change to the probe, the compile or the chain loop must
 leave every digest as it is."""
 
 import hashlib
@@ -26,6 +27,9 @@ CASES = {
     "vocabulary": (11, 16, {"skipgram_threshold": 0.3}, 400, False),
     "offsets_padded": (23, 16, {"pad_token": True}, 0, True),
     "trigram": (31, 12, {"ngram_size": 3, "skip_size": 1}, 0, False),
+    "wide4": (41, 12, {"ngram_size": 4, "skip_size": 1}, 200, False),
+    "wide5_padded": (43, 12, {"ngram_size": 5, "skip_size": 1,
+                              "pad_token": True}, 0, False),
 }
 
 #: name -> (rows digest, match rows, model digest)
@@ -46,6 +50,14 @@ GOLDENS = {
         "c2438545b0d9b57359f234d70b29c1b16eb40542a7af0e9ef2206fe1f28bdf79",
         835,
         "ab2a1626a97b6ca6e248e7c19c2f79063c3272fa991dc4608e4a11b7b2e40d84"),
+    "wide4": (
+        "497e033fe40563bd24d362dacd29546e74cee407ca4dd6791d1510ce2e1dca9f",
+        703,
+        "c925b29e063bd05794447d2ac691ad2629e98f20daaca8199d22a2f7fc78ff61"),
+    "wide5_padded": (
+        "6a8626360b4bd17f29d9cbb9bf2c6f0ff8464a885798a77f5d797be01e4f07fe",
+        735,
+        "55fd203f0b5464a52edefdc0578120823ad75343da3b8667d1a09a19be6a06dc"),
 }
 
 

@@ -32,13 +32,14 @@ from dataclasses import dataclass, field
 from enum import Enum
 from functools import lru_cache
 from itertools import compress
-from typing import Dict, List, Optional, Sequence, Set, Tuple, Union
+from typing import (Dict, List, NamedTuple, Optional, Sequence, Set, Tuple,
+                    Union)
 
 import numpy as np
 
 from fuzzy_search_spark.config import PUBLISHED_DEFAULT_CONFIG
 from fuzzy_search_spark.kernels import strings as S
-from fuzzy_search_spark.kernels.skipgrams import _CP_BITS, encode_gram
+from fuzzy_search_spark.kernels.skipgrams import _CP_BITS
 from fuzzy_search_spark.kernels.tokenize import wordpunct_spans
 from fuzzy_search_spark.matcher import Match
 
@@ -107,17 +108,6 @@ class TokenPhrase:
     max_start_offset: int = -1
     max_end_offset: int = -1
 
-    @property
-    def missing_template(self) -> List[str]:
-        """Per-phrase token-string list copied into every new partial —
-        computed once (partials are created thousands of times per doc
-        at large phrase counts)."""
-        tmpl = getattr(self, "_missing_template", None)
-        if tmpl is None:
-            tmpl = [t.n for t in self.tokens]
-            object.__setattr__(self, "_missing_template", tmpl)
-        return tmpl
-
 
 @dataclass
 class TokenModel:
@@ -156,14 +146,14 @@ class TokenModel:
     # gram index (built at compile, ships with the broadcast): sorted
     # int64 gram keys + CSR buckets of phrase-token ids, so all new tokens
     # of a document are probed in one searchsorted + NumPy gather (see
-    # _probe_chunk) instead of a Python loop over every candidate of every
-    # gram — the token-pipeline analog of the phrase matcher's GramScanner
+    # _ProbeIndex and _probe_chunk) — the token-pipeline analog of the
+    # phrase matcher's GramScanner
     probe_index: object = field(default=None, compare=False)
-    # chaining fan-out table (built at compile): ptoken -> tuple of
-    # (phrase_name, phrase, start_ok, len(phrase.name)) — the three dict
-    # lookups + tuple-key allocation the chain loop would otherwise pay
-    # per (token-match, phrase) visit, folded into one precomputed row
-    # (the visit count is millions per long document at large models)
+    # chaining fan-out table (built at compile): ptoken -> tuple of rows
+    # (see _build_chain_fanout) — the dict lookups + tuple-key allocation
+    # the chain loop would otherwise pay per (token-match, phrase) visit,
+    # folded into one precomputed row (the visit count is millions per
+    # long document at large models)
     chain_fanout: Optional[dict] = field(default=None, compare=False)
 
     def __getstate__(self) -> dict:
@@ -194,16 +184,6 @@ class TokenModel:
             "distractor_pairs": sorted(self.distractor_pairs),
         }, sort_keys=True).encode("utf-8"))
         return "token:" + digest.hexdigest()[:16]
-
-
-def _is_distractor(text_token: str, phrase_token: str,
-                   dist_threshold: int = 2) -> bool:
-    """Reference is_distractor (token_searcher.py:861-872)."""
-    dist = S.levenshtein_distance(text_token, phrase_token)
-    length_diff = abs(len(text_token) - len(phrase_token))
-    if dist - length_diff == 0 and len(text_token) <= 3:
-        return text_token not in phrase_token
-    return dist - length_diff > dist_threshold
 
 
 #: DP cells (pairs x columns) per chunk of _edit_distances
@@ -265,7 +245,8 @@ def _char_grid(strings: Sequence[str], lengths: np.ndarray,
 def _distractor_mask(text_tokens: Sequence[str],
                      phrase_tokens: Sequence[str],
                      dist_threshold: int = 2) -> np.ndarray:
-    """``_is_distractor`` over every pair at once."""
+    """The reference's is_distractor (token_searcher.py:861-872) over
+    every pair at once."""
     len_t = np.fromiter(map(len, text_tokens), dtype=np.int64,
                         count=len(text_tokens))
     len_p = np.fromiter(map(len, phrase_tokens), dtype=np.int64,
@@ -399,15 +380,7 @@ def compile_token_model(phrases: Sequence[Union[str, dict]],
     # distractor classification iterates ALL gram-sharing candidates —
     # including ones whose match type is NONE (the reference's
     # match_start_offsets carry no threshold filter)
-    if tm.probe_index is None:
-        probes = []
-        for term in terms:
-            num_skips, matched = _accumulate_python(term, tm)
-            tm.distractor_pairs.update(
-                (term, pt) for pt in matched if _is_distractor(term, pt))
-            probes.append(_type_python(term, num_skips, matched, tm))
-    else:
-        probes = _probe_batch(terms, tm, tm.distractor_pairs)
+    probes = _probe_batch(terms, tm, tm.distractor_pairs)
     # NB: the reference builds the probe token with char_index=0 and
     # char_end_index=len(term), so the within-offset check applies at
     # compile time too (token_searcher.py:466-495,563-577)
@@ -431,8 +404,8 @@ def _build_chain_fanout(tm: TokenModel) -> dict:
     """ptoken -> tuple of (phrase_id, phrase, start_ok, len(phrase.name),
     missing_after_seed, phrase_name, missing_after_set) rows.  phrase_id
     indexes a plain list of open buckets (array indexing instead of
-    per-visit dict hashing); missing_after_seed is the phrase's missing
-    template minus the seeding ptoken's first occurrence, shared across
+    per-visit dict hashing); missing_after_seed is the phrase's token
+    strings minus the seeding ptoken's first occurrence, shared across
     every fresh partial this row creates (see _PartialPhrase.fresh);
     missing_after_set is its frozenset twin for the dead-on-arrival
     window disjointness test (O(min) set op instead of list iteration,
@@ -445,7 +418,7 @@ def _build_chain_fanout(tm: TokenModel) -> dict:
         rows = []
         for pn in names:
             tp = tm.phrases[pn]
-            missing_after = list(tp.missing_template)
+            missing_after = [t.n for t in tp.tokens]
             missing_after.remove(tok_n)
             nl = len(tp.name)
             rows.append(
@@ -458,16 +431,6 @@ def _build_chain_fanout(tm: TokenModel) -> dict:
                  nl + tm.max_length_variance))
         fanout[tok_n] = tuple(rows)
     return fanout
-
-
-_FANOUT_ROW_WIDTH = 9
-
-
-def _fanout_is_current(fanout: dict) -> bool:
-    """Whether ``fanout`` has the row layout ``_build_chain_fanout``
-    builds today (every row is built the same way, so one row tells)."""
-    rows = next(iter(fanout.values()), None)
-    return not rows or len(rows[0]) == _FANOUT_ROW_WIDTH
 
 
 def _within_offsets(tm: TokenModel, ptoken: str, char_index: int,
@@ -505,41 +468,65 @@ _TEMPLATE_BASE = 0x100
 _TEMPLATE_CYCLE = 1 << 16
 
 
-class _ProbeIndex:
+class _ProbeIndex(NamedTuple):
     """CSR gram -> phrase-token-id index for the batched probe.
 
-    Bucket order per gram preserves ``gram_to_ptokens`` list order, and
-    candidate emission order is by first matched occurrence — both
-    identical to the Python accumulation loop, so the two probe paths
-    are interchangeable bit-for-bit (pinned by test)."""
+    A gram is a row of ``ngram_size`` columns, each char's codepoint + 1
+    and then 0 in the columns a short gram does not fill (the + 1 keeps a
+    NUL char apart from an unfilled column).  ``_gram_keys`` makes a row
+    an int64 key; ``keys`` are the index's grams' keys, sorted, and bucket
+    ``i`` (``bucket_pids[offsets[i]:offsets[i + 1]]``) lists the ids of
+    gram ``keys[i]``'s phrase tokens in ``gram_to_ptokens`` list order.
+    With candidates emitted by first matched occurrence, the probe equals
+    the Python loop per term in the tests' spec (``tests/token_spec.py``)
+    bit-for-bit."""
 
-    __slots__ = ("keys", "offsets", "bucket_pids", "ptokens",
-                 "num_skips_arr", "len_arr")
-
-    def __init__(self, keys, offsets, bucket_pids, ptokens, num_skips_arr,
-                 len_arr):
-        self.keys = keys
-        self.offsets = offsets
-        self.bucket_pids = bucket_pids
-        self.ptokens = ptokens
-        self.num_skips_arr = num_skips_arr
-        self.len_arr = len_arr
+    rows: Optional[np.ndarray]      # wide grams: the sorted rows keys rank
+    keys: np.ndarray
+    offsets: np.ndarray
+    bucket_pids: np.ndarray
+    ptokens: List[str]
+    num_skips_arr: np.ndarray
+    len_arr: np.ndarray
 
 
-def _build_probe_index(tm: TokenModel):
-    """Build the batched probe index (None when gram keys cannot fold
-    into int64: ngram_size > 3)."""
-    if tm.ngram_size > 3 or not tm.gram_to_ptokens:
-        return None
+def _void_rows(grams: np.ndarray) -> np.ndarray:
+    """Gram rows (``...`` x width) as one void scalar each."""
+    return np.ascontiguousarray(grams, dtype=np.int32).view(
+        np.dtype((np.void, 4 * grams.shape[-1])))[..., 0]
+
+
+def _gram_keys(grams: np.ndarray, rows) -> np.ndarray:
+    """The int64 keys of gram rows (``grams``: ... x ngram_size, see
+    ``_ProbeIndex``).  Up to 3 columns fold into ``_CP_BITS`` each.  Wider
+    rows do not fit in 63 bits, so their key is their rank among ``rows``,
+    the index's sorted gram rows as void scalars, and -1 where ``rows``
+    lacks them (as the phrase ``GramScanner`` codes wide grams)."""
+    width = grams.shape[-1]
+    if width <= 3:
+        shift = _CP_BITS * np.arange(width - 1, -1, -1, dtype=np.int64)
+        return (grams << shift).sum(axis=-1)
+    grams = _void_rows(grams)
+    rank = np.searchsorted(rows, grams)
+    np.minimum(rank, len(rows) - 1, out=rank)
+    return np.where(rows[rank] == grams, rank, -1)
+
+
+def _build_probe_index(tm: TokenModel) -> _ProbeIndex:
+    """Build the batched probe index (one for every config)."""
     ptokens = list(tm.token_in_phrase)
     pid_of = {pt: i for i, pt in enumerate(ptokens)}
-    items = sorted((encode_gram(g), g) for g in tm.gram_to_ptokens)
-    keys = np.fromiter((k for k, _ in items), dtype=np.int64,
-                       count=len(items))
-    offsets = np.zeros(len(items) + 1, dtype=np.int64)
+    grams = list(tm.gram_to_ptokens)
+    width = max(tm.ngram_size, 1)
+    grid = _char_grid(grams, np.fromiter(map(len, grams), dtype=np.int64,
+                                         count=len(grams)), width) + 1
+    rows = np.sort(_void_rows(grid)) if width > 3 else None
+    keys = _gram_keys(grid, rows)
+    order = np.argsort(keys)
+    offsets = np.zeros(len(grams) + 1, dtype=np.int64)
     buckets = []
-    for i, (_k, gram) in enumerate(items):
-        plist = tm.gram_to_ptokens[gram]
+    for i, g in enumerate(order.tolist()):
+        plist = tm.gram_to_ptokens[grams[g]]
         offsets[i + 1] = offsets[i] + len(plist)
         buckets.append(np.fromiter((pid_of[p] for p in plist),
                                    dtype=np.int32, count=len(plist)))
@@ -549,8 +536,8 @@ def _build_probe_index(tm: TokenModel):
                                 dtype=np.float64, count=len(ptokens))
     len_arr = np.fromiter((len(p) for p in ptokens), dtype=np.int64,
                           count=len(ptokens))
-    return _ProbeIndex(keys, offsets, bucket_pids, ptokens, num_skips_arr,
-                       len_arr)
+    return _ProbeIndex(rows, keys[order], offsets, bucket_pids, ptokens,
+                       num_skips_arr, len_arr)
 
 
 def _codepoints(strings: Sequence[str]) -> np.ndarray:
@@ -564,10 +551,10 @@ def _codepoints(strings: Sequence[str]) -> np.ndarray:
 def _skipgram_template(length: int, ngram_size: int, skip_size: int,
                        pad_token: bool):
     """The skipgrams of every token of ``length`` chars as index arrays:
-    ``pos`` (grams x ngram_size) picks each gram char from the token's
-    padded codepoint row (pads, token, pads, then one 0 column for the
-    missing chars of a short gram), ``shift`` folds them as
-    ``encode_gram`` does, and ``starts``/``ends`` are each gram's span.
+    ``pos`` (grams x ngram_size) picks each gram's row (see
+    ``_ProbeIndex``) from the token's padded row (pads, token, pads, then
+    one 0 column for the columns a short gram does not fill), and
+    ``starts``/``ends`` are each gram's span.
     Read off ``token_skipgrams`` itself, so order and spans are the
     spec's: over a template token whose chars encode their positions
     modulo ``_TEMPLATE_CYCLE``.  A gram's chars lie within a few
@@ -580,7 +567,6 @@ def _skipgram_template(length: int, ngram_size: int, skip_size: int,
     grams = token_skipgrams(token, ngram_size, skip_size, pad_token)
     pos = np.full((len(grams), max(ngram_size, 1)), length + 2 * pad,
                   dtype=np.int64)
-    shift = np.zeros(pos.shape, dtype=np.int64)
     half = _TEMPLATE_CYCLE // 2
     anchor = 0
     for g, (gram, _s, _l) in enumerate(grams):
@@ -594,21 +580,21 @@ def _skipgram_template(length: int, ngram_size: int, skip_size: int,
                 pos[g, k] = pad + at
                 if first is None:
                     first = at
-            shift[g, k] = _CP_BITS * (len(gram) - 1 - k)
         if first is not None:
             anchor = first
     starts = np.array([s for _g, s, _l in grams], dtype=np.int64)
     ends = np.array([s + ln for _g, s, ln in grams], dtype=np.int64)
-    for arr in (pos, shift, starts, ends):
+    for arr in (pos, starts, ends):
         arr.setflags(write=False)       # shared by every caller
-    return pos, shift, starts, ends
+    return pos, starts, ends
 
 
 def _batch_skipgrams(terms: Sequence[str], tm: TokenModel):
     """Every skipgram of every term: (keys, starts, ends, term id) per
     gram occurrence, plus each term's gram count.  A term's occurrences
     are contiguous and in ``token_skipgrams`` order; terms of one length
-    are keyed together, in one NumPy pass over a (terms x grams) grid."""
+    are keyed together, in one NumPy pass over a (terms x grams) grid.
+    Keys are ``_gram_keys`` of the probe index's gram rows."""
     pad = tm.ngram_size - 1 if tm.pad_token else 0
     by_len: Dict[int, List[int]] = {}
     for i, term in enumerate(terms):
@@ -618,14 +604,14 @@ def _batch_skipgrams(terms: Sequence[str], tm: TokenModel):
     for length, ids in by_len.items():
         template = (_skipgram_template if length <= _TEMPLATE_MAX_LEN
                     else _skipgram_template.__wrapped__)
-        pos, shift, starts, ends = template(
+        pos, starts, ends = template(
             length, tm.ngram_size, tm.skip_size, tm.pad_token)
-        rows = np.full((len(ids), length + 2 * pad + 1), ord("#"),
+        rows = np.full((len(ids), length + 2 * pad + 1), ord("#") + 1,
                        dtype=np.int64)
         rows[:, pad:pad + length] = _codepoints(
-            [terms[i] for i in ids]).reshape(len(ids), length)
+            [terms[i] for i in ids]).reshape(len(ids), length) + 1
         rows[:, -1] = 0
-        keys = (rows[:, pos] << shift).sum(axis=2)
+        keys = _gram_keys(rows[:, pos], tm.probe_index.rows)
         ids_arr = np.array(ids, dtype=np.int64)
         num_skips[ids_arr] = len(starts)
         parts.append((keys.ravel(), np.tile(starts, len(ids)),
@@ -657,14 +643,18 @@ def _probe_chunk(terms: Sequence[str], tm: TokenModel):
        gives each gram-sharing pair its distinct shared-gram count and
        its first and last hit.
     4. Type: only the pairs whose count clears ``skipgram_threshold``
-       get overlap positions and a match type (``_match_type``'s
-       arithmetic, vectorized).
+       get overlap positions and a match type (the arithmetic of the
+       reference's get_token_skip_match_type, token_searcher.py:1188-1257,
+       vectorized).
 
     Yields per slice the typed pairs that are not NONE as (term, ptoken
     id, match type code) ordered by term, then first matched occurrence,
     and every gram-sharing pair of the slice as (term, ptoken id),
-    unordered.  No term spans two slices."""
+    unordered.  No term spans two slices; an index without grams
+    yields nothing."""
     idx: _ProbeIndex = tm.probe_index
+    if not len(idx.keys):
+        return
     keys, starts, ends, term_of, num_skips = _batch_skipgrams(terms, tm)
     pos = np.searchsorted(idx.keys, keys)
     np.minimum(pos, len(idx.keys) - 1, out=pos)
@@ -719,11 +709,11 @@ def _probe_chunk(terms: Sequence[str], tm: TokenModel):
 
 def _probe_batch(terms: Sequence[str], tm: TokenModel,
                  distractors: Optional[Set[Tuple[str, str]]] = None):
-    """Offset-free probes of distinct ``terms`` (needs ``probe_index``):
-    per term its (ptoken, match_type) list in first-matched-occurrence
-    order, NONE-typed candidates dropped.  Given a ``distractors`` set,
+    """Offset-free probes of distinct ``terms``: per term its (ptoken,
+    match_type) list in first-matched-occurrence order, NONE-typed
+    candidates dropped.  Given a ``distractors`` set,
     also adds to it every gram-sharing (term, ptoken) pair that
-    ``_is_distractor`` holds for (compile's classification), one
+    ``_distractor_mask`` holds for (compile's classification), one
     ``_probe_chunk`` slice at a time.  Runs ``_probe_chunk`` over at most
     ``_PROBE_BATCH`` terms at a time."""
     ptokens = tm.probe_index.ptokens
@@ -742,38 +732,6 @@ def _probe_batch(terms: Sequence[str], tm: TokenModel,
     return probes
 
 
-def _accumulate_python(token_n: str, tm: TokenModel):
-    """The Python accumulation loop: (number of skipgrams of ``token_n``,
-    {ptoken: [distinct shared gram set, first (start, len), last (start,
-    len)]} in first-matched-occurrence order) over EVERY gram-sharing
-    ptoken.  The path where ``probe_index`` is None (ngram_size > 3), and
-    the spec the batched probe is tested against."""
-    skips = token_skipgrams(token_n, tm.ngram_size, tm.skip_size,
-                            tm.pad_token)
-    matched: Dict[str, list] = {}
-    for gram, start, length in skips:
-        for ptoken in tm.gram_to_ptokens.get(gram, ()):
-            ent = matched.get(ptoken)
-            if ent is None:
-                matched[ptoken] = [{gram}, (start, length), (start, length)]
-            else:
-                ent[0].add(gram)
-                ent[2] = (start, length)
-    return len(skips), matched
-
-
-def _type_python(token_n: str, num_skips: int, matched: Dict[str, list],
-                 tm: TokenModel) -> List[Tuple[str, MatchType]]:
-    """``_accumulate_python``'s candidates typed, NONE dropped."""
-    out = []
-    for ptoken, (gram_set, first, last) in matched.items():
-        mtype = _match_type(token_n, num_skips, len(gram_set), first, last,
-                            ptoken, tm)
-        if mtype is not MatchType.NONE:
-            out.append((ptoken, mtype))
-    return out
-
-
 def _raw_probes(strings: Sequence[str],
                 tm: TokenModel) -> Dict[str, List[Tuple[str, MatchType]]]:
     """Offset-free skipgram probes of the distinct ``strings`` (text tokens
@@ -784,11 +742,10 @@ def _raw_probes(strings: Sequence[str],
     caches cleanly — the Spark analog of the reference's vocabulary
     skipgram-match cache (token_searcher.py:563-577,1095-1122).
 
-    The strings the memo lacks are probed together: one ``_probe_batch``
-    (NumPy) or, where ``probe_index`` is None, the Python loop per string.
-    The memo keeps at most ``_PROBE_CACHE_MAX`` entries (cleared when
-    full); the returned dict holds every string's probe even when one
-    call brings more strings than that."""
+    The strings the memo lacks are probed together, in one
+    ``_probe_batch``.  The memo keeps at most ``_PROBE_CACHE_MAX``
+    entries (cleared when full); the returned dict holds every string's
+    probe even when one call brings more strings than that."""
     memo = tm.runtime_probe_cache
     found: Dict[str, Optional[list]] = dict.fromkeys(strings)
     new = []
@@ -800,41 +757,12 @@ def _raw_probes(strings: Sequence[str],
             found[s] = hit
     if not new:
         return found
-    if tm.probe_index is None:
-        probes = [_type_python(s, *_accumulate_python(s, tm), tm)
-                  for s in new]
-    else:
-        probes = _probe_batch(new, tm)
-    for s, probe in zip(new, probes):
+    for s, probe in zip(new, _probe_batch(new, tm)):
         found[s] = probe
         if len(memo) >= _PROBE_CACHE_MAX:
             memo.clear()
         memo[s] = probe
     return found
-
-
-def _match_type(token_n: str, num_skips: int, num_matched: int,
-                first: Tuple[int, int], last: Tuple[int, int],
-                ptoken: str, tm: TokenModel) -> MatchType:
-    """get_token_skip_match_type (token_searcher.py:1188-1257)."""
-    overlap_start = first[0]
-    overlap_end = last[0] + last[1]
-    text_overlap = num_matched / num_skips if num_skips else 0.0
-    phrase_overlap = num_matched / tm.token_num_skips[ptoken]
-    if text_overlap > phrase_overlap:
-        length_variance = len(token_n) - (overlap_end - overlap_start)
-    else:
-        length_variance = len(ptoken) - (overlap_end - overlap_start)
-    if text_overlap < tm.skipgram_threshold and \
-            phrase_overlap < tm.skipgram_threshold:
-        return MatchType.NONE
-    if length_variance > tm.max_token_length_variance:
-        return MatchType.NONE
-    if abs(len(token_n) - len(ptoken)) <= tm.max_token_length_variance:
-        return MatchType.FULL
-    if len(token_n) < len(ptoken):
-        return MatchType.PARTIAL_OF_PHRASE_TOKEN
-    return MatchType.PARTIAL_OF_TEXT_TOKEN
 
 
 class TokenMatch:
@@ -857,90 +785,24 @@ class TokenMatch:
 
 
 class _PartialPhrase:
-    """Reference PartialPhraseMatch (add_tokens/_update/copy semantics)."""
+    """Reference PartialPhraseMatch, as the chain loop builds it: only
+    through ``fresh`` and ``copy_extend``, which never change a partial
+    in place.  The reference's generic constructor, add_tokens, _update
+    and copy are their spec (``tests/token_spec.py``)."""
 
     __slots__ = ("phrase", "token_matches", "text_tokens", "phrase_tokens",
                  "missing", "text_start", "text_end", "text_length",
                  "match_string", "lev")
-
-    def __init__(self, phrase: TokenPhrase,
-                 token_matches: Optional[List[TokenMatch]] = None):
-        self.phrase = phrase
-        self.token_matches: List[TokenMatch] = []
-        self.text_tokens: tuple = ()
-        self.phrase_tokens: tuple = ()
-        self.missing = phrase.missing_template.copy()
-        self.text_start = -1
-        self.text_end = -1
-        self.text_length = 0
-        self.match_string: Optional[str] = None
-        self.lev: Optional[float] = None
-        if token_matches:
-            if len(token_matches) == 1:
-                # fast path for the overwhelmingly common fresh-partial
-                # shape: one match seeds the state without the generic
-                # re-scan (identical result to add_tokens)
-                m = token_matches[0]
-                if m.ptoken in self.missing:
-                    self.missing.remove(m.ptoken)
-                self.token_matches = [m]
-                self.text_tokens = m.text_tokens
-                self.phrase_tokens = (m.ptoken,)
-                self.text_start = m.text_start
-                self.text_end = m.text_end
-                self.text_length = self.text_end - self.text_start
-            else:
-                self.add_tokens(token_matches)
-
-    def add_tokens(self, token_matches: List[TokenMatch]) -> None:
-        for tmch in token_matches:
-            if tmch.ptoken in self.missing:
-                self.missing.remove(tmch.ptoken)
-        self.token_matches.extend(token_matches)
-        self._update()
-
-    def _update(self) -> None:
-        text_tokens: List[Tok] = []
-        prev: Optional[TokenMatch] = None
-        for m in self.token_matches:
-            if prev is None:
-                text_tokens.extend(m.text_tokens)
-            elif m.text_start == prev.text_start:
-                pass
-            elif m.text_start >= prev.text_end:
-                text_tokens.extend(m.text_tokens)
-            # partially overlapping matches: the reference leaves this case
-            # unimplemented (prints a TODO); tokens are dropped, as there
-            prev = m
-        self.text_tokens = tuple(text_tokens)
-        self.phrase_tokens = tuple(m.ptoken for m in self.token_matches)
-        first = self.text_tokens[0]
-        last = self.text_tokens[-1]
-        self.text_start = first.char_index
-        self.text_end = last.char_index + len(last.n)
-        self.text_length = self.text_end - self.text_start
-
-    def copy(self) -> "_PartialPhrase":
-        new = _PartialPhrase(self.phrase)
-        new.token_matches = list(self.token_matches)
-        new.missing = list(self.missing)
-        new.text_tokens = self.text_tokens
-        new.phrase_tokens = self.phrase_tokens
-        new.text_start = self.text_start
-        new.text_end = self.text_end
-        new.text_length = self.text_length
-        return new
 
     @classmethod
     def fresh(cls, phrase: TokenPhrase, tmch: TokenMatch,
               missing_after: List[str]) -> "_PartialPhrase":
         """Chain-loop fresh partial (millions per long document at
         large models): the missing list comes PRECOMPUTED from the
-        compile-time fan-out row (template minus the seeding ptoken's
-        first occurrence) and is SHARED between partials — safe because
+        compile-time fan-out row (the phrase's token strings minus the
+        seeding ptoken's first occurrence) and is SHARED between partials — safe because
         every mutation path in the chain flow builds a new list
-        (``copy_extend``); ``add_tokens`` (which mutates in place) is
-        never called on chain partials."""
+        (``copy_extend``)."""
         new = cls.__new__(cls)
         new.phrase = phrase
         new.token_matches = [tmch]
@@ -955,8 +817,8 @@ class _PartialPhrase:
         return new
 
     def copy_extend(self, tmch: TokenMatch) -> "_PartialPhrase":
-        """``copy()`` + ``add_tokens([tmch])`` fused into one O(1)
-        incremental step: appending a single match only needs the last
+        """The spec's ``copy()`` + ``add_tokens([tmch])`` fused into one
+        O(1) incremental step: appending a single match only needs the last
         existing match for ``_update``'s merge decision (equal-start ->
         skip, gap/adjacent -> extend, overlap -> drop), so the full
         token_matches rescan and the missing-template recopy are
@@ -1071,7 +933,8 @@ def _chain_partial_phrases(token_matches: List[TokenMatch],
       original order, then copies in visit order, then the fresh
       partial) without per-visit list copies or O(n) ``remove`` calls.
     * the per-visit ``min_token_offset`` / ``phrases`` lookups come
-      precomputed from the compile-time ``chain_fanout`` rows.
+      precomputed from the ``chain_fanout`` rows, which
+      ``compile_token_model`` (the only maker of a model) always builds.
     * a retired partial (evicted here, or flushed at end-of-text) is
       dropped instead of appended to ``candidates`` when it is BOTH
       incomplete and outside ``max_length_variance``: the downstream
@@ -1100,9 +963,6 @@ def _chain_partial_phrases(token_matches: List[TokenMatch],
     max_char_gap = tm.max_char_gap
     max_length_variance = tm.max_length_variance
     fanout = tm.chain_fanout
-    if fanout is None or not _fanout_is_current(fanout):
-        # models from older pickles: no fanout, or rows of another layout
-        fanout = tm.chain_fanout = _build_chain_fanout(tm)
     buckets: List[Optional[List[_PartialPhrase]]] = [None] * len(tm.phrases)
     candidates: Dict[str, List[_PartialPhrase]] = {}
     empty = ()

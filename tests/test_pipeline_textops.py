@@ -1,6 +1,5 @@
 """Unit tests for the round-3 web-corpus hygiene ops: Gopher-style
-repetition signals, benchmark decontamination, PII scan/redaction,
-URL canonicalization + URL-level dedup, and the paragraph-dedup
+repetition signals, benchmark decontamination, and the paragraph-dedup
 transformation (strip_duplicate_paragraphs).
 
 Each crafted test pins hand-computed expectations; the differential test
@@ -125,75 +124,6 @@ def test_decontaminate_crafted(spark):
 
 
 # ---------------------------------------------------------------------------
-# pii_scan
-# ---------------------------------------------------------------------------
-
-def test_pii_scan_crafted(spark):
-    from fuzzy_search_spark.pipeline.pii import pii_scan
-
-    rows = [
-        (1, "write to john.doe+spam@mail.example.org today"),
-        (2, "server at 192.168.0.1 rebooted"),
-        (3, "call +31 (0)20 555-0100 now"),
-        (4, "no pii here"),
-        (5, "a@b.co and 8.8.8.8 and +12345678901"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in pii_scan(docs).collect()}
-
-    assert (out[1].n_emails, out[1].n_ipv4, out[1].n_phones) == (1, 0, 0)
-    assert out[1].redacted_text == "write to <EMAIL> today"
-    assert (out[2].n_emails, out[2].n_ipv4, out[2].n_phones) == (0, 1, 0)
-    assert out[2].redacted_text == "server at <IP> rebooted"
-    assert (out[3].n_emails, out[3].n_ipv4, out[3].n_phones) == (0, 0, 1)
-    assert out[3].redacted_text == "call <PHONE> now"
-    assert out[4].n_pii == 0 and out[4].redacted_text == "no pii here"
-    assert out[5].n_pii == 3
-    assert out[5].redacted_text == "<EMAIL> and <IP> and <PHONE>"
-
-
-# ---------------------------------------------------------------------------
-# URL canonicalization + dedup
-# ---------------------------------------------------------------------------
-
-def test_canonical_url_cases(spark):
-    from pyspark.sql import functions as F
-
-    from fuzzy_search_spark.pipeline.urls import canonical_url
-
-    cases = [
-        ("HTTPS://WWW.Example.COM:443/Path/", "https://www.example.com/Path"),
-        ("http://example.com:80/a?b=1#frag", "http://example.com/a?b=1"),
-        ("http://example.com:8080/a/", "http://example.com:8080/a"),
-        ("https://example.com", "https://example.com"),
-        ("example.com/Foo#x", "example.com/foo"),     # schemeless fallback
-        ("http://example.com/a/?q=1", "http://example.com/a/?q=1"),
-        ("https://example.com/x//", "https://example.com/x"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
-    got = [r.c for r in
-           df.select(canonical_url(F.col("url")).alias("c")).collect()]
-    assert got == [want for _, want in cases]
-
-
-def test_url_dup_groups_merges_variants(spark):
-    from fuzzy_search_spark.pipeline.urls import url_dup_groups
-
-    rows = [
-        (1, "https://example.com/page"),
-        (2, "HTTPS://EXAMPLE.com:443/page/"),
-        (3, "https://example.com/page#top"),
-        (4, "https://example.com/other"),
-        (5, "https://example.com/page?v=2"),   # query differs: no merge
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = {r.canonical_url: r for r in url_dup_groups(df).collect()}
-    assert list(out) == ["https://example.com/page"]
-    grp = out["https://example.com/page"]
-    assert grp.keep_id == 1 and grp.n_pages == 3
-
-
-# ---------------------------------------------------------------------------
 # token counting: regex pre-tokenizer + distributed BPE encode
 # ---------------------------------------------------------------------------
 
@@ -230,40 +160,27 @@ def _docs(spark, n=40):
 
 
 def test_projection_ops_have_no_exchange(spark):
-    """pii_scan / regex_token_stats / canonicalize_urls are pure column
-    algebra: the executed plan must contain NO Exchange (they fuse into
-    the scan — the property that makes them free at 100 TB)."""
-    from fuzzy_search_spark.pipeline.pii import pii_scan
+    """regex_token_stats is pure column algebra: the executed plan must
+    contain NO Exchange (it fuses into the scan — the property that makes
+    it free at 100 TB)."""
     from fuzzy_search_spark.pipeline.textstats import regex_token_stats
-    from fuzzy_search_spark.pipeline.urls import canonicalize_urls
 
-    docs = _docs(spark)
-    urls = spark.createDataFrame(
-        [(1, "HTTP://Example.com:80/a/"), (2, "https://x.org/b#frag")],
-        "doc_id long, url string")
-    for df in (pii_scan(docs), regex_token_stats(docs),
-               canonicalize_urls(urls)):
-        plan = _plan(df)
-        assert "Exchange" not in plan, plan
-        assert "Python" not in plan, plan
+    plan = _plan(regex_token_stats(_docs(spark)))
+    assert "Exchange" not in plan, plan
+    assert "Python" not in plan, plan
 
 
 def test_dup_span_ops_hash_aggregate_only(spark):
-    """duplicate_spans / url_dup_groups / boilerplate_ratio keep every
-    aggregation in HashAggregate (numeric agg buffers; no sort fallback),
+    """duplicate_spans / boilerplate_ratio keep every aggregation in
+    HashAggregate (numeric agg buffers; no sort fallback),
     and boilerplate_ratio's two branches over the exploded-gram relation
     share one exchange at runtime (AQE reuse) instead of recomputing the
     explode."""
     from fuzzy_search_spark.pipeline.textstats import (boilerplate_ratio,
                                                        duplicate_spans)
-    from fuzzy_search_spark.pipeline.urls import url_dup_groups
 
     docs = _docs(spark)
-    urls = spark.createDataFrame(
-        [(i, f"http://site{i % 5}.com/page#{i}") for i in range(20)],
-        "doc_id long, url string")
-    for df in (duplicate_spans(docs, k=3), url_dup_groups(urls)):
-        assert "SortAggregate" not in _plan(df)
+    assert "SortAggregate" not in _plan(duplicate_spans(docs, k=3))
 
     br = boilerplate_ratio(docs, k=3)
     assert "SortAggregate" not in _plan(br)
@@ -387,33 +304,6 @@ def test_fix_mojibake_crafted(spark):
     assert "Exchange" not in plan and "Python" not in plan
 
 
-def test_host_page_cap_deterministic(spark):
-    """Per-host cap keeps exactly k pages per host, selection is a pure
-    function of the url set (stable across repartitioning), and every
-    input row survives with an auditable rank."""
-    from fuzzy_search_spark.pipeline.urls import host_page_cap
-
-    urls = spark.createDataFrame(
-        [(i, f"https://h{i % 3}.com/page/{i}") for i in range(30)],
-        "doc_id long, url string")
-    out = host_page_cap(urls, max_pages_per_host=4)
-    rows = out.collect()
-    assert len(rows) == 30
-    by_host = {}
-    for r in rows:
-        by_host.setdefault(r.host, []).append(r)
-    for host, members in by_host.items():
-        assert sum(m.kept for m in members) == 4
-        assert sorted(m.host_rank for m in members) == \
-            list(range(1, len(members) + 1))
-
-    # repartitioned input selects the SAME pages
-    again = host_page_cap(urls.repartition(7), max_pages_per_host=4)
-    kept1 = {r.doc_id for r in rows if r.kept}
-    kept2 = {r.doc_id for r in again.collect() if r.kept}
-    assert kept1 == kept2
-
-
 def test_normalize_nfc_crafted(spark):
     """NFC collapses canonical equivalents (decomposed accents, singleton
     Angstrom) so hash-keyed dedup sees one byte form; ASCII and None pass
@@ -460,26 +350,6 @@ def test_corpus_profile_hand_computed(spark):
     # must stay hash-aggregated with no window
     assert "Window" not in plan
     assert "HashAggregate(keys=[lang" in plan
-
-
-def test_crawl_delta_statuses(spark):
-    from fuzzy_search_spark.pipeline.urls import crawl_delta
-
-    old = spark.createDataFrame(
-        [("u1", "same"), ("u2", "will change"), ("u3", "goes away")],
-        "url string, text string")
-    new = spark.createDataFrame(
-        [("u1", "same"), ("u2", "changed now"), ("u4", "brand new")],
-        "url string, text string")
-    got = {r.url: r.status for r in crawl_delta(old, new).collect()}
-    assert got == {"u1": "unchanged", "u2": "changed",
-                   "u3": "removed", "u4": "added"}
-
-    # one full-outer join over (url, digest) projections
-    plan = crawl_delta(old, new)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "FullOuter" in plan
-    assert plan.count("md5") >= 2      # digests computed BELOW the join
 
 
 # ---------------------------------------------------------------------------

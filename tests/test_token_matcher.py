@@ -1,7 +1,8 @@
-"""Engine-only A/B checks of the token matcher: each pits a fast path
-against the slower spec path it replaced, or a model from an older layout
-against a freshly compiled one; plus the probe memo's bound.  None needs
-the reference checkout."""
+"""Engine-only A/B checks of the token matcher: each pits one of the
+package's paths against the spec in ``tests/token_spec.py`` (the Python
+loop per term, the generic partial-phrase forms and the scalar distractor
+test it replaced), plus the probe memo's bound, empty probe indexes and
+the model fingerprint.  None needs the reference checkout."""
 
 import pickle
 import random
@@ -12,6 +13,7 @@ from fuzzy_search_spark.token_matcher import (
     compile_token_model,
     find_token_matches,
 )
+from tests import token_spec
 
 
 def _rows(tm, text):
@@ -20,10 +22,10 @@ def _rows(tm, text):
             for m in find_token_matches(text, tm)]
 
 
-def test_vectorized_probe_equals_python_fallback():
-    """The NumPy probe (searchsorted index + vectorized _match_type) and
-    the Python accumulation loop must be interchangeable bit-for-bit:
-    same matches, same distractor pairs, same vocab cache."""
+def test_vectorized_probe_equals_python_fallback(monkeypatch):
+    """The NumPy probe (searchsorted index + vectorized match typing) and
+    the spec's Python accumulation loop must be interchangeable
+    bit-for-bit: same matches, same distractor pairs, same vocab cache."""
     import fuzzy_search_spark.token_matcher as T
 
     rng = random.Random(77)
@@ -41,24 +43,20 @@ def test_vectorized_probe_equals_python_fallback():
         texts.append(" ".join(toks))
 
     m_vec = T.compile_token_model(phrases, {}, vocabulary=vocab)
-    assert m_vec.probe_index is not None
-    orig = T._build_probe_index
-    T._build_probe_index = lambda tm: None
-    try:
-        m_py = T.compile_token_model(phrases, {}, vocabulary=vocab)
-    finally:
-        T._build_probe_index = orig
-    assert m_py.probe_index is None
+    rows = [_rows(m_vec, text) for text in texts]
+    # from here on compile and the runtime probe run the spec
+    monkeypatch.setattr(T, "_probe_batch", token_spec.probe_batch)
+    m_py = T.compile_token_model(phrases, {}, vocabulary=vocab)
     assert m_vec.distractor_pairs == m_py.distractor_pairs
     assert m_vec.vocab_cache == m_py.vocab_cache
-    for text in texts:
-        assert _rows(m_vec, text) == _rows(m_py, text), text
+    for text, expect in zip(texts, rows):
+        assert _rows(m_py, text) == expect, text
 
 
 def test_chain_fused_paths_equal_generic():
     """The chain loop's fused constructors (_PartialPhrase.fresh with a
     precomputed shared missing list; copy_extend's O(1) incremental
-    update) must be attribute-identical to the generic
+    update) must be attribute-identical to the spec's generic
     constructor + add_tokens forms they replaced, across random token
     layouts including equal-start, overlapping, adjacent and gapped
     follow-up matches and phrases with repeated tokens."""
@@ -83,8 +81,8 @@ def test_chain_fused_paths_equal_generic():
         seed = TokenMatch((mk_tok(seed_word, 10),), seed_word,
                           MatchType.FULL)
         # generic vs fused fresh
-        generic = _PartialPhrase(phrase, [seed])
-        missing_after = list(phrase.missing_template)
+        generic = token_spec.PartialPhrase(phrase, [seed])
+        missing_after = [t.n for t in phrase.tokens]
         if seed_word in missing_after:
             missing_after.remove(seed_word)
         fused = _PartialPhrase.fresh(phrase, seed, missing_after)
@@ -111,28 +109,6 @@ def test_chain_fused_paths_equal_generic():
         assert fused.missing == missing_after
 
 
-def test_stale_fanout_rows_are_rebuilt():
-    """A model pickled when chain-fanout rows were 6 wide (phrase_id,
-    phrase, start_ok, name_len, missing_after_seed, phrase_name) must
-    rebuild its fanout at match time, not fail on the narrow rows."""
-    phrases = ["alpha beta gamma", "beta beta delta", "gamma alpha",
-               "delta epsilon"]
-    texts = ["alpha beta gamma delta", "beta beta delta and gamma alfa",
-             "delta epsilom alpha betta gamma", ""]
-    fresh = compile_token_model(phrases, {})
-    expect = [_rows(fresh, t) for t in texts]
-    assert any(expect)
-
-    stale = compile_token_model(phrases, {})
-    stale.chain_fanout = {tok: tuple(row[:6] for row in rows)
-                          for tok, rows in stale.chain_fanout.items()}
-    stale = pickle.loads(pickle.dumps(stale))
-    assert [_rows(stale, t) for t in texts] == expect
-    assert all(len(row) == len(fresh_row)
-               for tok, rows in stale.chain_fanout.items()
-               for row, fresh_row in zip(rows, fresh.chain_fanout[tok]))
-
-
 def test_pickle_ships_no_runtime_probe_memo():
     """The runtime probe memo is per process: a model pickled after it
     matched text (the Spark driver's model before a broadcast) pickles to
@@ -142,7 +118,7 @@ def test_pickle_ships_no_runtime_probe_memo():
     texts = ["alpha betta gamma deltta", "gamma alfa and zeta beta"]
     tm = compile_token_model(phrases, {})
     for t in texts:
-        _rows(tm, t)       # warm every lazy per-phrase attribute
+        _rows(tm, t)       # fill the runtime probe memo
     size = len(pickle.dumps(tm))
     expect = [_rows(tm, t) for t in texts + ["zetta epsilom omega"]]
     assert tm.runtime_probe_cache
@@ -161,13 +137,20 @@ def test_pickle_ships_no_runtime_probe_memo():
     {"pad_token": True},
     {"ngram_size": 3, "pad_token": True, "skipgram_threshold": 0.5},
     {"skip_size": 0, "max_token_length_variance": 3},
+    {"ngram_size": 4, "skip_size": 1},
+    {"ngram_size": 4, "skip_size": 2, "pad_token": True},
+    {"ngram_size": 5, "skip_size": 0},
+    {"ngram_size": 5, "skip_size": 1, "pad_token": True,
+     "skipgram_threshold": 0.3},
 ])
 @pytest.mark.parametrize("small", [False, True])
 def test_batched_probe_equals_python_loop(config, small, monkeypatch):
     """The batched probe (templated skipgram keys, one gather, pair codes
-    counted by sort) equals the Python loop per token, across gram
-    shapes, padding and thresholds: the same raw probe of every token,
-    the same distractor pairs and vocab cache, the same rows.  Tokens
+    counted by sort) equals the spec's Python loop per token, across gram
+    shapes (folded keys up to 3 chars, ranked keys from 4), padding and
+    thresholds: the same raw probe of every token, the same distractor
+    pairs and vocab cache, the same rows.  Models without a gram any
+    token shares match nothing.  Tokens
     include astral and lone-surrogate chars, one-char tokens, tokens past
     the template length and a chunk without a hit; the batch is cut into
     chunks of 7.  ``small`` also cuts each chunk into slices of a few
@@ -208,23 +191,47 @@ def _check_batched_probe(T, config, monkeypatch):
              for _ in range(25)]
 
     m_vec = T.compile_token_model(phrases, config, vocabulary=vocab)
-    assert m_vec.probe_index is not None
-    monkeypatch.setattr(T, "_build_probe_index", lambda tm: None)
-    m_py = T.compile_token_model(phrases, config, vocabulary=vocab)
-    assert m_py.probe_index is None
-    assert m_vec.distractor_pairs == m_py.distractor_pairs
-    assert m_vec.vocab_cache == m_py.vocab_cache
-    assert T._raw_probes(tokens, m_vec) == T._raw_probes(tokens, m_py)
+    raw = T._raw_probes(tokens, m_vec)
     m_vec.runtime_probe_cache.clear()
     rows = [_rows(m_vec, text) for text in texts]
     assert any(rows)
+    # an index without grams, and one whose grams no token shares
+    for few in ([], [" "], ["!"]):
+        tm = T.compile_token_model(few, config, vocabulary=vocab)
+        assert [_rows(tm, text) for text in texts] == [[]] * len(texts)
+    # from here on compile and the runtime probe run the spec
+    monkeypatch.setattr(T, "_probe_batch", token_spec.probe_batch)
+    m_py = T.compile_token_model(phrases, config, vocabulary=vocab)
+    assert m_vec.distractor_pairs == m_py.distractor_pairs
+    assert m_vec.vocab_cache == m_py.vocab_cache
+    assert T._raw_probes(tokens, m_py) == raw
+    m_py.runtime_probe_cache.clear()
     assert rows == [_rows(m_py, text) for text in texts]
+
+
+@pytest.mark.parametrize("phrase, text, config", [
+    ("!!", "\x00!!", {"ngram_size": 3, "skip_size": 1}),
+    ("!!", "!!\x00", {"ngram_size": 3, "skip_size": 1}),
+    ("!", "\x00!", {}),
+    ("!", "!\x00", {}),
+    ("!!!", "!!!\x00", {"ngram_size": 4, "skip_size": 1}),
+    ("!!!", "\x00!!!", {"ngram_size": 4, "skip_size": 1}),
+])
+def test_short_gram_is_not_its_nul_twin(phrase, text, config, monkeypatch):
+    """A gram shorter than ``ngram_size`` keys apart from the same chars
+    with a NUL char before or after them: like the spec, which compares
+    gram strings, the probe finds no match."""
+    import fuzzy_search_spark.token_matcher as T
+
+    assert _rows(compile_token_model([phrase], config), text) == []
+    monkeypatch.setattr(T, "_probe_batch", token_spec.probe_batch)
+    assert _rows(compile_token_model([phrase], config), text) == []
 
 
 def test_edit_distances_equal_scalar(monkeypatch):
     """The batched edit distance and distractor test equal the scalar
-    ``levenshtein_distance`` and ``_is_distractor`` on every pair,
-    including empty strings, equal strings and chunks cut small."""
+    ``levenshtein_distance`` and the spec's ``_is_distractor`` on every
+    pair, including empty strings, equal strings and chunks cut small."""
     import fuzzy_search_spark.token_matcher as T
     from fuzzy_search_spark.kernels import strings as S
 
@@ -240,7 +247,7 @@ def test_edit_distances_equal_scalar(monkeypatch):
     got = T._edit_distances(a, b).tolist()
     assert got == [S.levenshtein_distance(x, y) for x, y in zip(a, b)]
     assert T._distractor_mask(a, b).tolist() == [
-        T._is_distractor(x, y) for x, y in zip(a, b)]
+        token_spec._is_distractor(x, y) for x, y in zip(a, b)]
 
 
 class _BoundedMemo(dict):
